@@ -55,7 +55,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #   c_custkey-ordered chunks (additive state, oracle unchanged) —
 #   the CHANGED slot (it was r9-stale anyway).
 # - item 7: stream_js_transform — the .js-file user transform under
-#   a real 2-chunk drain (node per Arrow batch per epoch).
+#   a real 2-chunk drain (a node round trip per Arrow batch per epoch).
 # - "missing" item 4 (otto underscore): the otto/transformer aliases
 #   now preload a minimal underscore-compatible shim (the reference
 #   auto-preloads underscore, function/ottojs/otto.go:48-212), graded

@@ -239,6 +239,145 @@ def test_js_transform_empty_filename():
         js_transform()
 
 
+# --- the resident node co-process (one per Python process and script) -----
+
+@needs_node
+def test_js_exit_fails_batch_then_respawns():
+    from transporter_spark.operators.transforms import run_js_batch
+
+    js = ("function transform(doc) {"
+          " if (doc.data.die) { process.exit(3); } return doc; }")
+    assert run_js_batch(js, [_DOC]) == [_DOC]
+    with pytest.raises(RuntimeError, match="node exit 3"):
+        run_js_batch(js, [{**_DOC, "data": {"die": True}}])
+    assert run_js_batch(js, [_DOC, _DOC]) == [_DOC, _DOC]  # a fresh node
+
+
+@needs_node
+def test_js_console_output_does_not_corrupt_results():
+    """console.* (top-level and per doc) stays off the protocol stream;
+    a leading hashbang, which node accepts, still loads."""
+    from transporter_spark.operators.transforms import run_js_batch
+
+    js = """#!/usr/bin/env node
+console.log('loading');
+function transform(doc) {
+  console.log('doc', doc.data.id);
+  console.info({seen: doc.ns});
+  console.dir(doc);
+  return doc;
+}
+"""
+    assert run_js_batch(js, [_DOC] * 3) == [_DOC] * 3
+
+
+@needs_node
+def test_js_large_batch_and_stderr_do_not_deadlock():
+    """Input and stderr both well past a 64 KiB pipe buffer: node must
+    read the whole batch while its stderr lands in a file nobody has to
+    drain (a blocking write to fd 2, unlike console's, would stall on a
+    full pipe)."""
+    import threading
+
+    from transporter_spark.operators.transforms import run_js_batch
+
+    js = ("function transform(doc) {"
+          " require('fs').writeSync(2, 'e'.repeat(1000) + '\\n');"
+          " doc.data.n = doc.data.pad.length; delete doc.data.pad; return doc; }")
+    docs = [{**_DOC, "data": {"i": i, "pad": "p" * 1000}} for i in range(300)]
+    got = []
+    t = threading.Thread(target=lambda: got.extend(run_js_batch(js, docs)), daemon=True)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "node batch deadlocked"
+    assert [d["data"] for d in got] == [{"i": i, "n": 1000} for i in range(300)]
+
+
+@needs_node
+def test_js_ts_micros_round_trip(spark):
+    """Null ts maps to null; epoch micros reach the script and come
+    back out exactly (vectorized conversion in both directions)."""
+    us = 1700000000123456
+    df = spark.createDataFrame(
+        [("insert", us, "t", 1), ("insert", None, "t", 2)],
+        "op string, us long, ns string, id long",
+    ).select("op", F.timestamp_micros("us").alias("ts"), "ns",
+             F.struct("id").alias("data"))
+    js = "function transform(doc) { doc.data.seen = doc.ts; return doc; }"
+    out = build_operator("js", source=js)(df).select(
+        F.get_json_object("data.json", "$.id").cast("long").alias("id"),
+        F.unix_micros("ts").alias("ts_us"),
+        F.get_json_object("data.json", "$.seen").cast("long").alias("seen"),
+    )
+    assert sorted(map(tuple, out.collect())) == [(1, us, us), (2, None, None)]
+
+
+@needs_node
+def test_js_script_state_lasts_for_the_process():
+    """Script globals live as long as the node process (the Python
+    worker's life), not one batch: a counter persists across calls."""
+    from transporter_spark.operators.transforms import run_js_batch
+
+    js = ("var calls = 0; // state-lifetime pin\n"
+          "function transform(doc) { calls += 1; doc.data.calls = calls; return doc; }")
+    first = run_js_batch(js, [_DOC])
+    second = run_js_batch(js, [_DOC])
+    assert first[0]["data"]["calls"] + 1 == second[0]["data"]["calls"]
+
+
+@needs_node
+def test_js_node_reaped_on_stdin_eof_and_script_file_removed(tmp_path, monkeypatch):
+    import os
+    import subprocess
+    import sys
+    import tempfile
+    import time
+
+    from transporter_spark.operators.transforms import _JS_REGISTRY, run_js_batch
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    js = "function transform(doc) { return doc; } // hygiene pin"
+    assert run_js_batch(js, [_DOC]) == [_DOC]
+    assert list(tmp_path.glob("*.js")) == []  # removed once node loaded it
+    nodes = sys.modules[_JS_REGISTRY].nodes
+    [key] = [k for k, c in nodes.items() if c.proc.args[1].startswith(str(tmp_path))]
+    child = nodes.pop(key)
+    child.proc.stdin.close()
+    assert child.proc.wait(timeout=10) == 0  # exits on EOF, reaped
+    child.proc.stdout.close()
+    child.err.close()
+
+    # a Python process that dies without closing anything: its node
+    # sees stdin EOF and exits too
+    code = (
+        "import os\n"
+        "from transporter_spark.operators.transforms import run_js_batch, _JS_REGISTRY\n"
+        f"run_js_batch({js!r}, [{{'op': 'insert', 'data': {{}}}}])\n"
+        "[c] = __import__('sys').modules[_JS_REGISTRY].nodes.values()\n"
+        "print(c.proc.pid, flush=True)\n"
+        "os._exit(0)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path),
+           "PYTHONPATH": os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")]))}
+    pid = int(subprocess.run([sys.executable, "-c", code], env=env, check=True,
+                             capture_output=True, text=True).stdout)
+
+    def alive():
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                return fh.read().rsplit(")", 1)[1].split()[0] not in "ZX"
+        except FileNotFoundError:
+            return False
+
+    deadline = time.monotonic() + 10
+    while alive() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert not alive()
+    assert list(tmp_path.glob("*.js")) == []
+
+
+@needs_node
 def test_otto_alias_preloads_underscore():
     """The otto/transformer aliases inject the underscore shim
     (function/ottojs/otto.go:48-212 parity); goja/js do NOT — a
@@ -289,6 +428,7 @@ function transform(doc) {
         run_js_batch(script, docs)
 
 
+@needs_node
 def test_otto_operator_routes_through_shim(spark):
     """build_operator('otto'/'transformer') prepends the shim;
     build_operator('js') does not (reference behavior either way)."""

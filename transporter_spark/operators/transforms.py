@@ -12,6 +12,7 @@ whole-stage-codegen projection/filter — no per-row interpreter.
 
 from __future__ import annotations
 
+import hashlib
 import json
 from typing import Callable, Dict, Iterable, List, Optional
 
@@ -307,36 +308,78 @@ def py_transform(
 # js — the REAL JavaScript contract, executed by node (goja.go:53-126)
 # ---------------------------------------------------------------------------
 
-# Appended after the user's source; reads the whole JSON-lines batch
-# from stdin, applies transform(doc) per line, writes JSON lines back.
+# Prepended to the user's source, on its first line so stack-trace line
+# numbers stay the script's own: console.* goes to stderr, keeping
+# stdout for protocol frames only.
+_JS_PRELUDE = "globalThis.console = new console.Console(process.stderr); "
+
+# Appended after the user's source: a long-lived batch loop. Each stdin
+# line is one batch, a JSON array whose items are either a doc object or
+# an ``[op, ts, ns, data]`` row (rebuilt as ``{op, ts, ns, data}``, in
+# that key order); the reply is one line, the JSON array of results.
+# stdin EOF (the Python worker went away) ends the process.
 _JS_HARNESS = """
 ;(function () {
-  const lines = require('fs').readFileSync(0, 'utf8').split('\\n');
-  const out = [];
-  for (const line of lines) {
-    if (!line) continue;
-    const res = transform(JSON.parse(line));
-    out.push(JSON.stringify(res === undefined ? null : res));
+  function runBatch(line) {
+    const out = JSON.parse(line).map(function (v) {
+      const doc = Array.isArray(v) ? {op: v[0], ts: v[1], ns: v[2], data: v[3]} : v;
+      const res = transform(doc);
+      return JSON.stringify(res === undefined ? null : res);
+    });
+    process.stdout.write('[' + out.join(',') + ']\\n');
   }
-  process.stdout.write(out.join('\\n'));
+  let parts = [];
+  process.stdin.setEncoding('utf8');
+  process.stdin.on('data', function (chunk) {
+    let start = 0, nl;
+    while ((nl = chunk.indexOf('\\n', start)) !== -1) {
+      parts.push(chunk.slice(start, nl));
+      runBatch(parts.join(''));
+      parts = [];
+      start = nl + 1;
+    }
+    if (start < chunk.length) parts.push(chunk.slice(start));
+  });
+  process.stdin.on('end', function () { process.exit(0); });
 })();
 """
 
 
-def _make_js_batch_runner(js_source: str, harness: str = _JS_HARNESS):
-    """Build the per-batch node runner as a CLOSURE so cloudpickle
-    serializes it by value (worker-closure invariant, see
-    multimodal.decode_features): a module-level function here would be
-    pickled as an import reference to this package, which breaks on
-    executors without the repo on PYTHONPATH."""
-    script = js_source + harness
+# The sys.modules entry holding this process's node co-processes:
+# ``nodes`` maps a script digest to its child, ``lock`` guards it.
+_JS_REGISTRY = "_transporter_js_nodes"
 
-    def run_batch(docs):
-        import json as _json
+
+def _make_js_batch_runner(js_source: str, harness: str = _JS_HARNESS):
+    """Build the batch runner as a CLOSURE so cloudpickle serializes it
+    by value (worker-closure invariant, see multimodal.decode_features):
+    a module-level function here would be pickled as an import reference
+    to this package, which breaks on executors without the repo on
+    PYTHONPATH.
+
+    The runner takes a batch of JSON texts, each a doc object or an
+    ``[op, ts, ns, data]`` row, and returns the parsed results. It keeps
+    one node process per Python process and script, in a registry under
+    ``sys.modules`` — the closure itself is unpickled afresh for every
+    task, so it cannot hold the process. A node that dies (an exception
+    or ``process.exit`` in the script) fails its batch with its stderr;
+    the next batch spawns a fresh one. The script's ``.js`` file is
+    removed once node has answered its first batch, and node's stderr
+    goes to an anonymous file, so a chatty script cannot fill a pipe
+    nobody reads."""
+    if js_source.startswith("#!"):
+        js_source = "//" + js_source  # a hashbang is legal only at offset 0
+    script = _JS_PRELUDE + js_source + harness
+    key = hashlib.sha256(script.encode()).hexdigest()
+    registry_name = _JS_REGISTRY
+
+    def spawn():
+        import fcntl as _fcntl
         import os as _os
         import shutil as _shutil
         import subprocess as _subprocess
         import tempfile as _tempfile
+        import types as _types
 
         node = _shutil.which("node")
         if node is None:  # pragma: no cover - node is present in CI image
@@ -346,30 +389,90 @@ def _make_js_batch_runner(js_source: str, harness: str = _JS_HARNESS):
             )
         with _tempfile.NamedTemporaryFile("w", suffix=".js", delete=False) as fh:
             fh.write(script)
-            path = fh.name
+        err = _tempfile.TemporaryFile()
+        # O_APPEND: node writes at the end even after a per-batch truncate
+        flags = _fcntl.fcntl(err, _fcntl.F_GETFL)
+        _fcntl.fcntl(err, _fcntl.F_SETFL, flags | _os.O_APPEND)
         try:
-            payload = "\n".join(_json.dumps(d, default=str) for d in docs)
-            proc = _subprocess.run(
-                [node, path], input=payload.encode(), capture_output=True
+            proc = _subprocess.Popen(
+                [node, fh.name],
+                stdin=_subprocess.PIPE, stdout=_subprocess.PIPE, stderr=err,
             )
-            if proc.returncode != 0:
-                raise RuntimeError(
-                    f"js transform failed: {proc.stderr.decode()[:2000]}"
-                )
-            return [_json.loads(l) for l in proc.stdout.decode().splitlines()]
-        finally:
-            _os.unlink(path)
+        except BaseException:
+            err.close()
+            _os.unlink(fh.name)
+            raise
+        return _types.SimpleNamespace(proc=proc, err=err, path=fh.name)
+
+    def close(child):
+        """Close node's stdin (it exits on EOF), reap it and drop its
+        stderr file; returns the exit code and the tail of its stderr."""
+        import subprocess as _subprocess
+
+        for pipe in (child.proc.stdin, child.proc.stdout):
+            try:
+                pipe.close()
+            except OSError:
+                pass
+        try:
+            code = child.proc.wait(timeout=10)
+        except _subprocess.TimeoutExpired:
+            child.proc.kill()
+            code = child.proc.wait()
+        child.err.seek(0)
+        stderr = child.err.read().decode(errors="replace")[-2000:]
+        child.err.close()
+        return code, stderr
+
+    def run_batch(items):
+        import atexit as _atexit
+        import json as _json
+        import os as _os
+        import sys as _sys
+        import threading as _threading
+        import types as _types
+
+        reg = _sys.modules.get(registry_name)
+        if reg is None:
+            reg = _types.ModuleType(registry_name)
+            reg.nodes, reg.lock = {}, _threading.Lock()
+            _sys.modules[registry_name] = reg
+            # reap the nodes at a clean exit; after os._exit (how Spark's
+            # Python workers end) they see stdin EOF and exit by themselves
+            _atexit.register(lambda: [close(c) for c in reg.nodes.values()])
+        with reg.lock:
+            child = reg.nodes.get(key)
+            if child is None:
+                child = reg.nodes[key] = spawn()
+            child.err.truncate(0)
+            try:
+                child.proc.stdin.write(("[" + ",".join(items) + "]\n").encode())
+                child.proc.stdin.flush()
+                reply = child.proc.stdout.readline()
+            except OSError:  # BrokenPipeError: node died before reading
+                reply = b""
+            if child.path is not None:  # node has loaded (or died on) it
+                _os.unlink(child.path)
+                child.path = None
+            if not reply.endswith(b"\n"):
+                del reg.nodes[key]
+                code, stderr = close(child)
+                raise RuntimeError(f"js transform failed (node exit {code}): {stderr}")
+        return _json.loads(reply)
 
     return run_batch
 
 
 def run_js_batch(js_source: str, docs: List[dict]) -> List[Optional[dict]]:
     """Execute ``function transform(doc)`` from ``js_source`` over a
-    batch of envelope docs in one node subprocess; returns the
-    transformed docs (None where the script returned null). Pure
-    helper so the reference's goja_test.go cases port as direct
-    fixtures."""
-    return _make_js_batch_runner(js_source)(docs)
+    batch of envelope docs on this process's resident node for the
+    script (spawned on first use, kept for the process's life, so script
+    globals persist across calls); returns the transformed docs (None
+    where the script returned null). Helper so the reference's
+    goja_test.go cases port as direct fixtures."""
+    return _make_js_batch_runner(js_source)(
+        [json.dumps(d, default=str) for d in docs]
+    )
 
 
 def js_transform(
@@ -388,9 +491,14 @@ def js_transform(
       (int64 in JS-safe range; the reference hands goja unix nanos,
       which exceed 2^53 and corrupt in any JSON/number path)
 
-    Spark shape: one node subprocess per Arrow batch via mapInPandas —
-    batch-amortized (~50ms spawn per ~10k rows), never a VM call per
-    row; executors run node locally, nothing crosses the network.
+    Spark shape: mapInPandas feeds each Arrow batch, as one protocol
+    line, to a node process that lives as long as its Python worker (one
+    per worker and script; no spawn per batch), never a VM call per row;
+    executors run node locally, nothing crosses the network. Each input
+    row is ``[op, ts_us, ns, <data_json>]`` with Spark's ``to_json`` text
+    spliced in unparsed, and ``ts`` converts with one vectorized pandas
+    operation per batch each way. Script globals live as long as the
+    worker, not one batch.
     """
     if source is None:
         if not filename:
@@ -414,35 +522,40 @@ def js_transform(
         import json
         import pandas as pd
 
+        # json.dumps(data, default=str) output, without building an
+        # encoder per call
+        encode = json.JSONEncoder(default=str).encode
         for pdf in batches:
-            docs = [
-                {
-                    "op": op,
-                    "ts": None if pd.isna(ts) else int(ts.value) // 1000,
-                    "ns": ns,
-                    "data": json.loads(data_json) if data_json else {},
-                }
+            ts_in = pdf["ts"]
+            us = (ts_in.to_numpy("datetime64[ns]").view("int64") // 1000).astype(str)
+            us[ts_in.isna().to_numpy()] = "null"
+            # op and ns take few distinct values: encode each once
+            quoted = {v: json.dumps(v) for v in {*pdf["op"], *pdf["ns"]}}
+            lines = [
+                f"[{quoted[op]},{ts},{quoted[ns]},{data_json or '{}'}]"
                 for op, ts, ns, data_json in zip(
-                    pdf["op"], pdf["ts"], pdf["ns"], pdf["data_json"]
+                    pdf["op"], us, pdf["ns"], pdf["data_json"]
                 )
             ]
-            rows = []
-            for got in batch_runner(docs):
+            rows, ts_out = [], []
+            for got in batch_runner(lines):
                 if got is None or str(got.get("op", "")).startswith("s"):
                     continue
                 data = got.get("data")
                 if not isinstance(data, dict):
                     raise RuntimeError("returned document was not a map")
                 ts = got.get("ts")
+                ts_out.append(None if ts is None else int(ts))
                 rows.append(
-                    (
-                        got.get("op"),
-                        None if ts is None else pd.to_datetime(int(ts), unit="us"),
-                        got.get("ns"),
-                        (json.dumps(data, default=str),),
-                    )
+                    (got.get("op"), got.get("ns"), (encode(data),))
                 )
-            yield pd.DataFrame(rows, columns=["op", "ts", "ns", "data"])
+            out = pd.DataFrame(rows, columns=["op", "ns", "data"])
+            out.insert(
+                1,
+                "ts",
+                pd.to_datetime(pd.array(ts_out, dtype="Int64"), unit="us").as_unit("ns"),
+            )
+            yield out
 
     def apply(df: DataFrame) -> DataFrame:
         staged = df.select(

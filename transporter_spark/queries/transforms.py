@@ -256,8 +256,9 @@ def q_js_transform(spark, sf_dir):
     """The reference's ACTUAL user-JS contract (function/gojajs/
     goja.go:53-126): a script defining `function transform(doc)` runs
     unchanged — here the JS twin of py_transform's query, executed by
-    one node subprocess per Arrow batch (operators/transforms.
-    js_transform). Same oracle as py_transform: a migrating transporter
+    each Python worker's resident node process, one protocol line per
+    Arrow batch (operators/transforms.js_transform). Same oracle as
+    py_transform: a migrating transporter
     user's .js file produces identical results to the python path."""
     js = """
 function transform(doc) {
@@ -291,9 +292,10 @@ def q_stream_js_transform(spark, sf_dir):
     `function transform(doc)` as js_transform, loaded from a real
     `.js` FILE (the reference's config names script files,
     function/gojajs/goja.go:53-76), applied to the streaming events
-    envelope and drained as TWO event_id-ordered chunks — one node
-    invocation per Arrow batch per epoch, so the subprocess runtime
-    genuinely executes inside foreachBatch micro-batches. The
+    envelope and drained as TWO event_id-ordered chunks — one batch
+    round trip to the worker's resident node per Arrow batch per epoch,
+    so the node runtime genuinely executes inside foreachBatch
+    micro-batches. The
     transform is row-local, so chunking commutes and the batch oracle
     grades the drain unchanged (the additive-class rule)."""
     import os as _os
