@@ -160,6 +160,79 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert os.listdir(str(tmp_path / "ckpt"))  # checkpoints actually wrote
 
 
+@pytest.fixture
+def cc_loop(monkeypatch):
+    """Force connected_components onto its distributed loop: every test
+    graph is far below the driver-BFS edge bound, so by default only
+    the driver path runs."""
+    from transporter_spark.operators import dedup
+
+    def no_driver(*a, **k):
+        raise AssertionError("driver path taken")
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGE_ROWS", -1)
+    monkeypatch.setattr(dedup, "_cc_driver_components", no_driver)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_connected_components_merges_chains,
+        test_connected_components_raises_on_nonconvergence,
+        test_connected_components_round_budget_exact_under_fusion,
+        test_connected_components_reliable_checkpoint,
+    ],
+    ids=lambda f: f.__name__.removeprefix("test_connected_components_"),
+)
+def test_connected_components_loop_path(request, cc_loop, case):
+    """Each connected-components test above, on the loop path (_cc_loop)
+    instead of the driver BFS: same labels, same max_iter contract."""
+    import inspect
+
+    case(**{n: request.getfixturevalue(n) for n in inspect.signature(case).parameters})
+
+
+def _cc_graph(spark):
+    # chains, a star, a cycle, a bridge joining two of them, isolated ids
+    edges = [(i, i + 1) for i in range(0, 7)] + [(20, j) for j in range(21, 26)]
+    edges += [(30, 31), (31, 32), (32, 30), (6, 25), (41, 40), (50, 52)]
+    ids = sorted({v for e in edges for v in e} | {60, 61})
+    return (
+        spark.createDataFrame(edges, "id_a long, id_b long"),
+        spark.createDataFrame([(i,) for i in ids], "id long"),
+    )
+
+
+def test_connected_components_driver_equals_loop(spark, monkeypatch):
+    from transporter_spark.operators import dedup
+
+    edges, vertices = _cc_graph(spark)
+    driver = sorted(map(tuple, dedup.connected_components(edges, vertices).collect()))
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGE_ROWS", -1)
+    loop = sorted(map(tuple, dedup.connected_components(edges, vertices).collect()))
+    assert driver == loop
+    comp = dict(driver)
+    assert comp[25] == comp[20] == comp[0] == 0 and comp[32] == 30
+    assert comp[41] == 40 and comp[52] == 50 and comp[61] == 61
+
+
+@pytest.mark.parametrize("path", ["driver", "loop"])
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_rejects_max_iter_below_one(spark, request, path, max_iter):
+    """Both paths reject a budget below one round, even on a graph with
+    no edges (which the loop would otherwise accept and the driver
+    path reject)."""
+    from transporter_spark.operators.dedup import connected_components
+
+    if path == "loop":
+        request.getfixturevalue("cc_loop")
+    vertices = spark.createDataFrame([(1,), (2,)], "id long")
+    for edges in ([], [(1, 2)]):
+        edges_df = spark.createDataFrame(edges, "id_a long, id_b long")
+        with pytest.raises(ValueError, match="max_iter must be >= 1"):
+            connected_components(edges_df, vertices, max_iter=max_iter)
+
+
 def test_minhash_lsh_reliable_checkpoint(spark, sf_dir, tmp_path):
     """The LSH path's lineage cuts (signatures, banded rows, candidate
     pairs) must honor reliable_checkpoint too — a localCheckpoint there

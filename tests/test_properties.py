@@ -8,6 +8,7 @@ Strategy notes: one shared SparkSession, small example counts
 from __future__ import annotations
 
 import math
+import shutil
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -762,3 +763,76 @@ def test_filter_tables_is_unanchored_search(tables, pattern):
     assert filter_tables(tables, pattern) == [
         t for t in tables if pat.search(t)
     ]
+
+
+_NO_SURROGATES = st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=8)
+_JS_SAFE_INTS = st.integers(min_value=-(2**53 - 1), max_value=2**53 - 1)
+
+
+@st.composite
+def _payloads(draw, doubles):
+    """(struct DDL, rows) for an envelope ``data`` column: unicode text,
+    JS-safe ints, bools, nulls anywhere below the top, nested structs
+    and arrays; doubles only when asked."""
+    leaves = {"string": _NO_SURROGATES, "bigint": _JS_SAFE_INTS, "boolean": st.booleans()}
+    if doubles:
+        leaves["double"] = st.floats(allow_nan=False, allow_infinity=False)
+
+    def field_type(depth):
+        kind = draw(st.sampled_from(sorted(leaves) + (["struct", "array"] if depth < 2 else [])))
+        if kind == "array":
+            ddl, values = field_type(depth + 1)
+            return f"array<{ddl}>", st.lists(values, max_size=3)
+        if kind == "struct":
+            return struct_type(depth + 1)
+        return kind, leaves[kind]
+
+    def struct_type(depth):
+        names = draw(st.lists(st.sampled_from("abcdef"), min_size=1, max_size=4, unique=True))
+        fields = [(n, *field_type(depth)) for n in names]
+        ddl = "struct<" + ",".join(f"{n}:{t}" for n, t, _ in fields) + ">"
+        return ddl, st.tuples(*[st.one_of(st.none(), v) for _, _, v in fields])
+
+    ddl, values = struct_type(0)
+    return ddl, draw(st.lists(values, min_size=1, max_size=4))
+
+
+_needs_node = pytest.mark.skipif(shutil.which("node") is None, reason="no node executable")
+
+
+@pytest.mark.parametrize("lang", ["py", pytest.param("js", marks=_needs_node)])
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(data=st.data())
+def test_identity_doc_udf_reencodes_like_json_dumps(sess, lang, data):
+    """An identity transform's ``data.json`` equals
+    ``json.dumps(json.loads(to_json(data)), default=str)`` byte for
+    byte, for a python fn and a node script alike. Doubles are drawn
+    for ``py`` only: JavaScript prints an integral double as an int
+    (1.0 -> 1) and drops the sign of -0.0, so a double survives a node
+    round trip by value, not by text."""
+    import json
+
+    import pyspark.sql.functions as F
+
+    from transporter_spark.registry import build_operator
+
+    ddl, rows = data.draw(_payloads(doubles=lang == "py"))
+    df = sess.createDataFrame(
+        [("insert", None, str(i), row) for i, row in enumerate(rows)],
+        f"op string, ts timestamp, ns string, data {ddl}",
+    )
+
+    def identity(doc):
+        return doc
+
+    cfg = {"fn": identity} if lang == "py" else {"source": "function transform(doc) { return doc; }"}
+    got = dict(build_operator(lang, **cfg)(df).select("ns", "data.json").collect())
+    want = {
+        ns: json.dumps(json.loads(j), default=str)
+        for ns, j in df.select("ns", F.to_json("data")).collect()
+    }
+    assert got == want

@@ -117,6 +117,18 @@ def test_py_transform_drop_and_mutate(env):
     assert ids == {100, 300}
 
 
+def test_pretty_logs_sample_not_stdout(env, capsys, caplog):
+    """pretty logs its sample at INFO (prettify.go:34-42 log.Infoln)
+    and never writes to stdout; the frame passes through unchanged."""
+    import logging
+
+    with caplog.at_level(logging.INFO, logger="transporter_spark.operators.transforms"):
+        out = build_operator("pretty", rows=2)(env)
+    assert out is env
+    assert capsys.readouterr().out == ""
+    assert len(caplog.records) == 2 and '"ns": "app.users"' in caplog.records[0].getMessage()
+
+
 def test_envelope_roundtrip(plain, env):
     back = from_envelope(env)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, plain.collect()))
@@ -180,18 +192,31 @@ def test_js_add_data():
     assert got["data"]["added"] == {"name": "batman", "villain": "joker"}
 
 
-@needs_node
-def test_js_skip_and_invalid_end_to_end(env):
-    """End-to-end over Spark mapInPandas: testdata/skip.js drops every
-    row (op='s' -> ops.Skip via first-byte match, ops.go:45-62);
-    invalid_data.js (data no longer a map) raises the
-    ErrInvalidMessageType analog."""
-    skip_op = build_operator("js", source="function transform(doc) { doc['op'] = 's'; return doc }")
-    assert skip_op(env).count() == 0
+@pytest.mark.parametrize("lang", ["py", pytest.param("js", marks=needs_node)])
+def test_js_skip_and_invalid_end_to_end(env, lang):
+    """End-to-end over Spark mapInArrow, for a python fn and a node
+    script alike: testdata/skip.js drops every row (op='s' ->
+    ops.Skip via first-byte match, ops.go:45-62); invalid_data.js
+    (data no longer a map) raises the ErrInvalidMessageType analog."""
 
-    bad = build_operator(
-        "js", source='function transform(doc) { doc["data"] = "not a map"; return doc }'
-    )
+    def skip(doc):
+        doc["op"] = "s"
+        return doc
+
+    def invalid(doc):
+        doc["data"] = "not a map"
+        return doc
+
+    if lang == "py":
+        skip_op, bad = build_operator("py", fn=skip), build_operator("py", fn=invalid)
+    else:
+        skip_op = build_operator(
+            "js", source="function transform(doc) { doc['op'] = 's'; return doc }"
+        )
+        bad = build_operator(
+            "js", source='function transform(doc) { doc["data"] = "not a map"; return doc }'
+        )
+    assert skip_op(env).count() == 0
     with pytest.raises(Exception, match="was not a map"):
         bad(env).count()
 
@@ -293,23 +318,33 @@ def test_js_large_batch_and_stderr_do_not_deadlock():
     assert [d["data"] for d in got] == [{"i": i, "n": 1000} for i in range(300)]
 
 
-@needs_node
-def test_js_ts_micros_round_trip(spark):
-    """Null ts maps to null; epoch micros reach the script and come
-    back out exactly (vectorized conversion in both directions)."""
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize("lang", ["py", pytest.param("js", marks=needs_node)])
+def test_js_ts_micros_round_trip(spark, lang, tz):
+    """Null ts maps to null; the transform sees exactly unix_micros(ts)
+    — UTC epoch micros in every session timezone — and ts comes back
+    out exactly."""
+    from transporter_spark.session import scoped_confs
+
+    def fn(doc):
+        doc["data"]["seen"] = doc["ts"]
+        return doc
+
     us = 1700000000123456
-    df = spark.createDataFrame(
-        [("insert", us, "t", 1), ("insert", None, "t", 2)],
-        "op string, us long, ns string, id long",
-    ).select("op", F.timestamp_micros("us").alias("ts"), "ns",
-             F.struct("id").alias("data"))
     js = "function transform(doc) { doc.data.seen = doc.ts; return doc; }"
-    out = build_operator("js", source=js)(df).select(
-        F.get_json_object("data.json", "$.id").cast("long").alias("id"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.get_json_object("data.json", "$.seen").cast("long").alias("seen"),
-    )
-    assert sorted(map(tuple, out.collect())) == [(1, us, us), (2, None, None)]
+    op = build_operator("py", fn=fn) if lang == "py" else build_operator("js", source=js)
+    with scoped_confs(spark, {"spark.sql.session.timeZone": tz}):
+        df = spark.createDataFrame(
+            [("insert", us, "t", 1), ("insert", None, "t", 2)],
+            "op string, us long, ns string, id long",
+        ).select("op", F.timestamp_micros("us").alias("ts"), "ns",
+                 F.struct("id").alias("data"))
+        out = op(df).select(
+            F.get_json_object("data.json", "$.id").cast("long").alias("id"),
+            F.unix_micros("ts").alias("ts_us"),
+            F.get_json_object("data.json", "$.seen").cast("long").alias("seen"),
+        )
+        assert sorted(map(tuple, out.collect())) == [(1, us, us), (2, None, None)]
 
 
 @needs_node

@@ -83,13 +83,6 @@ def ns_filter(pattern: str) -> Column:
     return F.col("ns").rlike(pattern)
 
 
-def with_json_payload(df: DataFrame) -> DataFrame:
-    """Schema-less flow: collapse the typed payload to one JSON string
-    (the commit-log serialization, reference pipeline/node.go:461-477).
-    """
-    return df.withColumn("data", F.struct(F.to_json("data").alias("json")))
-
-
 def parse_json_payload(df: DataFrame, schema) -> DataFrame:
     """Re-type a JSON payload once schema is known (``from_json``)."""
     return df.withColumn("data", F.from_json(F.col("data.json"), schema))

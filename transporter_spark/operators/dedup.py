@@ -1445,6 +1445,8 @@ def connected_components(
     local checkpoints die with an executor, restarting the whole job at
     cluster scale.
     """
+    if max_iter < 1:  # both paths need at least the certificate round
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Pre-partition both loop-invariant frames on their join keys ONCE:
     # localCheckpoint preserves the hash partitioning in the LogicalRDD,
     # so every round's edge-label join needs no exchange on either side

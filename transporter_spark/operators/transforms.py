@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 from typing import Callable, Dict, Iterable, List, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -23,6 +24,7 @@ from pyspark.sql import types as T
 from transporter_spark.registry import register
 
 _ENVELOPE = ("op", "ts", "ns", "data")
+_log = logging.getLogger(__name__)
 
 
 def _is_envelope(df: DataFrame) -> bool:
@@ -209,19 +211,103 @@ def remap(ns_map: Dict[str, str], ns_col: str = "ns") -> Callable[[DataFrame], D
 
 @register("pretty")
 def pretty(spaces: int = 2, rows: int = 5) -> Callable[[DataFrame], DataFrame]:
-    """Log a sample of the frame as indented JSON; passthrough.
+    """Log a sample of the frame as indented JSON at INFO; passthrough.
 
-    The reference logs every message (row-at-a-time luxury); at scale
-    that is an anti-pattern, so we log a bounded sample at plan-build
-    time and return the frame unchanged.
+    The reference logs every message (``log.Infoln``, row-at-a-time
+    luxury); at scale that is an anti-pattern, so we log a bounded
+    sample at plan-build time — only when INFO is enabled for this
+    module's logger — and return the frame unchanged.
     """
 
     def apply(df: DataFrame) -> DataFrame:
-        for line in df.limit(rows).toJSON().collect():
-            print(json.dumps(json.loads(line), indent=spaces, default=str))
+        if _log.isEnabledFor(logging.INFO):
+            for line in df.limit(rows).toJSON().collect():
+                _log.info(json.dumps(json.loads(line), indent=spaces, default=str))
         return df
 
     return apply
+
+
+# ---------------------------------------------------------------------------
+# the per-document UDF codec shared by py and js (goja.go:53-155)
+# ---------------------------------------------------------------------------
+
+_DOC_SCHEMA = T.StructType(
+    [
+        T.StructField("op", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("ns", T.StringType()),
+        T.StructField("data", T.StructType([T.StructField("json", T.StringType())])),
+    ]
+)
+
+
+def _doc_udf(call) -> Callable[[DataFrame], DataFrame]:
+    """The one batch path of the ``py``/``js``/``otto`` transforms: stage
+    ``op, ts, ns, to_json(data)``, hop through ``mapInArrow`` and call
+    ``call(ops, ts_us, nss, data_jsons)`` once per Arrow batch for one
+    result (dict or None) per doc. ``ts_us`` is UTC epoch micros in any
+    session timezone (Arrow ``timestamp[us]`` read as int64) or None.
+
+    The result rule is goja's (goja.go:128-155): None or an ``op``
+    starting with ``s`` drops the doc (ops.go:45-62 matches the first
+    byte); an omitted ``op``/``ts``/``ns`` keeps the input's; ``data``
+    must be a map (ErrInvalidMessageType) and is re-encoded exactly as
+    ``json.dumps(data, default=str)``. ``run`` references no module-level
+    name of this package, so cloudpickle ships it by value."""
+
+    def run(batches):
+        import json
+        import pyarrow as pa
+
+        # json.dumps(data, default=str) byte for byte, one encoder per task
+        encode = json.JSONEncoder(default=str).encode
+        for batch in batches:
+            ops = batch.column("op").to_pylist()
+            ts_us = batch.column("ts").cast(pa.int64()).to_pylist()
+            nss = batch.column("ns").to_pylist()
+            results = call(ops, ts_us, nss, batch.column("data_json").to_pylist())
+            op_out, ts_out, ns_out, data_out = [], [], [], []
+            for op, ts, ns, got in zip(ops, ts_us, nss, results):
+                if got is None:
+                    continue
+                op = got.get("op", op)
+                if str(op).startswith("s"):
+                    continue
+                data = got.get("data")
+                if not isinstance(data, dict):
+                    raise RuntimeError("returned document was not a map")
+                ts = got.get("ts", ts)
+                op_out.append(op)
+                ts_out.append(None if ts is None else int(ts))
+                ns_out.append(got.get("ns", ns))
+                data_out.append(encode(data))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(op_out, pa.string()),
+                    pa.array(ts_out, pa.int64()).cast(pa.timestamp("us", tz="UTC")),
+                    pa.array(ns_out, pa.string()),
+                    pa.StructArray.from_arrays([pa.array(data_out, pa.string())], ["json"]),
+                ],
+                names=["op", "ts", "ns", "data"],
+            )
+
+    def apply(df: DataFrame) -> DataFrame:
+        staged = df.select("op", "ts", "ns", F.to_json("data").alias("data_json"))
+        return staged.mapInArrow(run, schema=_DOC_SCHEMA)
+
+    return apply
+
+
+def _script_source(filename: Optional[str], source: Optional[str]) -> str:
+    """``source``, else the file's text, read at operator build as
+    goja.go:62-84 reads it at config time."""
+    if source is None:
+        if not filename:
+            raise ValueError("no filename specified")  # ErrEmptyFilename
+        with open(filename) as fh:
+            source = fh.read()
+    return source
 
 
 # ---------------------------------------------------------------------------
@@ -237,18 +323,22 @@ def py_transform(
     """Arbitrary per-document transform, the goja/otto UDF contract:
 
     ``fn(doc) -> doc | None`` where ``doc = {"op", "ts", "ns", "data"}``
-    with ``data`` a plain dict. Returning None (or op == "skip") drops
-    the document (goja.go:128-155); the function may mutate data and
-    rewrite ns/op.
+    with ``data`` a plain dict and ``ts`` UTC epoch micros (int, or
+    None). The rules are the JavaScript ones (``_doc_udf``): returning
+    None, or an ``op`` starting with ``s``, drops the document
+    (goja.go:128-155); the function may mutate data and rewrite
+    ns/op/ts, and a key it leaves out keeps the input's value; a
+    ``data`` that is not a dict raises.
 
     Given ``filename``/``source`` instead of ``fn``, the transform is
     the reference's actual JavaScript contract — a file defining
     ``function transform(doc)`` (goja.go:62-84 reads the file verbatim
     into the VM) — executed by ``js_transform`` below. So an existing
-    transporter ``.js`` transformer runs unchanged.
+    transporter ``.js`` transformer runs unchanged, and its body ports
+    to ``fn`` line for line.
 
     Spark-first translation: the envelope payload is JSON-serialized,
-    the function runs over Arrow record batches via ``mapInPandas``
+    the function runs over Arrow record batches via ``mapInArrow``
     (never row-at-a-time over the wire), and emits 0..1 rows per input —
     the flatMap shape "return null to drop" needs. The payload stays a
     JSON string on output because the UDF may change its shape; callers
@@ -259,49 +349,15 @@ def py_transform(
             raise ValueError("need fn=, filename= or source=")  # goja.go:74-76
         return js_transform(filename=filename, source=source)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("op", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("ns", T.StringType()),
-            T.StructField("data", T.StructType([T.StructField("json", T.StringType())])),
+    def call(ops, ts_us, nss, data_jsons):
+        import json
+
+        return [
+            fn({"op": op, "ts": ts, "ns": ns, "data": json.loads(d) if d else {}})
+            for op, ts, ns, d in zip(ops, ts_us, nss, data_jsons)
         ]
-    )
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for op, ts, ns, data_json in zip(
-                pdf["op"], pdf["ts"], pdf["ns"], pdf["data_json"]
-            ):
-                doc = {
-                    "op": op,
-                    "ts": ts,
-                    "ns": ns,
-                    "data": json.loads(data_json) if data_json else {},
-                }
-                got = fn(doc)
-                if got is None or got.get("op") == "skip":
-                    continue
-                rows.append(
-                    (
-                        got.get("op", op),
-                        got.get("ts", ts),
-                        got.get("ns", ns),
-                        (json.dumps(got.get("data", {}), default=str),),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["op", "ts", "ns", "data"])
-
-    def apply(df: DataFrame) -> DataFrame:
-        staged = df.select(
-            "op", "ts", "ns", F.to_json("data").alias("data_json")
-        )
-        return staged.mapInPandas(run, schema=out_schema)
-
-    return apply
+    return _doc_udf(call)
 
 
 # ---------------------------------------------------------------------------
@@ -350,7 +406,7 @@ _JS_HARNESS = """
 _JS_REGISTRY = "_transporter_js_nodes"
 
 
-def _make_js_batch_runner(js_source: str, harness: str = _JS_HARNESS):
+def _make_js_batch_runner(js_source: str):
     """Build the batch runner as a CLOSURE so cloudpickle serializes it
     by value (worker-closure invariant, see multimodal.decode_features):
     a module-level function here would be pickled as an import reference
@@ -369,7 +425,7 @@ def _make_js_batch_runner(js_source: str, harness: str = _JS_HARNESS):
     nobody reads."""
     if js_source.startswith("#!"):
         js_source = "//" + js_source  # a hashbang is legal only at offset 0
-    script = _JS_PRELUDE + js_source + harness
+    script = _JS_PRELUDE + js_source + _JS_HARNESS
     key = hashlib.sha256(script.encode()).hexdigest()
     registry_name = _JS_REGISTRY
 
@@ -480,90 +536,40 @@ def js_transform(
 ) -> Callable[[DataFrame], DataFrame]:
     """The reference's user-JS transformer, for real: a script defining
     ``function transform(doc)`` with ``doc = {op, ts, ns, data}``
-    (goja.go:86-126). Contract parity:
+    (goja.go:86-126). Contract parity (the rules live in ``_doc_udf``
+    and are the same for a python ``fn``):
 
     - return the (possibly mutated) doc; ``data`` must stay an object
       or the pipeline errors (ErrInvalidMessageType, goja.go:142-151)
     - setting ``op`` to anything starting with 's' skips the message
       (ops.OpTypeFromString matches on the first byte, ops.go:45-62);
       returning null also drops it
-    - ``ns``/``op`` rewrites propagate; ``ts`` is epoch MICROS here
-      (int64 in JS-safe range; the reference hands goja unix nanos,
-      which exceed 2^53 and corrupt in any JSON/number path)
+    - ``ns``/``op`` rewrites propagate; ``ts`` is UTC epoch MICROS in
+      every session timezone (int64 in JS-safe range; the reference
+      hands goja unix nanos, which exceed 2^53 and corrupt in any
+      JSON/number path)
 
-    Spark shape: mapInPandas feeds each Arrow batch, as one protocol
+    Spark shape: ``mapInArrow`` feeds each Arrow batch, as one protocol
     line, to a node process that lives as long as its Python worker (one
     per worker and script; no spawn per batch), never a VM call per row;
     executors run node locally, nothing crosses the network. Each input
     row is ``[op, ts_us, ns, <data_json>]`` with Spark's ``to_json`` text
-    spliced in unparsed, and ``ts`` converts with one vectorized pandas
-    operation per batch each way. Script globals live as long as the
-    worker, not one batch.
+    spliced in unparsed. Script globals live as long as the worker, not
+    one batch.
     """
-    if source is None:
-        if not filename:
-            raise ValueError("no filename specified")  # ErrEmptyFilename
-        with open(filename) as fh:
-            source = fh.read()
-    js_source = source
+    batch_runner = _make_js_batch_runner(_script_source(filename, source))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("op", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("ns", T.StringType()),
-            T.StructField("data", T.StructType([T.StructField("json", T.StringType())])),
-        ]
-    )
-
-    batch_runner = _make_js_batch_runner(js_source)
-
-    def run(batches):
+    def call(ops, ts_us, nss, data_jsons):
         import json
-        import pandas as pd
 
-        # json.dumps(data, default=str) output, without building an
-        # encoder per call
-        encode = json.JSONEncoder(default=str).encode
-        for pdf in batches:
-            ts_in = pdf["ts"]
-            us = (ts_in.to_numpy("datetime64[ns]").view("int64") // 1000).astype(str)
-            us[ts_in.isna().to_numpy()] = "null"
-            # op and ns take few distinct values: encode each once
-            quoted = {v: json.dumps(v) for v in {*pdf["op"], *pdf["ns"]}}
-            lines = [
-                f"[{quoted[op]},{ts},{quoted[ns]},{data_json or '{}'}]"
-                for op, ts, ns, data_json in zip(
-                    pdf["op"], us, pdf["ns"], pdf["data_json"]
-                )
-            ]
-            rows, ts_out = [], []
-            for got in batch_runner(lines):
-                if got is None or str(got.get("op", "")).startswith("s"):
-                    continue
-                data = got.get("data")
-                if not isinstance(data, dict):
-                    raise RuntimeError("returned document was not a map")
-                ts = got.get("ts")
-                ts_out.append(None if ts is None else int(ts))
-                rows.append(
-                    (got.get("op"), got.get("ns"), (encode(data),))
-                )
-            out = pd.DataFrame(rows, columns=["op", "ns", "data"])
-            out.insert(
-                1,
-                "ts",
-                pd.to_datetime(pd.array(ts_out, dtype="Int64"), unit="us").as_unit("ns"),
-            )
-            yield out
+        # op and ns take few distinct values: encode each once
+        quoted = {v: json.dumps(v) for v in {*ops, *nss}}
+        return batch_runner([
+            f"[{quoted[op]},{'null' if ts is None else ts},{quoted[ns]},{d or '{}'}]"
+            for op, ts, ns, d in zip(ops, ts_us, nss, data_jsons)
+        ])
 
-    def apply(df: DataFrame) -> DataFrame:
-        staged = df.select(
-            "op", "ts", "ns", F.to_json("data").alias("data_json")
-        )
-        return staged.mapInPandas(run, schema=out_schema)
-
-    return apply
+    return _doc_udf(call)
 
 
 # ---------------------------------------------------------------------------
@@ -705,10 +711,4 @@ def otto_transform(
     now it is, for the otto aliases)."""
     if fn is not None:
         return py_transform(fn=fn)
-    if source is None:
-        if not filename:
-            raise ValueError("no filename specified")  # ErrEmptyFilename
-        with open(filename) as fh:
-            source = fh.read()
-        filename = None
-    return js_transform(source=_UNDERSCORE_SHIM + source)
+    return js_transform(source=_UNDERSCORE_SHIM + _script_source(filename, source))

@@ -219,8 +219,9 @@ def q_ns_filter(spark, sf_dir):
 )
 def q_py_transform(spark, sf_dir):
     """The goja/otto JS-UDF analog (function/gojajs/goja.go:53-126):
-    arbitrary per-doc Python over Arrow batches via mapInPandas; returns
-    None to drop, may mutate data and rewrite ns (the full contract).
+    arbitrary per-doc Python over Arrow batches via the mapInArrow codec
+    shared with js; returns None to drop, may mutate data and rewrite ns
+    (the full contract, rule for rule the JS one).
     The slow path by design — everything else in this file stays JVM-side.
     """
 

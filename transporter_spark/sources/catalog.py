@@ -17,7 +17,6 @@ import os
 import re
 from typing import List, Sequence
 
-from pyspark.sql import SparkSession
 
 _SYSTEM_PREFIXES = ("system.",)  # mongo reader skips system.* (:95-113)
 
@@ -42,6 +41,3 @@ def list_dir_namespaces(sf_dir: str) -> List[str]:
             out.append(base)
     return out
 
-
-def list_catalog_namespaces(spark: SparkSession, database: str = "default") -> List[str]:
-    return [t.name for t in spark.catalog.listTables(database)]

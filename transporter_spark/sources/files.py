@@ -100,19 +100,6 @@ def load_tables(
     return out
 
 
-def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-lines source (the reference's file adaptor format)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (reference adaptor/file/writer.go:21-35)."""
-    df.write.mode(mode).json(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

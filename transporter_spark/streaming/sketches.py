@@ -384,12 +384,6 @@ def read_bloom_sketch(spark: SparkSession, state_dir: str):
     )
 
 
-def compact_bloom_state(spark: SparkSession, state_dir: str) -> bool:
-    """Fold the word-segment log into one segment. False when already
-    compact."""
-    return SegmentStore(state_dir).compact_keyed_commit(spark, _BLOOM_STORE)
-
-
 def drain_documents_bloom(
     spark: SparkSession,
     sf_dir: str,
