@@ -18,9 +18,28 @@ TABLES = (
 ).split()
 
 
+def _test_driver_memory() -> dict:
+    """The test session's driver heap: half of the host's MemTotal,
+    capped at 16g, unless SPARK_GRAFT_DRIVER_MEM is set (then the
+    engine default applies it). The engine's own 16g default grows
+    past the RAM of a 16 GB host over the full suite."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return {}
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(
+                int(line.split()[1]) for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return {}
+    mb = min(kb // 2 // 1024, 16 * 1024)
+    return {"spark.driver.memory": f"{mb}m"}
+
+
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("transporter-spark-tests")
+    spark = get_spark("transporter-spark-tests", **_test_driver_memory())
     yield spark
     spark.stop()
 

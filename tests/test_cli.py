@@ -162,6 +162,26 @@ def test_cli_run_end_to_end(tmp_path, spark, sf_dir, monkeypatch):
     assert set(r["n_nationkey"] for r in back.collect()) == {0, 1, 2, 3, 4}
 
 
+def test_cli_run_prints_the_exit_event(tmp_path, spark, sf_dir, monkeypatch, capsys):
+    """`run` prints the pipeline's exit event as ONE JSON line on
+    stdout (the runner itself prints nothing)."""
+    cfg = {
+        "name": "e2e-print",
+        "source": {"kind": "dir", "path": "${SF_DIR}", "namespaces": "^nation$"},
+        "steps": [{"save": {"kind": "jsonl", "path": str(tmp_path / "out_{ns}")}}],
+    }
+    path = tmp_path / "pipeline.json"
+    path.write_text(json.dumps(cfg))
+    monkeypatch.setenv("SF_DIR", sf_dir)
+    monkeypatch.setattr("transporter_spark.cli._get_spark", lambda: spark)
+    assert main(["run", str(path)]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    event = json.loads(lines[0])
+    assert event["event"] == "exit" and event["pipeline"] == "e2e-print"
+    assert event["rows"] == {"nation -> jsonl[0]": 25}
+
+
 def test_config_errors_are_loud():
     """Misconfigurations fail fast with actionable messages — the
     reference's builder errors at script-eval time the same way."""

@@ -27,6 +27,19 @@ def test_file_to_file_roundtrip(spark, sf_dir, tmp_path):
     assert back.count() == src_rows
 
 
+def test_run_prints_nothing_to_stdout(spark, sf_dir, tmp_path, capsys):
+    """Library code prints nothing: ``Pipeline.run`` returns its exit
+    event instead of printing it (the CLI prints it)."""
+    event = (
+        Pipeline("quiet")
+        .source("dir", path=sf_dir, namespaces="^nation$")
+        .save("jsonl", path=str(tmp_path / "out") + "/{ns}")
+        .run(spark)
+    )
+    assert event["event"] == "exit" and event["rows"]["nation -> jsonl[0]"] > 0
+    assert capsys.readouterr().out == ""
+
+
 def test_fanout_two_sinks_with_edge_transforms(spark, sf_dir, tmp_path):
     """One source, two sinks; the second edge gets an extra filter —
     the reference's fan-out tree (pipe.Send to every child,

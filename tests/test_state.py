@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from transporter_spark.streaming.state import SegmentStore
 
 
@@ -97,3 +99,152 @@ def test_fresh_name_skips_existing_dirs(spark, tmp_path):
     store = SegmentStore(str(tmp_path / "st"))
     _write(spark, store, "t-compact0", [(1, "a")])
     assert store.fresh_name("t-compact0") == "t-compact0.1"
+
+
+def test_gc_purge_spares_a_rewritten_segment(tmp_path):
+    """A deterministic segment name can come back after it was put on
+    ``gc``: an epoch's write crashes before its commit, an out-of-band
+    fold (``transporter state compact``) sweeps the orphan onto ``gc``,
+    and Spark then replays that epoch under the same id, rewriting the
+    same name. The replay's commit must not purge the segment it just
+    referenced. Filesystem only: directories stand in for parquet."""
+    store = SegmentStore(str(tmp_path / "st"))
+
+    def write(name):
+        os.makedirs(store.seg_path(name), exist_ok=True)
+
+    for e in (0, 1):
+        write(f"delta-e{e}")
+        store.commit(e, tables={"delta": store.table_segments("delta") + [f"delta-e{e}"]})
+    write("delta-e2")  # crash before the epoch-2 commit
+    write("delta-compact1")  # the out-of-band fold
+    store.commit(1, tables={"delta": ["delta-compact1"]})
+    assert "delta-e2" in store.manifest()["gc"]
+    write("delta-e2")  # replay of epoch 2 rewrites the same name
+    store.commit(2, tables={"delta": ["delta-compact1", "delta-e2"]})
+    assert store.table_segments("delta") == ["delta-compact1", "delta-e2"]
+    assert all(os.path.isdir(p) for p in store.table_paths("delta"))
+    # the folded-away epoch segments are still purged one commit later
+    assert not os.path.exists(store.seg_path("delta-e0"))
+    assert store.manifest()["gc"] == []
+
+
+# -- the shared epoch slot ------------------------------------------------
+#
+# One contract, run against a list-table sink with the id re-delivery
+# guard (vocab), the list-table CDC sink and a keyed delta-merge sink
+# (rollup). Epoch i's rows carry ids 10*i.. and sit in hour i, so every
+# epoch adds one segment to the family's log table.
+
+
+def _epoch_rows(i):
+    from datetime import datetime
+
+    return [
+        (10 * i + j, datetime(2024, 1, 1, i, j), float(j), f"w{i} x{j} y")
+        for j in range(3)
+    ]
+
+
+_ROW_SCHEMA = "id long, ts timestamp, value double, text string"
+
+
+def _slot_family(name, spark, state):
+    """(batch fn of (rows frame, epoch), log table, compactor)."""
+    from transporter_spark.envelope import to_envelope
+    from transporter_spark.streaming import cdc, vocab, windows
+
+    if name == "vocab":
+        return (
+            lambda b, e: vocab.vocab_batch(b, e, state, id_col="id"),
+            "wc",
+            vocab.compact_vocab_state,
+        )
+    if name == "cdc":
+        sink = cdc.cdc_upsert_sink(spark, state, keys=["id"])
+        return (
+            lambda b, e: sink(
+                to_envelope(b, ns="t", ts_col="ts", payload_cols=["id", "value"]), e
+            ),
+            "delta",
+            cdc.compact_cdc_table,
+        )
+    return (
+        lambda b, e: windows.rollup_merge_batch(b, e, state),
+        "hourly",
+        windows.compact_rollup_state,
+    )
+
+
+@pytest.mark.parametrize("family", ["vocab", "cdc", "rollup"])
+def test_epoch_slot_contract(spark, tmp_path, family):
+    """Every sink's epoch slot, one contract: an empty epoch commits
+    nothing; a replayed epoch leaves MANIFEST.json byte-identical; a
+    backwards epoch raises; ``compact_every=N`` folds the log table
+    exactly when it reaches N segments; and the drain returns the
+    number of non-empty, non-replayed epochs, a skipped-empty leading
+    batch and a Spark-replayed batch included."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from transporter_spark.streaming.state import (
+        epoch_sink,
+        run_foreach_batch_available_now,
+    )
+
+    state = str(tmp_path / "state")
+    store = SegmentStore(state)
+    batch_fn, log_table, compactor = _slot_family(family, spark, state)
+    slot = epoch_sink(batch_fn, state, log_table, compactor, compact_every=3)
+    frame = lambda i: spark.createDataFrame(_epoch_rows(i), _ROW_SCHEMA)
+
+    assert slot(spark.createDataFrame([], _ROW_SCHEMA), 0) is False
+    assert store.manifest() is None  # empty epoch: nothing committed
+    assert slot(frame(0), 0) is True
+    manifest = open(store.manifest_path, "rb").read()
+    assert slot(frame(0), 0) is False  # replay
+    assert open(store.manifest_path, "rb").read() == manifest
+    sizes = [store.log_size(log_table)]
+    for e in (1, 2, 3):
+        assert slot(frame(e), e) is True
+        sizes.append(store.log_size(log_table))
+    # 1, 2, then the third segment triggers the fold, then one more
+    assert sizes == [1, 2, 1, 2]
+    with pytest.raises(ValueError, match="epoch counter went backwards"):
+        slot(frame(9), 1)
+
+    # the drain: an empty leading file, then three non-empty epochs
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = pa.schema(
+        [("id", pa.int64()), ("ts", pa.timestamp("us", tz="UTC")),
+         ("value", pa.float64()), ("text", pa.string())]
+    )
+    for k, rows in enumerate([[]] + [_epoch_rows(i) for i in (4, 5, 6)]):
+        path = str(src / f"f{k}.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        ), path)
+        os.utime(path, (1_700_000_000 + 10 * k,) * 2)
+    stream = (
+        spark.readStream.schema(_ROW_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    drained = str(tmp_path / "drained")
+    fn, log_table, compactor = _slot_family(family, spark, drained)
+    ckpt = str(tmp_path / "ckpt")
+    drain = lambda: run_foreach_batch_available_now(
+        stream, epoch_sink(fn, drained, log_table, compactor), ckpt
+    )
+    assert drain() == 3
+    # drop the last offset commit: the restart re-runs that batch
+    # under the same id, the slot skips it, and the count says so
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    manifest = open(SegmentStore(drained).manifest_path, "rb").read()
+    assert drain() == 0
+    assert open(SegmentStore(drained).manifest_path, "rb").read() == manifest
+    assert SegmentStore(drained).log_size(log_table) == 3

@@ -1028,43 +1028,59 @@ def test_pq_index_sink_multi_epoch_equals_batch_and_redelivery_guard(
     )
 
 
-def test_chunked_df_stream_matches_table_stream_chunks(spark, tmp_path):
-    """chunked_df_stream duplicates chunked_table_stream's split logic
-    verbatim (the r14 window-slot duplication — review flagged the
-    drift risk): pin that both harnesses produce IDENTICAL per-chunk
-    row sets and delivery order over the same table, so a fix to one
-    that misses the other fails here instead of silently diverging."""
-    import os
+def test_cdc_replay_after_out_of_band_compaction_keeps_its_segment(
+    spark, tmp_path, monkeypatch
+):
+    """Crash after the epoch-2 segment write, fold the log out of band
+    (the sink is stopped, so `transporter state compact` may run), then
+    Spark replays epoch 2 under the same id. The fold swept the orphan
+    ``delta-e2`` onto ``gc``; the replay rewrites it and its commit must
+    keep it — the table equals DuckDB last-writer-wins over every
+    change."""
+    from datetime import datetime
 
-    from transporter_spark.sources.files import read_table
-    from transporter_spark.streaming.sources import (
-        chunked_df_stream,
-        chunked_table_stream,
-    )
+    import duckdb
 
-    sf = "/root/testdata/sf0.001"
-    dir_a = str(tmp_path / "a")
-    dir_b = str(tmp_path / "b")
-    chunked_table_stream(spark, sf, "documents", 3, out_dir=dir_a)
-    chunked_df_stream(
-        spark, read_table(spark, sf, "documents"), 3, out_dir=dir_b
+    from transporter_spark.streaming.cdc import (
+        cdc_upsert_sink,
+        compact_cdc_table,
+        read_cdc_table,
     )
-    names_a = sorted(os.listdir(dir_a))
-    names_b = sorted(os.listdir(dir_b))
-    assert names_a == names_b == [f"chunk_{i:03d}.parquet" for i in range(3)]
-    for name in names_a:
-        rows_a = {
-            r.doc_id
-            for r in spark.read.parquet(os.path.join(dir_a, name)).collect()
-        }
-        rows_b = {
-            r.doc_id
-            for r in spark.read.parquet(os.path.join(dir_b, name)).collect()
-        }
-        assert rows_a == rows_b and rows_a
-    # mtimes strictly increase in chunk order on both (delivery order)
-    for d in (dir_a, dir_b):
-        mtimes = [
-            os.stat(os.path.join(d, n)).st_mtime for n in sorted(os.listdir(d))
-        ]
-        assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+    from transporter_spark.streaming.state import SegmentStore
+
+    t = lambda d: datetime(2024, 1, d)
+    epochs = [
+        [("insert", t(1), 1, "a"), ("insert", t(1), 2, "b")],
+        [("update", t(2), 1, "a2"), ("insert", t(2), 3, "c")],
+        [("delete", t(3), 2, None), ("update", t(3), 3, "c2")],
+    ]
+    target = str(tmp_path / "cdc")
+    sink = cdc_upsert_sink(spark, target, keys=["user_id"])
+    sink(_env(spark, epochs[0]), 0)
+    sink(_env(spark, epochs[1]), 1)
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash before commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(SegmentStore, "commit", crash)
+        with pytest.raises(RuntimeError, match="crash before commit"):
+            sink(_env(spark, epochs[2]), 2)
+    assert compact_cdc_table(spark, target) is True
+    assert "delta-e2" in SegmentStore(target).manifest()["gc"]
+    sink(_env(spark, epochs[2]), 2)  # the replay
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ch (op VARCHAR, ts TIMESTAMP, user_id BIGINT, v VARCHAR)")
+    con.executemany(
+        "INSERT INTO ch VALUES (?, ?, ?, ?)", [r for e in epochs for r in e]
+    )
+    want = con.execute(
+        "SELECT user_id, v FROM (SELECT *, row_number() OVER "
+        "(PARTITION BY user_id ORDER BY ts DESC) AS rn FROM ch) "
+        "WHERE rn = 1 AND op <> 'delete' ORDER BY user_id"
+    ).fetchall()
+    got = sorted(
+        (r.user_id, r.v) for r in read_cdc_table(spark, target).collect()
+    )
+    assert got == want == [(1, "a2"), (3, "c2")]

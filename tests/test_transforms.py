@@ -488,3 +488,22 @@ function transform(doc) {
     for alias in ("otto", "transformer"):
         got = bo(alias, source=js)(env).select("data.json").collect()
         assert got[0][0] == '{"n": 2}'
+
+
+def test_stream_js_transform_unlinks_script_when_build_fails(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The graded streaming-js query writes its script to a temp `.js`
+    file; a failing operator build must not leave that file behind."""
+    import tempfile
+
+    from transporter_spark.queries import transforms as qt
+
+    def boom(*a, **kw):
+        raise RuntimeError("operator build failed")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(qt, "build_operator", boom)
+    with pytest.raises(RuntimeError, match="operator build failed"):
+        qt.q_stream_js_transform(spark, sf_dir)
+    assert not list(tmp_path.glob("ts_transform_*.js"))

@@ -161,13 +161,15 @@ def main(argv: Optional[List[str]] = None) -> int:
         p = pipeline_from_config(cfg)
         stream = cfg.get("streaming")
         if stream:
-            p.run_stream(
+            event = p.run_stream(
                 _get_spark(),
                 stream["checkpoint"],
                 available_now=stream.get("available_now", True),
             )
         else:
-            p.run(_get_spark())
+            event = p.run(_get_spark())
+        if event.get("event") == "exit":
+            print(json.dumps(event))
         return 0
 
     if cmd == "test":

@@ -30,7 +30,6 @@ Differences from the reference, by design:
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional, Tuple
 
@@ -246,9 +245,7 @@ class Pipeline:
             metrics[name] = sum(
                 int(p["numInputRows"]) for p in q_handle.recentProgress
             )
-        event = {"event": "exit", "pipeline": self.name, "rows": metrics}
-        print(json.dumps(event))
-        return event
+        return {"event": "exit", "pipeline": self.name, "rows": metrics}
 
     def run(self, spark: SparkSession) -> dict:
         """Execute every (namespace x sink) edge; returns the metrics
@@ -264,6 +261,4 @@ class Pipeline:
                     continue
                 rows = self._write(routed, ns, edge, spark)
                 metrics[f"{ns} -> {edge.kind}[{i}]"] = rows
-        event = {"event": "exit", "pipeline": self.name, "rows": metrics}
-        print(json.dumps(event))
-        return event
+        return {"event": "exit", "pipeline": self.name, "rows": metrics}

@@ -989,18 +989,17 @@ def q_stream_ingest_dedup_2epoch_chain(spark, sf_dir):
     (the set-level divergence |2epoch \\ batch| = {10^10} holds at
     sf0.01 AND sf0.1, pinned at sf0.01 in
     tests/test_oracle_builders.py). Engine: the augmented frame drains
-    through `chunked_df_stream` (2 doc_id-ordered chunks, one applied
+    through `_chunked_stream` (2 doc_id-ordered chunks, one applied
     epoch each) into the SAME production sink; oracle: the proven
     two-stage unrolled closure with chunk bound and participation
     rewired to the augmented corpus."""
     from transporter_spark.streaming.ingest import (
         dedup_ingest_sink,
-        ingest_epochs_applied,
         read_ingest_corpus,
     )
     from transporter_spark.streaming.sources import (
+        _chunked_stream,
         assert_epochs_applied,
-        chunked_df_stream,
     )
     import tempfile as _tempfile
 
@@ -1008,9 +1007,10 @@ def q_stream_ingest_dedup_2epoch_chain(spark, sf_dir):
     chain = spark.createDataFrame(_chain_docs(), "doc_id long, text string")
     aug = docs.unionByName(chain)
     state = _tempfile.mkdtemp(prefix="ts_ingest_chain_") + "/state"
-    stream = chunked_df_stream(spark, aug, num_chunks=2)
-    dedup_ingest_sink(stream, state, threshold=0.1, portable=True)
-    assert_epochs_applied(ingest_epochs_applied(state), 2)
+    stream = _chunked_stream(spark, aug, num_chunks=2)
+    assert_epochs_applied(
+        dedup_ingest_sink(stream, state, threshold=0.1, portable=True), 2
+    )
     return read_ingest_corpus(spark, state).select("doc_id").orderBy("doc_id")
 
 
@@ -2209,7 +2209,6 @@ def q_stream_semdedup_2epoch(spark, sf_dir):
         assert_epochs_applied,
         chunked_table_stream,
     )
-    from transporter_spark.streaming.state import SegmentStore
     from transporter_spark.streaming.vectors import (
         read_semdedup_kept,
         semdedup_sink,
@@ -2224,9 +2223,8 @@ def q_stream_semdedup_2epoch(spark, sf_dir):
     stream = chunked_table_stream(
         spark, sf_dir, "embeddings", 2, order_col="vec_id"
     )
-    semdedup_sink(stream, state, centroids, threshold=0.3, round_dp=8)
     assert_epochs_applied(
-        len(SegmentStore(state).table_segments("kept")), 2
+        semdedup_sink(stream, state, centroids, threshold=0.3, round_dp=8), 2
     )
     kept = read_semdedup_kept(spark, state)
     return kept.select(
@@ -3620,14 +3618,10 @@ def q_stream_pack_bins_2epoch(spark, sf_dir):
         assert_epochs_applied,
         chunked_table_stream,
     )
-    from transporter_spark.streaming.state import SegmentStore
 
     state = tempfile.mkdtemp(prefix="ts_pack2_") + "/state"
     stream = chunked_table_stream(spark, sf_dir, "documents", 2)
-    pack_bins_ingest_sink(stream, state, seq_len=64)
-    assert_epochs_applied(
-        int(SegmentStore(state).meta().get("n_applied", 0)), 2
-    )
+    assert_epochs_applied(pack_bins_ingest_sink(stream, state, seq_len=64), 2)
     return read_packed_bins(spark, state).orderBy("source", "bin_id")
 
 

@@ -315,27 +315,29 @@ function transform(doc) {
 }
 """
     fd, path = _tempfile.mkstemp(suffix=".js", prefix="ts_transform_")
-    with _os.fdopen(fd, "w") as fh:
-        fh.write(js)
-    ev = chunked_table_stream(
-        spark, sf_dir, "events", num_chunks=2, order_col="event_id"
-    )
-    op = (
-        F.when(F.col("event_type") == "signup", "insert")
-        .when(F.col("event_type") == "error", "delete")
-        .otherwise("update")
-    )
-    env = to_envelope(
-        ev.withColumn("_op", op),
-        ns="app.events",
-        op_col="_op",
-        ts_col="ts",
-        payload_cols=["event_id", "user_id", "event_type", "value", "props"],
-    )
-    # the file is read EAGERLY at operator build (goja.go reads the
-    # script at config time too) — safe to unlink before the drain
-    out = build_operator("js", filename=path)(env)
-    _os.unlink(path)
+    try:
+        with _os.fdopen(fd, "w") as fh:
+            fh.write(js)
+        ev = chunked_table_stream(
+            spark, sf_dir, "events", num_chunks=2, order_col="event_id"
+        )
+        op = (
+            F.when(F.col("event_type") == "signup", "insert")
+            .when(F.col("event_type") == "error", "delete")
+            .otherwise("update")
+        )
+        env = to_envelope(
+            ev.withColumn("_op", op),
+            ns="app.events",
+            op_col="_op",
+            ts_col="ts",
+            payload_cols=["event_id", "user_id", "event_type", "value", "props"],
+        )
+        # the file is read EAGERLY at operator build (goja.go reads the
+        # script at config time too) — safe to unlink before the drain
+        out = build_operator("js", filename=path)(env)
+    finally:
+        _os.unlink(path)
     drained = run_available_now(out)
     return drained.select(
         F.get_json_object("data.json", "$.event_id").cast("long").alias(

@@ -155,36 +155,35 @@ def cdc_upsert_sink(
     read-side window with MERGE INTO per epoch — the collapsed epoch
     segment is the exact merge source.
 
-    ``compact_every=N`` folds the log inside the epoch slot whenever it
-    reaches N segments (single-writer by construction — never race an
-    out-of-band compactor against a live sink, the manifest
-    read-modify-write is not concurrent-writer safe).
+    ``compact_every=N`` folds the log in the epoch slot whenever it
+    reaches N segments (state.drain_sink). The returned fn is a plain
+    ``(batch, epoch_id)`` foreachBatch function; it returns whether the
+    epoch applied.
     """
-    from transporter_spark.streaming.state import SegmentStore
+    from transporter_spark.streaming.state import SegmentStore, epoch_sink
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        store = SegmentStore(table_path)
-        # replay of the last epoch: appending again would double-apply.
-        # A BACKWARDS epoch counter raises instead of silently dropping
-        # new data (state.epoch_already_applied).
-        if store.epoch_already_applied(epoch_id):
-            return
-        if batch.isEmpty():
-            return
-        delta = apply_cdc_batch(None, batch, keys, order_cols).withColumn(
-            "_epoch", F.lit(int(epoch_id))
-        )
-        name = f"delta-e{epoch_id}"
-        delta.write.mode("overwrite").parquet(store.seg_path(name))
-        store.commit(
+    def apply(batch: DataFrame, epoch_id: int) -> bool:
+        return SegmentStore(table_path).append_epoch(
+            batch,
             epoch_id,
-            tables={"delta": store.table_segments("delta") + [name]},
+            lambda b: {
+                "delta": apply_cdc_batch(None, b, keys, order_cols).withColumn(
+                    "_epoch", F.lit(int(epoch_id))
+                )
+            },
             meta={"keys": list(keys), "order_cols": list(order_cols or [])},
         )
-        if compact_every and len(store.table_segments("delta")) >= compact_every:
-            compact_cdc_table(spark, table_path)
 
-    return apply
+    # folds run on the caller's session, not the batch's streaming
+    # clone (which has AQE off); the compactor is looked up per call,
+    # so a wrapper installed on the module attribute sees every fold
+    return epoch_sink(
+        apply,
+        table_path,
+        "delta",
+        lambda _batch_session, path: compact_cdc_table(spark, path),
+        compact_every,
+    )
 
 
 def read_cdc_state(spark: SparkSession, table_path: str) -> DataFrame:

@@ -36,20 +36,12 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _TABLES = ("vars", "sym_ids")
-
-
-def _check_distance(store: SegmentStore, max_distance: int) -> None:
-    meta = store.meta()
-    if "sym_max_distance" in meta and meta["sym_max_distance"] != max_distance:
-        raise ValueError(
-            f"fuzzy index at {store.base!r} was built at "
-            f"max_distance={meta['sym_max_distance']}; refusing an epoch "
-            f"at {max_distance} — mixed blocking distances would "
-            "silently lose recall at the larger radius"
-        )
 
 
 def fuzzy_index_batch(
@@ -66,34 +58,27 @@ def fuzzy_index_batch(
     append — the standing index is read only for the id guard, and
     never rewritten."""
     from transporter_spark.operators.dedup import symspell_variants
-    from transporter_spark.streaming.ingest import redelivery_guard
 
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    _check_distance(store, max_distance)
-    spark = batch.sparkSession
-    if store.manifest() is not None:
-        batch = redelivery_guard(
-            batch, store.read(spark, "sym_ids"), id_col
+
+    def build(b: DataFrame) -> dict:
+        store.check_meta(
+            {"sym_max_distance": max_distance},
+            "mixed blocking distances would silently lose recall at the "
+            "larger radius",
         )
-        if batch.isEmpty():
-            return False
-    variants = symspell_variants(batch, text_col, id_col, max_distance)
-    segs = {}
-    for table, df in (
-        ("vars", variants),
-        ("sym_ids", batch.select(F.col(id_col).alias("id"))),
-    ):
-        name = store.fresh_name(f"{table}-e{epoch_id}")
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = store.table_segments(table) + [name]
-    store.commit(
-        epoch_id, tables=segs, meta={"sym_max_distance": max_distance}
+        return {
+            "vars": symspell_variants(b, text_col, id_col, max_distance),
+            "sym_ids": b.select(F.col(id_col).alias("id")),
+        }
+
+    return store.append_epoch(
+        batch,
+        epoch_id,
+        build,
+        guard=("sym_ids", id_col),
+        meta={"sym_max_distance": max_distance},
     )
-    return True
 
 
 def compact_fuzzy_index(spark: SparkSession, state_dir: str) -> bool:
@@ -109,25 +94,16 @@ def fuzzy_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain a key-string stream into the maintained variant index
     (availableNow); probe it any time with
-    ``incremental_symspell_pairs(batch, read_fuzzy_index(..., max_distance=d))`` — the read validates d against the build distance."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    ``incremental_symspell_pairs(batch, read_fuzzy_index(..., max_distance=d))`` — the read validates d against the build distance.
+    Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: fuzzy_index_batch(b, e, state_dir, **kw),
+        state_dir, "vars", compact_fuzzy_index, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = fuzzy_index_batch(batch, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("vars"))
-            >= compact_every
-        ):
-            compact_fuzzy_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_fuzzy_index(
@@ -140,7 +116,7 @@ def read_fuzzy_index(
     intend to PROBE at: probing a larger radius than the index was
     built with silently loses recall (the corpus side lacks the
     deeper deletions), so a mismatch raises here — the read-side twin
-    of the sink's `_check_distance` write guard."""
+    of the sink's write guard."""
     store = SegmentStore(state_dir)
     df = store.read(spark, "vars")
     if df is None:
@@ -159,14 +135,6 @@ def read_fuzzy_index(
                 "probe at <= its build distance"
             )
     return df
-
-
-def fuzzy_epochs_applied(state_dir: str) -> int:
-    """Number of APPLIED (non-empty, non-replayed) epochs: each one
-    appends exactly one ``vars`` segment, and the graded drains never
-    compact — the segment count IS the applied count (the
-    ingest_epochs_applied pattern)."""
-    return len(SegmentStore(state_dir).table_segments("vars"))
 
 
 def drain_customers_fuzzy(
@@ -192,22 +160,14 @@ def drain_customers_fuzzy(
     unchanged."""
     from transporter_spark.streaming.sources import (
         assert_epochs_applied,
-        chunked_table_stream,
-        stream_table,
+        chunked_or_single_stream,
     )
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_fuzzy_") + "/state"
-    if num_chunks > 1:
-        cust = chunked_table_stream(
-            spark, sf_dir, "customer", num_chunks, order_col="c_custkey"
-        )
-    else:
-        cust = stream_table(spark, sf_dir, "customer")
-    cust = cust.select(
-        F.col("c_custkey").alias("id"), F.col("c_name").alias("s")
-    )
-    fuzzy_ingest_sink(cust, state, **kw)
-    assert_epochs_applied(fuzzy_epochs_applied(state), min_epochs)
+    cust = chunked_or_single_stream(
+        spark, sf_dir, "customer", num_chunks, order_col="c_custkey"
+    ).select(F.col("c_custkey").alias("id"), F.col("c_name").alias("s"))
+    assert_epochs_applied(fuzzy_ingest_sink(cust, state, **kw), min_epochs)
     return read_fuzzy_index(
         spark, state, max_distance=kw.get("max_distance", 1)
     )

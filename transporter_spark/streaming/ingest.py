@@ -53,12 +53,17 @@ later commit).
 from __future__ import annotations
 
 import tempfile
+from contextlib import ExitStack
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+    redelivery_guard,
+)
 
 _TABLES = ("docs", "index", "fps")
 
@@ -131,60 +136,55 @@ def _ingest_dedup_batch(
     )
 
     store = SegmentStore(state_dir)
-    manifest = store.manifest()
-    if store.epoch_already_applied(epoch_id):
-        return False
-    # empty epochs happen (foreachBatch delivers them on idle triggers);
-    # not advancing the marker is safe: replay of an empty epoch is
-    # vacuously idempotent.
-    if batch.isEmpty():
-        return False
-    if pre_filter is not None:
-        # Column predicate (a cheap row gate like Gopher) OR a
-        # DataFrame->DataFrame callable for gates that need BATCH-level
-        # statistics (perplexity tertiles, quantile thresholds) — the
-        # full curation stack composes as a callable; it must return a
-        # subset of the batch's rows with the batch's schema.
-        from pyspark.sql import Column
 
-        if isinstance(pre_filter, Column):
-            batch = batch.filter(pre_filter)
+    def build(batch: DataFrame, cleanup: ExitStack):
+        if pre_filter is not None:
+            # Column predicate (a cheap row gate like Gopher) OR a
+            # DataFrame->DataFrame callable for gates that need BATCH-level
+            # statistics (perplexity tertiles, quantile thresholds) — the
+            # full curation stack composes as a callable; it must return a
+            # subset of the batch's rows with the batch's schema.
+            from pyspark.sql import Column
+
+            if isinstance(pre_filter, Column):
+                batch = batch.filter(pre_filter)
+            else:
+                batch = pre_filter(batch)
+            if batch.isEmpty():
+                return None
+
+        spark = batch.sparkSession
+        fps = store.read(spark, "fps")
+        if fps is not None:
+            corpus = store.read(spark, "docs")
+            index = store.read(spark, "index")
+            batch = redelivery_guard(batch, fps, id_col)
+            if batch.isEmpty():
+                return None
         else:
-            batch = pre_filter(batch)
-        if batch.isEmpty():
-            return False
+            corpus = batch.limit(0)
+            index = None
 
-    spark = batch.sparkSession
-    if manifest is not None:
-        corpus = store.read(spark, "docs")
-        index = store.read(spark, "index")
-        batch = redelivery_guard(batch, store.read(spark, "fps"), id_col)
-        if batch.isEmpty():
-            return False
-    else:
-        corpus = batch.limit(0)
-        index = None
-
-    # band the batch ONCE: the pair search consumes these rows and the
-    # accepted subset appends to the index — no second minhash pass
-    batch_bands = band_index(
-        batch, text_col, id_col, n, num_hashes, bands, seed, portable
-    ).localCheckpoint(eager=True)
-    pairs = incremental_lsh_pairs(
-        batch,
-        corpus.select(F.col(id_col), F.col(text_col)),
-        index=index,
-        text_col=text_col,
-        id_col=id_col,
-        n=n,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        seed=seed,
-        portable=portable,
-        new_bands=batch_bands,
-    ).select("id_a", "id_b")
-    try:
+        # band the batch ONCE: the pair search consumes these rows and the
+        # accepted subset appends to the index — no second minhash pass
+        batch_bands = band_index(
+            batch, text_col, id_col, n, num_hashes, bands, seed, portable
+        ).localCheckpoint(eager=True)
+        pairs = incremental_lsh_pairs(
+            batch,
+            corpus.select(F.col(id_col), F.col(text_col)),
+            index=index,
+            text_col=text_col,
+            id_col=id_col,
+            n=n,
+            num_hashes=num_hashes,
+            bands=bands,
+            threshold=threshold,
+            seed=seed,
+            portable=portable,
+            new_bands=batch_bands,
+        ).select("id_a", "id_b")
+        cleanup.callback(release_cached, pairs)
         batch_ids = batch.select(F.col(id_col).alias("id"))
         tagged = (
             pairs.join(
@@ -230,45 +230,17 @@ def _ingest_dedup_batch(
         kept = batch.join(
             dropped, F.col(id_col) == F.col("_drop_id"), "left_anti"
         )
-        kept_bands = batch_bands.join(
-            dropped, batch_bands["id"] == dropped["_drop_id"], "left_anti"
-        )
-        kept_fps = fingerprint_index(kept, [text_col], id_col)
+        # append-only commit: ONLY the epoch's kept rows, as new segments
+        return {
+            "docs": kept,
+            "index": batch_bands.join(
+                dropped, batch_bands["id"] == dropped["_drop_id"], "left_anti"
+            ),
+            "fps": fingerprint_index(kept, [text_col], id_col),
+        }
 
-        # append-only commit: write ONLY the epoch's kept rows as new
-        # segments, then extend the manifest's segment lists atomically
-        segs = {}
-        for table, df in (
-            ("docs", kept),
-            ("index", kept_bands),
-            ("fps", kept_fps),
-        ):
-            # deterministic name: a crashed attempt's orphan for the
-            # same epoch is safely overwritten on retry
-            name = f"{table}-e{epoch_id}"
-            df.write.mode("overwrite").parquet(store.seg_path(name))
-            segs[table] = store.table_segments(table) + [name]
-        store.commit(epoch_id, tables=segs)
-    finally:
-        release_cached(pairs)
-    return True
-
-
-def redelivery_guard(batch: DataFrame, fps: DataFrame, id_col: str) -> DataFrame:
-    """Drop batch rows whose id is already accepted. At-least-once
-    SOURCES can re-deliver earlier data in a LATER epoch (the epoch
-    marker only catches same-epoch replay); a re-delivered doc shares
-    its id with an accepted row, and the LSH self-pair filter
-    (id_a != id_b) would hide it — so it would be re-accepted and
-    duplicate the id in the corpus. Membership test = anti-join against
-    the 32 B/doc fingerprint index — never a scan of corpus text or the
-    docs table at all (plan-pinned in tests/test_ingest_dedup.py
-    against THIS function, the path the sink runs)."""
-    return batch.join(
-        fps.select(F.col("id").alias("_seen_id")),
-        F.col(id_col) == F.col("_seen_id"),
-        "left_anti",
-    )
+    with ExitStack() as cleanup:
+        return store.append_epoch(batch, epoch_id, lambda b: build(b, cleanup))
 
 
 def compact_ingest_state(spark: SparkSession, state_dir: str) -> bool:
@@ -290,32 +262,17 @@ def dedup_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain a document stream through the continuous-dedup sink
     (availableNow); state at ``state_dir`` is readable between and
     after runs via :func:`read_ingest_corpus` / :func:`read_ingest_index`.
-
     ``compact_every=N`` folds the segment log whenever it reaches N
-    segments — the operational loop of the reference's scheduled
-    compactor (pipeline/node.go:417-436 runs it hourly): without it a
-    long-lived stream accumulates one segment per table per applied
-    epoch. Counting SEGMENTS (not epoch ids) makes the schedule immune
-    to empty/replayed epochs. Compaction is content-preserving and runs
-    INSIDE the epoch's foreachBatch slot (single-writer by
-    construction), so a crash between merge and compaction just leaves
-    the log one fold behind — never inconsistent."""
-    from transporter_spark.streaming.windows import run_foreach_batch_available_now
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = ingest_dedup_batch(batch, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("docs")) >= compact_every
-        ):
-            compact_ingest_state(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
+    segments (state.drain_sink). Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: ingest_dedup_batch(b, e, state_dir, **kw),
+        state_dir, "docs", compact_ingest_state, compact_every, checkpoint_dir,
+    )
 
 
 def ingest_last_epoch(state_dir: str) -> Optional[int]:
@@ -343,17 +300,6 @@ def read_ingest_index(spark: SparkSession, state_dir: str) -> DataFrame:
 
 def read_ingest_fingerprints(spark: SparkSession, state_dir: str) -> DataFrame:
     return _read_required(spark, state_dir, "fps")
-
-
-def ingest_epochs_applied(state_dir: str) -> int:
-    """Number of APPLIED (non-empty, non-replayed) epochs: each one
-    appends exactly one ``docs`` segment, and the graded drains never
-    compact (``compact_every`` off), so the segment count IS the
-    applied count. Counting segments instead of the last epoch ID
-    keeps a skipped-empty LEADING batch from reading as multi-epoch
-    (the r11 packing-sink lesson — its n_applied meta counter, here
-    derived from the manifest the sink already maintains)."""
-    return len(SegmentStore(state_dir).table_segments("docs"))
 
 
 def drain_documents_dedup(
@@ -394,8 +340,7 @@ def drain_documents_dedup(
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_ingest_") + "/state"
     docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
-    dedup_ingest_sink(docs, state, **kw)
-    applied = ingest_epochs_applied(state)
+    applied = dedup_ingest_sink(docs, state, **kw)
     if assert_single_epoch and applied > 1:
         raise RuntimeError(
             f"drain applied {applied} epochs; the single-epoch oracle "

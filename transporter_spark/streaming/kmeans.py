@@ -36,7 +36,11 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SEG_KEY,
+    SegmentStore,
+    drain_sink,
+)
 
 # one segment key per centroid cell: a batch touches at most k cells,
 # so the keyed manifest reads/writes only those (metadata-sized either
@@ -58,7 +62,6 @@ def kmeans_merge_batch(
     from pyspark.sql.functions import broadcast
 
     from transporter_spark.operators.similarity import kmeans_partials
-    from transporter_spark.streaming.state import SEG_KEY
 
     partial = kmeans_partials(batch, broadcast(centroids), id_col, vec_col
                               ).withColumn(SEG_KEY, F.col("cell").cast("string"))
@@ -86,27 +89,17 @@ def kmeans_ingest_sink(
     centroids: DataFrame,
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
-    applied_counter: Optional[list] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain an embedding stream into the maintained centroid-partial
     table (availableNow). ``compact_every``: fold the segment log at N
-    segments, in-slot (single-writer), like the other continuous
-    sinks. ``applied_counter``: a list the sink appends each applied
-    epoch id to — the drains' min-epochs assert reads its length (the
-    refresh sink's pattern)."""
-    from transporter_spark.streaming.windows import run_foreach_batch_available_now
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = kmeans_merge_batch(batch, epoch_id, state_dir, centroids, **kw)
-        if applied and applied_counter is not None:
-            applied_counter.append(epoch_id)
-        if applied and compact_every:
-            segs = set(SegmentStore(state_dir).keyed_mapping("partials").values())
-            if len(segs) >= compact_every:
-                compact_kmeans_state(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
+    segments, in-slot (state.drain_sink). Returns the number of
+    applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: kmeans_merge_batch(b, e, state_dir, centroids, **kw),
+        state_dir, "partials", compact_kmeans_state, compact_every, checkpoint_dir,
+    )
 
 
 def refreshed_centroids(
@@ -145,9 +138,8 @@ def kmeans_refresh_sink(
     state_dir: str,
     init_centroids: DataFrame,
     checkpoint_dir: Optional[str] = None,
-    applied_counter: Optional[list] = None,
     **kw,
-) -> None:
+) -> int:
     """Mini-batch k-means with per-epoch centroid REFRESH — the
     recursive-feedback variant of `kmeans_ingest_sink`: each epoch
     assigns its batch to the CURRENT refreshed centroids (sum/n over
@@ -159,21 +151,21 @@ def kmeans_refresh_sink(
     metadata-sized refresh. Unlike the fixed-centroid sink the result
     is ORDER-DEPENDENT by design — the graded oracle unrolls the
     epochs as a seeded second fold (the FFD-carry pattern,
-    queries/mixing_sampling.stream_kmeans_refresh_2epoch)."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
-    )
+    queries/mixing_sampling.stream_kmeans_refresh_2epoch). No
+    in-slot compaction (``compact_kmeans_state`` between runs).
+    Returns the number of applied epochs."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
+    def apply(batch: DataFrame, epoch_id: int) -> bool:
         cents = refreshed_centroids(batch.sparkSession, state_dir)
-        applied = kmeans_merge_batch(
+        return kmeans_merge_batch(
             batch, epoch_id, state_dir,
             cents if cents is not None else init_centroids, **kw,
         )
-        if applied and applied_counter is not None:
-            applied_counter.append(epoch_id)
 
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
+    return drain_sink(
+        stream_df, apply, state_dir, "partials", compact_kmeans_state,
+        checkpoint_dir=checkpoint_dir,
+    )
 
 
 def drain_embeddings_kmeans_refresh(
@@ -199,19 +191,15 @@ def drain_embeddings_kmeans_refresh(
     emb = chunked_table_stream(
         spark, sf_dir, "embeddings", num_chunks, order_col="vec_id"
     )
-    applied: list = []
-    kmeans_refresh_sink(
-        emb, state, init_centroids, applied_counter=applied, **kw
+    assert_epochs_applied(
+        kmeans_refresh_sink(emb, state, init_centroids, **kw), min_epochs
     )
-    assert_epochs_applied(len(applied), min_epochs)
     return read_kmeans_state(spark, state)
 
 
 def read_kmeans_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained partials at the `kmeans_update` output boundary:
     (cell, dim, sum_val DOUBLE via the exact string hop, n)."""
-    from transporter_spark.streaming.state import SEG_KEY
-
     df = SegmentStore(state_dir).read_keyed(spark, "partials")
     if df is None:
         raise FileNotFoundError(
@@ -249,23 +237,17 @@ def drain_embeddings_kmeans(
     one applied epoch each, raising unless at least ``min_epochs``
     applied. The decimal partials are associative, so maintained ==
     batch at ANY epoch structure (the additive class) and the batch
-    oracle grades the real multi-epoch drain unchanged. The inline
-    if/else (instead of an order_col-aware chunked_or_single_stream)
-    is the deferred-fold discipline — see drain_documents_bloom."""
+    oracle grades the real multi-epoch drain unchanged."""
     from transporter_spark.streaming.sources import (
         assert_epochs_applied,
-        chunked_table_stream,
-        stream_table,
+        chunked_or_single_stream,
     )
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_kmeans_") + "/state"
-    if num_chunks > 1:
-        emb = chunked_table_stream(
-            spark, sf_dir, "embeddings", num_chunks, order_col="vec_id"
-        )
-    else:
-        emb = stream_table(spark, sf_dir, "embeddings")
-    applied: list = []
-    kmeans_ingest_sink(emb, state, centroids, applied_counter=applied, **kw)
-    assert_epochs_applied(len(applied), min_epochs)
+    emb = chunked_or_single_stream(
+        spark, sf_dir, "embeddings", num_chunks, order_col="vec_id"
+    )
+    assert_epochs_applied(
+        kmeans_ingest_sink(emb, state, centroids, **kw), min_epochs
+    )
     return read_kmeans_state(spark, state)

@@ -38,23 +38,12 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _TABLES = ("fps", "ph_ids")
-
-
-def _check_meta_geometry(store: SegmentStore, want: dict) -> None:
-    """Raise on any committed meta value differing from the epoch's —
-    the ONE geometry validation both sinks in this module share."""
-    meta = store.meta()
-    for name, val in want.items():
-        if name in meta and meta[name] != val:
-            raise ValueError(
-                f"index at {store.base!r} was built with "
-                f"{name}={meta[name]}; refusing an epoch at {val} — "
-                "mixed geometries would silently break the pigeonhole "
-                "candidate join (or the fid packing)"
-            )
 
 
 def _banded_index_batch(
@@ -67,39 +56,29 @@ def _banded_index_batch(
     fp_table: str,
     id_table: str,
 ) -> bool:
-    """THE shared epoch skeleton of this module's banded-fingerprint
-    index sinks (image pHash and frame-level video): replay guard ->
-    empty guard -> geometry validation -> cross-epoch id re-delivery
-    guard -> fingerprint/band the batch (``banded_fn``) -> append both
-    segments -> atomic manifest commit. One skeleton, so a fix to the
-    guard/commit ordering cannot silently miss a twin (the r10 review
-    consolidation; the vote core's 'one definition, no drift' rule
-    applied to the sink layer). Returns False on replay / empty /
+    """The epoch step shared by this module's banded-fingerprint index
+    sinks (image pHash, frame-level video, audio windows): geometry
+    validation, then fingerprint/band the batch (``banded_fn``) into
+    ``fp_table`` and its ids into ``id_table``, on the store's
+    list-table epoch step (replay / empty / id re-delivery guards,
+    one atomic commit). Returns False on replay / empty /
     fully-redelivered batches."""
-    from transporter_spark.streaming.ingest import redelivery_guard
-
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    _check_meta_geometry(store, meta)
-    spark = batch.sparkSession
-    if store.manifest() is not None:
-        batch = redelivery_guard(batch, store.read(spark, id_table), id_col)
-        if batch.isEmpty():
-            return False
-    banded = banded_fn(batch)
-    segs = {}
-    for table, df in (
-        (fp_table, banded),
-        (id_table, batch.select(F.col(id_col).alias("id"))),
-    ):
-        name = store.fresh_name(f"{table}-e{epoch_id}")
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = store.table_segments(table) + [name]
-    store.commit(epoch_id, tables=segs, meta=meta)
-    return True
+
+    def build(b: DataFrame) -> dict:
+        store.check_meta(
+            meta,
+            "mixed geometries would silently break the pigeonhole "
+            "candidate join (or the fid packing)",
+        )
+        return {
+            fp_table: banded_fn(b),
+            id_table: b.select(F.col(id_col).alias("id")),
+        }
+
+    return store.append_epoch(
+        batch, epoch_id, build, guard=(id_table, id_col), meta=meta
+    )
 
 
 def phash_index_batch(
@@ -143,28 +122,19 @@ def phash_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain a media stream into the maintained banded pHash index
     (availableNow); probe it any time with
     ``incremental_phash_pairs(batch, read_phash_index(...))`` or run
     the full self-dedup with ``banded_hamming_pairs``.
     ``compact_every``: fold the log at N segments, in-slot
-    (single-writer), as in the dedup and ANN sinks."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    (single-writer), as in the dedup and ANN sinks. Returns the
+    number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: phash_index_batch(b, e, state_dir, **kw),
+        state_dir, "fps", compact_phash_index, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = phash_index_batch(batch, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("fps"))
-            >= compact_every
-        ):
-            compact_phash_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_phash_index(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -243,25 +213,16 @@ def video_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain a video stream into the maintained banded FRAME index
     (availableNow); probe it any time with
-    ``incremental_video_pairs(batch, read_video_index(...))``."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    ``incremental_video_pairs(batch, read_video_index(...))``. Returns the
+    number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: video_index_batch(b, e, state_dir, **kw),
+        state_dir, "vfps", compact_video_index, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = video_index_batch(batch, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("vfps"))
-            >= compact_every
-        ):
-            compact_video_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_video_index(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -324,17 +285,6 @@ def probe_video_index(
 
 
 
-def _assert_min_epochs(state_dir: str, fp_table: str, min_epochs: int):
-    """Applied-epoch count = fp-segment count (one appended per
-    applied epoch; graded drains never compact) through the ONE shared
-    min-epochs raise (streaming/sources.assert_epochs_applied)."""
-    from transporter_spark.streaming.sources import assert_epochs_applied
-
-    assert_epochs_applied(
-        len(SegmentStore(state_dir).table_segments(fp_table)), min_epochs
-    )
-
-
 def drain_documents_video(
     spark: SparkSession,
     sf_dir: str,
@@ -348,8 +298,11 @@ def drain_documents_video(
     index sink (text bytes standing in for video blobs) and return the
     STATE DIR — probe with `probe_video_index` (the graded query
     does), which validates geometry from the manifest. num_chunks > 1
-    drains genuinely multi-epoch (`_chunked_or_single_docs`)."""
-    from transporter_spark.streaming.sources import chunked_or_single_stream
+    drains genuinely multi-epoch (`chunked_or_single_stream`)."""
+    from transporter_spark.streaming.sources import (
+        assert_epochs_applied,
+        chunked_or_single_stream,
+    )
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_video_") + "/state"
     docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
@@ -357,8 +310,7 @@ def drain_documents_video(
         docs = docs.select(
             "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
         )
-    video_ingest_sink(docs, state, **kw)
-    _assert_min_epochs(state, "vfps", min_epochs)
+    assert_epochs_applied(video_ingest_sink(docs, state, **kw), min_epochs)
     return state
 
 
@@ -376,7 +328,10 @@ def drain_documents_phash(
     ``content_from_text`` — the multimodal fake-decode discipline) and
     return the maintained banded index (used by the graded query).
     num_chunks > 1 drains genuinely multi-epoch."""
-    from transporter_spark.streaming.sources import chunked_or_single_stream
+    from transporter_spark.streaming.sources import (
+        assert_epochs_applied,
+        chunked_or_single_stream,
+    )
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_phash_") + "/state"
     docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
@@ -384,8 +339,7 @@ def drain_documents_phash(
         docs = docs.select(
             "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
         )
-    phash_ingest_sink(docs, state, **kw)
-    _assert_min_epochs(state, "fps", min_epochs)
+    assert_epochs_applied(phash_ingest_sink(docs, state, **kw), min_epochs)
     return read_phash_index(spark, state)
 
 
@@ -454,24 +408,15 @@ def audio_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain an audio stream into the maintained banded window index
-    (availableNow); probe any time with `probe_audio_index`."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    (availableNow); probe any time with `probe_audio_index`. Returns the
+    number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: audio_index_batch(b, e, state_dir, **kw),
+        state_dir, "afps", compact_audio_index, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = audio_index_batch(batch, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("afps"))
-            >= compact_every
-        ):
-            compact_audio_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_audio_index(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -541,7 +486,10 @@ def drain_documents_audio(
     fake-decode discipline) and return the STATE DIR; probe with
     `probe_audio_index`. num_chunks > 1 drains genuinely
     multi-epoch."""
-    from transporter_spark.streaming.sources import chunked_or_single_stream
+    from transporter_spark.streaming.sources import (
+        assert_epochs_applied,
+        chunked_or_single_stream,
+    )
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_audio_") + "/state"
     docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
@@ -549,6 +497,5 @@ def drain_documents_audio(
         docs = docs.select(
             "doc_id", F.encode(F.col("text"), "UTF-8").alias("content")
         )
-    audio_ingest_sink(docs, state, **kw)
-    _assert_min_epochs(state, "afps", min_epochs)
+    assert_epochs_applied(audio_ingest_sink(docs, state, **kw), min_epochs)
     return state

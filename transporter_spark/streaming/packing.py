@@ -44,7 +44,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _OPEN_SCHEMA = (
     "source string, bin_id long, load long, members array<string>"
@@ -172,19 +175,34 @@ def _pack_bins_batch(
     the shard's OPEN bins (never closed history); commit IO = one
     closed segment + the open/counters tables (∝ open bins)."""
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    _meta_want = {"seq_len": seq_len, "close_slack": close_slack}
-    meta = store.meta()
-    for k, v in _meta_want.items():
-        if k in meta and meta[k] != v:
-            raise ValueError(
-                f"packing state at {state_dir!r} was built with "
-                f"{k}={meta[k]}; refusing an epoch at {v} — mixed bin "
-                "capacities would corrupt the training rows"
-            )
+    meta = {"seq_len": seq_len, "close_slack": close_slack}
+    return store.append_epoch(
+        batch,
+        epoch_id,
+        lambda b: _pack_frames(
+            b, store, meta, seq_len, close_slack, shard_col, id_col, count_col
+        ),
+        meta=meta,
+        replace=("open", "counters"),
+    )
+
+
+def _pack_frames(
+    batch: DataFrame,
+    store: SegmentStore,
+    meta: dict,
+    seq_len: int,
+    close_slack: int,
+    shard_col: str,
+    id_col: str,
+    count_col: str,
+) -> Optional[dict]:
+    """The epoch's frames for :func:`_pack_bins_batch` (None when the
+    batch holds only zero-token docs): validate ``meta`` against the
+    committed one, then first-fit the batch into the open bins."""
+    store.check_meta(
+        meta, "mixed bin capacities would corrupt the training rows"
+    )
     if seq_len < 1:
         raise ValueError(f"seq_len must be >= 1, got {seq_len}")
     if not 0 <= close_slack < seq_len:
@@ -222,7 +240,7 @@ def _pack_bins_batch(
         .localCheckpoint(eager=True)
     )
     if base.isEmpty():
-        return False
+        return None
     _L = F.lit(-1).cast("long")
     fulls = base.select(
         "source",
@@ -312,42 +330,19 @@ def _pack_bins_batch(
         F.max("next_bin").alias("next_bin")
     )
 
-    segs = {}
-    writes = [
-        (
-            "open",
-            still_open.unionByName(
-                open_bins.join(touched, "source", "left_anti")
-            ),
-            False,
-        ),
-        (
-            "counters",
-            new_counters.unionByName(
-                counters.join(touched, "source", "left_anti")
-            ),
-            False,
-        ),
-    ]
     # appending an EMPTY closed segment every epoch would grow the
     # manifest and the read-union forever on slack-0 streams that
     # rarely close bins (r11 review) — the closed log tracks actual
     # closes only
-    if not newly_closed.isEmpty():
-        writes.insert(0, ("closed", newly_closed, True))
-    for table, df, append in writes:
-        name = f"{table}-e{epoch_id}"
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = (
-            store.table_segments(table) + [name] if append else [name]
-        )
-    # n_applied counts COMMITTED epochs (skipped empty/replayed ones
-    # don't advance it) — the drain's single-epoch assert keys on this,
-    # not on the last epoch ID, which can skip past dropped batches
-    meta = dict(_meta_want)
-    meta["n_applied"] = int(store.meta().get("n_applied", 0)) + 1
-    store.commit(epoch_id, tables=segs, meta=meta)
-    return True
+    return {
+        "closed": None if newly_closed.isEmpty() else newly_closed,
+        "open": still_open.unionByName(
+            open_bins.join(touched, "source", "left_anti")
+        ),
+        "counters": new_counters.unionByName(
+            counters.join(touched, "source", "left_anti")
+        ),
+    }
 
 
 def compact_packing_state(spark: SparkSession, state_dir: str) -> bool:
@@ -365,30 +360,24 @@ def pack_bins_ingest_sink(
     compact_every: Optional[int] = None,
     text_col: str = "text",
     **kw,
-) -> None:
+) -> int:
     """Drain a DOCUMENT stream through the continuous packer: per
-    batch, whitespace token counts feed :func:`pack_bins_batch`."""
+    batch, whitespace token counts feed :func:`pack_bins_batch`.
+    Returns the number of applied epochs."""
     from transporter_spark.operators.text import token_count
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
-    )
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
+    def apply(batch: DataFrame, epoch_id: int) -> bool:
         counts = batch.select(
             kw.get("shard_col", "source"),
             kw.get("id_col", "doc_id"),
             token_count(text_col).alias(kw.get("count_col", "ntok")),
         )
-        applied = pack_bins_batch(counts, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("closed"))
-            >= compact_every
-        ):
-            compact_packing_state(batch.sparkSession, state_dir)
+        return pack_bins_batch(counts, epoch_id, state_dir, **kw)
 
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
+    return drain_sink(
+        stream_df, apply,
+        state_dir, "closed", compact_packing_state, compact_every, checkpoint_dir,
+    )
 
 
 def packing_last_epoch(state_dir: str) -> Optional[int]:
@@ -442,13 +431,12 @@ def drain_documents_packing(
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_pack_") + "/state"
     docs = stream_table(spark, sf_dir, "documents")
-    pack_bins_ingest_sink(docs, state, **kw)
-    applied = SegmentStore(state).meta().get("n_applied", 0)
+    applied = pack_bins_ingest_sink(docs, state, **kw)
     # applied == 0 (no committed epoch): fall through and let
     # read_packed_bins raise its clearer no-state error instead of
     # misdiagnosing an empty drain as a multi-epoch one; keying on the
-    # APPLIED count (not the last epoch ID) keeps skipped-empty
-    # leading batches from tripping the assert (r11 review x2)
+    # drain's APPLIED count (not the last epoch ID) keeps skipped-empty
+    # leading batches from tripping the assert
     if assert_single_epoch and applied > 1:
         raise RuntimeError(
             f"drain applied {applied} epochs; the single-epoch "

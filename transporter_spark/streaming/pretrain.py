@@ -59,8 +59,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.sources import chunked_table_stream  # noqa: F401  (moved r12 — shared drain harness; re-exported for compat)
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.sources import chunked_table_stream
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _TABLES = ("packed", "curated", "tail")
 
@@ -85,18 +88,6 @@ def _merges_signature(merges: Sequence) -> str:
         h.update(rhs.encode("utf-8"))
         h.update(b"\x1e")
     return h.hexdigest()
-
-
-def _check_meta(store: SegmentStore, want: dict) -> None:
-    meta = store.meta()
-    for name, val in want.items():
-        if name in meta and meta[name] != val:
-            raise ValueError(
-                f"pretraining state at {store.base!r} was built with "
-                f"{name}={meta[name]}; refusing an epoch at {val} — "
-                "mixing packing geometries or tokenizers would "
-                "silently corrupt the training stream"
-            )
 
 
 def _load_tokenizer(store: SegmentStore, spark: SparkSession):
@@ -165,13 +156,45 @@ def _pretrain_batch(
     sequences only), one curated segment, one constant-sized tail
     segment, one manifest file.
     """
-    from transporter_spark.operators.text import bpe_encode_ids, curate_docs
-
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
+    meta = {"seq_len": seq_len, "min_tokens": min_tokens}
+    if merges is not None:
+        # a state tokenizer that differs raises in _pretrain_frames, so
+        # this is the signature the epoch encodes with; without merges=
+        # the state's own signature stays in the meta
+        meta["merges_md5"] = _merges_signature(merges)
+    return store.append_epoch(
+        batch,
+        epoch_id,
+        lambda b: _pretrain_frames(
+            b, store, merges, vocab, seq_len, min_tokens, text_col, id_col,
+            source_col,
+        ),
+        meta=meta,
+        # tail/merges/vocab are replaced wholesale
+        replace=("tail", "merges", "vocab"),
+    )
+
+
+def _pretrain_frames(
+    batch: DataFrame,
+    store: SegmentStore,
+    merges: Optional[Sequence],
+    vocab: Optional[DataFrame],
+    seq_len: int,
+    min_tokens: int,
+    text_col: str,
+    id_col: str,
+    source_col: str,
+) -> Optional[dict]:
+    """The epoch's frames for :func:`_pretrain_batch`: curate, encode
+    with the standing tokenizer, pack with tail carry. None when the
+    whole batch is curated away."""
+    from transporter_spark.operators.text import (
+        bpe_encode_ids,
+        bpe_merges_df,
+        curate_docs,
+    )
 
     spark = batch.sparkSession
     state_merges, state_vocab = _load_tokenizer(store, spark)
@@ -180,7 +203,7 @@ def _pretrain_batch(
             merges
         ) != _merges_signature(state_merges):
             raise ValueError(
-                f"pretraining state at {state_dir!r} holds a different "
+                f"pretraining state at {store.base!r} holds a different "
                 "standing tokenizer than the merges passed to this "
                 "epoch — encoding the stream with two vocabularies "
                 "would silently corrupt the packed ids. Pass no merges "
@@ -193,13 +216,14 @@ def _pretrain_batch(
             "and vocab= (they are persisted into the state and read "
             "back on every later epoch)"
         )
-    _check_meta(
-        store,
+    store.check_meta(
         {
             "seq_len": seq_len,
             "min_tokens": min_tokens,
             "merges_md5": _merges_signature(merges),
         },
+        "mixing packing geometries or tokenizers would silently corrupt "
+        "the training stream",
     )
 
     # -- curate: the batch definition + cross-epoch first-wins --------
@@ -226,7 +250,7 @@ def _pretrain_batch(
     # curation lineage once
     kept = kept.localCheckpoint(eager=True)
     if kept.isEmpty():
-        return False
+        return None
 
     # -- encode with the standing tokenizer ----------------------------
     ids = bpe_encode_ids(kept, merges, vocab, text_col="rtext", id_col=id_col)
@@ -355,35 +379,13 @@ def _pretrain_batch(
 
     # -- append-only commit --------------------------------------------
     first_commit = store.manifest() is None
-    segs = {}
-    writes = [
-        ("packed", full),
-        ("curated", kept.select(F.col(id_col).alias("id"), "nhash")),
-        ("tail", new_tails),
-    ]
-    if first_commit:
-        from transporter_spark.operators.text import bpe_merges_df
-
-        writes.append(("merges", bpe_merges_df(spark, merges)))
-        writes.append(("vocab", vocab))
-    for table, df in writes:
-        name = f"{table}-e{epoch_id}"
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = (
-            store.table_segments(table) + [name]
-            if table in ("packed", "curated")
-            else [name]  # tail/merges/vocab: replaced wholesale
-        )
-    store.commit(
-        epoch_id,
-        tables=segs,
-        meta={
-            "seq_len": seq_len,
-            "min_tokens": min_tokens,
-            "merges_md5": _merges_signature(merges),
-        },
-    )
-    return True
+    return {
+        "packed": full,
+        "curated": kept.select(F.col(id_col).alias("id"), "nhash"),
+        "tail": new_tails,
+        "merges": bpe_merges_df(spark, merges) if first_commit else None,
+        "vocab": vocab if first_commit else None,
+    }
 
 
 def compact_pretrain_state(spark: SparkSession, state_dir: str) -> bool:
@@ -403,27 +405,18 @@ def pretrain_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain a document stream through the continuous pretraining sink
     (availableNow); the packed training rows at ``state_dir`` are
-    readable between and after runs via :func:`read_pretrain_packed`."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    readable between and after runs via :func:`read_pretrain_packed`.
+    Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: pretrain_batch(
+            b, e, state_dir, merges=merges, vocab=vocab, **kw
+        ),
+        state_dir, "packed", compact_pretrain_state, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = pretrain_batch(
-            batch, epoch_id, state_dir, merges=merges, vocab=vocab, **kw
-        )
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("packed"))
-            >= compact_every
-        ):
-            compact_pretrain_state(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def pretrain_last_epoch(state_dir: str) -> Optional[int]:
@@ -499,17 +492,12 @@ def drain_documents_pretraining(
     merges = bpe_learn_from_counts(wc, num_merges)
     vocab = bpe_vocab_from_words(wc, merges)
 
+    from transporter_spark.streaming.sources import assert_epochs_applied
+
     state = state_dir or tempfile.mkdtemp(prefix="ts_pretrain_") + "/state"
     stream = chunked_table_stream(spark, sf_dir, "documents", num_chunks)
-    pretrain_ingest_sink(
+    applied = pretrain_ingest_sink(
         stream, state, merges=merges, vocab=vocab, seq_len=seq_len
     )
-    last = pretrain_last_epoch(state)
-    if last is None or last + 1 < min_epochs:
-        raise RuntimeError(
-            f"drain applied {0 if last is None else last + 1} epochs; "
-            f"the graded multi-epoch equivalence needs >= {min_epochs} "
-            "— the chunked stream harness is no longer delivering one "
-            "epoch per chunk"
-        )
+    assert_epochs_applied(applied, min_epochs)
     return read_pretrain_packed(spark, state)

@@ -59,7 +59,11 @@ from transporter_spark.operators.sketches import (
     hll_merge,
     hll_register_table,
 )
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SEG_KEY,
+    SegmentStore,
+    drain_sink,
+)
 
 # one segment key per group value: a batch touches only the groups it
 # contains, so the keyed manifest rewrites only those groups' segments.
@@ -109,8 +113,6 @@ def _keyed_sketch_merge(
     re-implementation that could drift), commit under the parameterized
     format string. False when the epoch was already applied or the
     batch was empty."""
-    from transporter_spark.streaming.state import SEG_KEY
-
     part = partial.withColumn(SEG_KEY, _seg_key(by))
 
     def remerge(prev, part):
@@ -121,30 +123,7 @@ def _keyed_sketch_merge(
     )
 
 
-def _keyed_sketch_sink(
-    stream_df: DataFrame,
-    state_dir: str,
-    store: str,
-    apply_merge: Callable[[DataFrame, int], bool],
-    checkpoint_dir: Optional[str],
-    compact_every: Optional[int],
-) -> None:
-    """availableNow drain + in-slot compaction at compact_every
-    segments (single-writer), shared by both sketch sinks."""
-    from transporter_spark.streaming.windows import run_foreach_batch_available_now
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        if apply_merge(batch, epoch_id) and compact_every:
-            st = SegmentStore(state_dir)
-            if len(set(st.keyed_mapping(store).values())) >= compact_every:
-                st.compact_keyed_commit(batch.sparkSession, store)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
-
-
 def _read_state(spark: SparkSession, state_dir: str, store: str) -> DataFrame:
-    from transporter_spark.streaming.state import SEG_KEY
-
     df = SegmentStore(state_dir).read_keyed(spark, store)
     if df is None:
         raise FileNotFoundError(
@@ -184,12 +163,13 @@ def hll_sketch_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     p: int = DEFAULT_P,
-) -> None:
-    """Drain a stream into the maintained register table."""
-    _keyed_sketch_sink(
-        stream_df, state_dir, _HLL_STORE,
+) -> int:
+    """Drain a stream into the maintained register table. Returns the
+    number of applied epochs."""
+    return drain_sink(
+        stream_df,
         lambda b, e: hll_merge_batch(b, e, state_dir, item_col, by, p),
-        checkpoint_dir, compact_every,
+        state_dir, _HLL_STORE, compact_hll_state, compact_every, checkpoint_dir,
     )
 
 
@@ -255,17 +235,17 @@ def dd_sketch_sink(
     compact_every: Optional[int] = None,
     scale_bits: int = DEFAULT_SCALE_BITS,
     sub_bits: int = DEFAULT_SUB_BITS,
-) -> None:
+) -> int:
     """Drain a stream into the maintained bin histogram; feed
     read_dd_state to operators.sketches.dd_quantiles for current
     percentiles — continuous p50/p99 monitoring without storing a row
-    per observation."""
-    _keyed_sketch_sink(
-        stream_df, state_dir, _BINS_STORE,
+    per observation. Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
         lambda b, e: dd_merge_batch(
             b, e, state_dir, value_col, by, scale_bits, sub_bits
         ),
-        checkpoint_dir, compact_every,
+        state_dir, _BINS_STORE, compact_dd_state, compact_every, checkpoint_dir,
     )
 
 
@@ -333,25 +313,22 @@ def bloom_sketch_sink(
     compact_every: Optional[int] = None,
     k: int = DEFAULT_K,
     m_bits: int = DEFAULT_M_BITS,
-    applied_counter: Optional[list] = None,
-) -> None:
+) -> int:
     """Drain a stream into the maintained word table — the continuous
     blocklist: feed read_bloom_state to operators.sketches
     .bloom_contains to probe membership (decontamination, exact-dup
     candidacy) against everything ever ingested, at m_bits of state
-    per group forever. ``applied_counter``: a list the sink appends
-    each applied epoch id to (the kmeans sinks' pattern) — the
-    drains' min-epochs assert reads its length."""
-
-    def merge(b, e):
-        applied = bloom_merge_batch(b, e, state_dir, item_col, by, k, m_bits)
-        if applied and applied_counter is not None:
-            applied_counter.append(e)
-        return applied
-
-    _keyed_sketch_sink(
-        stream_df, state_dir, _BLOOM_STORE, merge,
-        checkpoint_dir, compact_every,
+    per group forever. Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: bloom_merge_batch(b, e, state_dir, item_col, by, k, m_bits),
+        state_dir,
+        _BLOOM_STORE,
+        lambda spark, path: SegmentStore(path).compact_keyed_commit(
+            spark, _BLOOM_STORE
+        ),
+        compact_every,
+        checkpoint_dir,
     )
 
 
@@ -370,7 +347,6 @@ def read_bloom_sketch(spark: SparkSession, state_dir: str):
     import re
 
     from transporter_spark.operators.sketches import BloomSketch
-    from transporter_spark.streaming.state import SegmentStore
 
     fmt = SegmentStore(state_dir).meta().get("seg_key", "")
     m = re.search(r"bloom_m=(\d+)\.k=(\d+)", fmt)
@@ -408,30 +384,19 @@ def drain_documents_bloom(
     idempotent, so maintained == batch at ANY epoch structure (the
     additive class) and the batch oracle grades the real multi-epoch
     drain unchanged. The ``where`` gate runs INSIDE each epoch (the
-    chunk bound stays on the raw table).
-
-    The num_chunks if/else is deliberately inline, NOT
-    `chunked_or_single_stream` (review r14): folding through the
-    shared selector edits executed code of every green drain that
-    calls it (the r7 shared-infra precedent re-graded all stream_*);
-    fold this and the fuzzy/kmeans twins into an order_col-aware
-    selector when the r12/r13 drain cohorts next rotate."""
+    chunk bound stays on the raw table)."""
     from transporter_spark.streaming.sources import (
         assert_epochs_applied,
-        chunked_table_stream,
-        stream_table,
+        chunked_or_single_stream,
     )
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_bloom_") + "/state"
-    if num_chunks > 1:
-        docs = chunked_table_stream(spark, sf_dir, "documents", num_chunks)
-    else:
-        docs = stream_table(spark, sf_dir, "documents")
+    docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
     if where is not None:
         docs = docs.where(where)
-    applied: list = []
-    bloom_sketch_sink(docs, state, item_col, applied_counter=applied, **kw)
-    assert_epochs_applied(len(applied), min_epochs)
+    assert_epochs_applied(
+        bloom_sketch_sink(docs, state, item_col, **kw), min_epochs
+    )
     return read_bloom_sketch(spark, state)
 
 

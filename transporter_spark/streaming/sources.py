@@ -74,69 +74,30 @@ def chunked_table_stream(
 ) -> DataFrame:
     """A genuinely MULTI-EPOCH availableNow stream over one testdata
     table: split it into ``num_chunks`` single-file parquet chunks by
-    ascending ``order_col`` ranges (exact percentile boundaries), with
-    strictly increasing mtimes so the file source delivers them in
-    order, and read the chunk dir with maxFilesPerTrigger=1 — one
-    epoch per chunk. This is the drain harness that lets the graded
-    stream_pretraining query prove MULTI-epoch == batch (the other
-    stream queries' single-epoch assert, upgraded)."""
+    ascending ``order_col`` ranges (`_chunked_stream`). This is the
+    drain harness that lets the graded stream queries prove
+    MULTI-epoch == batch."""
     from transporter_spark.sources.files import read_table
 
-    df = read_table(spark, sf_dir, name)
-    qs = [i / num_chunks for i in range(1, num_chunks)]
-    bounds = df.select(
-        F.expr(
-            f"percentile({order_col}, array({', '.join(str(q) for q in qs)}))"
-        ).alias("b")
-    ).collect()[0].b
-    chunk_dir = out_dir or tempfile.mkdtemp(prefix="ts_chunks_")
-    os.makedirs(chunk_dir, exist_ok=True)
-    stage = tempfile.mkdtemp(prefix="ts_chunk_stage_")
-    lows = [None] + list(bounds)
-    highs = list(bounds) + [None]
-    now = time.time()
-    for i, (lo, hi) in enumerate(zip(lows, highs)):
-        part = df
-        if lo is not None:
-            part = part.where(F.col(order_col) > lo)
-        if hi is not None:
-            part = part.where(F.col(order_col) <= hi)
-        stage_i = os.path.join(stage, f"c{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(stage_i)
-        src = [
-            f
-            for f in os.listdir(stage_i)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-        assert len(src) == 1, f"expected one part file, got {src}"
-        dst = os.path.join(chunk_dir, f"chunk_{i:03d}.parquet")
-        shutil.move(os.path.join(stage_i, src[0]), dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    shutil.rmtree(stage, ignore_errors=True)
-    return (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunk_dir)
+    return _chunked_stream(
+        spark, read_table(spark, sf_dir, name), num_chunks, order_col, out_dir
     )
 
 
-def chunked_df_stream(
+def _chunked_stream(
     spark: SparkSession,
     df: DataFrame,
-    num_chunks: int = 4,
+    num_chunks: int,
     order_col: str = "doc_id",
     out_dir: Optional[str] = None,
 ) -> DataFrame:
-    """`chunked_table_stream` over an in-memory DataFrame instead of a
-    testdata table — the drain harness for graded queries whose corpus
-    is a deterministic AUGMENTATION of a testdata table (the
-    divergence-chain ingest grade, VERDICT r13 item 5: testdata is
-    driver-generated and read-only, so the chain docs are spliced at
-    the query layer on both sides). Split logic duplicated VERBATIM
-    from `chunked_table_stream` minus the read_table line — NOT a
-    refactor of it, per the window-slot discipline (r13: touching the
-    executed code of every green drain query burns ~15 rotation
-    slots); fold the two together when the drain cohort next rotates."""
+    """Split ``df`` into ``num_chunks`` single-file parquet chunks by
+    ascending ``order_col`` ranges (exact percentile boundaries), with
+    strictly increasing mtimes so the file source delivers them in
+    order, and read the chunk dir with maxFilesPerTrigger=1 — one
+    epoch per chunk. Also the harness for graded queries whose corpus
+    is a deterministic AUGMENTATION of a testdata table (testdata is
+    read-only, so augmented docs are spliced at the query layer)."""
     qs = [i / num_chunks for i in range(1, num_chunks)]
     bounds = df.select(
         F.expr(
@@ -175,14 +136,17 @@ def chunked_df_stream(
 
 
 def chunked_or_single_stream(
-    spark: SparkSession, sf_dir: str, name: str, num_chunks: int
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    num_chunks: int,
+    order_col: str = "doc_id",
 ) -> DataFrame:
-    """THE graded drains' source selector (r12 review: four inline
-    copies had appeared): doc_id-ordered single-file chunks — one
-    applied epoch each — when num_chunks > 1, else the plain one-file
-    availableNow stream."""
+    """THE graded drains' source selector: ``order_col``-ordered
+    single-file chunks — one applied epoch each — when num_chunks > 1,
+    else the plain one-file availableNow stream."""
     if num_chunks > 1:
-        return chunked_table_stream(spark, sf_dir, name, num_chunks)
+        return chunked_table_stream(spark, sf_dir, name, num_chunks, order_col)
     return stream_table(spark, sf_dir, name)
 
 

@@ -38,12 +38,16 @@ append+compact discipline as its other sinks
 from __future__ import annotations
 
 import tempfile
+from contextlib import ExitStack
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _TABLE = "spandf"
 
@@ -63,28 +67,25 @@ def span_index_merge_batch(
     from transporter_spark.operators.text import span_df_index
 
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    meta = store.meta()
-    if meta.get("span_w") not in (None, window_tokens):
-        raise ValueError(
-            f"span index at {state_dir!r} was built with "
-            f"window_tokens={meta['span_w']}; refusing to merge an epoch "
-            f"windowed at {window_tokens} — the hash domains are "
-            "incompatible"
-        )
-    _check_span_family(store, state_dir, "index")
-    part = span_df_index(batch, text_col, id_col, window_tokens)
-    seg = store.fresh_name(f"{_TABLE}-e{epoch_id}")
-    part.write.mode("overwrite").parquet(store.seg_path(seg))
-    store.commit(
+
+    def build(b: DataFrame) -> dict:
+        meta = store.meta()
+        if meta.get("span_w") not in (None, window_tokens):
+            raise ValueError(
+                f"span index at {state_dir!r} was built with "
+                f"window_tokens={meta['span_w']}; refusing to merge an epoch "
+                f"windowed at {window_tokens} — the hash domains are "
+                "incompatible"
+            )
+        _check_span_family(store, state_dir, "index")
+        return {_TABLE: span_df_index(b, text_col, id_col, window_tokens)}
+
+    return store.append_epoch(
+        batch,
         epoch_id,
-        tables={_TABLE: store.table_segments(_TABLE) + [seg]},
+        build,
         meta={"span_w": window_tokens, "span_family": "index"},
     )
-    return True
 
 
 def _check_span_family(
@@ -120,27 +121,18 @@ def span_index_sink(
     window_tokens: int = 10,
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
-) -> None:
+) -> int:
     """Drain a document stream into the maintained index.
     ``compact_every=N`` folds the segment log in-slot when it reaches
-    N segments (single-writer by construction, like the ingest sink)."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    N segments (state.drain_sink). Returns the number of applied
+    epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: span_index_merge_batch(
+            b, e, state_dir, text_col, id_col, window_tokens
+        ),
+        state_dir, _TABLE, compact_span_index, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = span_index_merge_batch(
-            batch, epoch_id, state_dir, text_col, id_col, window_tokens
-        )
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments(_TABLE))
-            >= compact_every
-        ):
-            compact_span_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_span_index(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -224,49 +216,35 @@ def span_prune_merge_batch(
     meta — a mismatched epoch raises. Re-delivered doc ids violate the
     index's each-doc-once contract (double-count ⇒ over-excision);
     dedup upstream (the ingest sink's fingerprint guard)."""
-    from transporter_spark.operators.text import (
-        _excise_covered,
-        _span_hash_rows,
-        span_df_index,
-    )
+    from transporter_spark.operators.dedup import _materialize
+    from transporter_spark.operators.text import _excise_covered, _span_hash_rows
 
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    meta = store.meta()
-    for name, val in (("span_w", window_tokens), ("span_min_df", min_df)):
-        if meta.get(name) not in (None, val):
-            raise ValueError(
-                f"span-prune state at {state_dir!r} has {name}="
-                f"{meta[name]}; refusing an epoch at {val} — excision "
-                "semantics would silently change mid-stream"
-            )
-    _check_span_family(store, state_dir, "prune")
-    spark = batch.sparkSession
-    from transporter_spark.operators.dedup import _materialize
 
-    # eager materialize (r15: lazy persist raced concurrent
-    # broadcast-build consumers into recomputing the span-hash pass)
-    rows = _materialize(
-        _span_hash_rows(batch, text_col, id_col, window_tokens)
-    )
-    try:
+    def build(b: DataFrame, cleanup: ExitStack) -> dict:
+        meta = store.meta()
+        for name, val in (("span_w", window_tokens), ("span_min_df", min_df)):
+            if meta.get(name) not in (None, val):
+                raise ValueError(
+                    f"span-prune state at {state_dir!r} has {name}="
+                    f"{meta[name]}; refusing an epoch at {val} — excision "
+                    "semantics would silently change mid-stream"
+                )
+        _check_span_family(store, state_dir, "prune")
+        # eager materialize (r15: lazy persist raced concurrent
+        # broadcast-build consumers into recomputing the span-hash pass)
+        rows = _materialize(_span_hash_rows(b, text_col, id_col, window_tokens))
+        cleanup.callback(rows.unpersist)
         batch_partial = (
             rows.where(F.col("h").isNotNull())
             .groupBy("h")
-            .agg(
-                F.count_distinct(F.col(id_col)).cast("long").alias("n_docs")
-            )
+            .agg(F.count_distinct(F.col(id_col)).cast("long").alias("n_docs"))
         )
-        standing = store.read(spark, _TABLE)
+        standing = store.read(b.sparkSession, _TABLE)
         if standing is None:
             total = batch_partial.withColumnRenamed("n_docs", "_tdf")
         else:
-            standing = standing.groupBy("h").agg(
-                F.sum("n_docs").alias("_cdf")
-            )
+            standing = standing.groupBy("h").agg(F.sum("n_docs").alias("_cdf"))
             total = batch_partial.join(standing, "h", "left").select(
                 "h",
                 (
@@ -274,28 +252,24 @@ def span_prune_merge_batch(
                 ).alias("_tdf"),
             )
         rep = total.filter(F.col("_tdf") >= min_df).select("h")
-        kept = _excise_covered(
-            rows, rep, batch.select(id_col), id_col, window_tokens
-        )
-        seg_idx = store.fresh_name(f"{_TABLE}-e{epoch_id}")
-        batch_partial.write.mode("overwrite").parquet(store.seg_path(seg_idx))
-        seg_pruned = store.fresh_name(f"{_PRUNED}-e{epoch_id}")
-        kept.write.mode("overwrite").parquet(store.seg_path(seg_pruned))
-        store.commit(
+        return {
+            _TABLE: batch_partial,
+            _PRUNED: _excise_covered(
+                rows, rep, b.select(id_col), id_col, window_tokens
+            ),
+        }
+
+    with ExitStack() as cleanup:
+        return store.append_epoch(
+            batch,
             epoch_id,
-            tables={
-                _TABLE: store.table_segments(_TABLE) + [seg_idx],
-                _PRUNED: store.table_segments(_PRUNED) + [seg_pruned],
-            },
+            lambda b: build(b, cleanup),
             meta={
                 "span_w": window_tokens,
                 "span_min_df": min_df,
                 "span_family": "prune",
             },
         )
-    finally:
-        rows.unpersist()
-    return True
 
 
 def span_prune_sink(
@@ -307,26 +281,16 @@ def span_prune_sink(
     min_df: int = 2,
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
-) -> None:
-    """Drain a document stream through the prune-then-index loop."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+) -> int:
+    """Drain a document stream through the prune-then-index loop.
+    Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: span_prune_merge_batch(
+            b, e, state_dir, text_col, id_col, window_tokens, min_df
+        ),
+        state_dir, _TABLE, compact_span_index, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = span_prune_merge_batch(
-            batch, epoch_id, state_dir, text_col, id_col, window_tokens,
-            min_df,
-        )
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments(_TABLE))
-            >= compact_every
-        ):
-            compact_span_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_pruned_corpus(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -341,14 +305,6 @@ def read_pruned_corpus(spark: SparkSession, state_dir: str) -> DataFrame:
             "not applied any non-empty epoch yet"
         )
     return df
-
-
-def span_prune_epochs_applied(state_dir: str) -> int:
-    """Applied-epoch count = ``pruned`` segment count (one appended
-    per applied epoch; the graded drains never compact) — the
-    skipped-empty-leading-batch-safe counter (the r11 packing-sink
-    lesson, derived from the manifest instead of the last epoch id)."""
-    return len(SegmentStore(state_dir).table_segments(_PRUNED))
 
 
 def drain_documents_span_prune(
@@ -377,8 +333,8 @@ def drain_documents_span_prune(
 
     assert_single_epoch: the pre-r12 graded contract (drain == batch
     prune_repeated_spans, which is the num_chunks=1 degenerate case);
-    keyed on the APPLIED count so a skipped-empty leading batch cannot
-    read as multi-epoch."""
+    keyed on the drain's APPLIED count so a skipped-empty leading batch
+    cannot read as multi-epoch."""
     from transporter_spark.streaming.sources import (
         assert_epochs_applied,
         chunked_or_single_stream,
@@ -386,8 +342,7 @@ def drain_documents_span_prune(
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_spanprune_") + "/state"
     docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
-    span_prune_sink(docs, state, **kw)
-    applied = span_prune_epochs_applied(state)
+    applied = span_prune_sink(docs, state, **kw)
     if assert_single_epoch and applied > 1:
         raise RuntimeError(
             f"drain applied {applied} epochs; the single-epoch "

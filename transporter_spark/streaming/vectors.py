@@ -33,7 +33,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _TABLES = ("cells", "ids")
 
@@ -53,29 +56,17 @@ def ann_index_batch(
     segment append — the standing index is never read except for the
     8 B/vector id guard, and never rewritten."""
     from transporter_spark.operators.similarity import ivf_index
-    from transporter_spark.streaming.ingest import redelivery_guard
 
-    store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    spark = batch.sparkSession
-    if store.manifest() is not None:
-        batch = redelivery_guard(batch, store.read(spark, "ids"), id_col)
-        if batch.isEmpty():
-            return False
-    assigned = ivf_index(batch, centroids, id_col, vec_col, round_dp)
-    segs = {}
-    for table, df in (
-        ("cells", assigned),
-        ("ids", assigned.select(F.col(id_col).alias("id"))),
-    ):
-        name = f"{table}-e{epoch_id}"
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = store.table_segments(table) + [name]
-    store.commit(epoch_id, tables=segs)
-    return True
+    def build(b: DataFrame) -> dict:
+        assigned = ivf_index(b, centroids, id_col, vec_col, round_dp)
+        return {
+            "cells": assigned,
+            "ids": assigned.select(F.col(id_col).alias("id")),
+        }
+
+    return SegmentStore(state_dir).append_epoch(
+        batch, epoch_id, build, guard=("ids", id_col)
+    )
 
 
 def compact_ann_index(spark: SparkSession, state_dir: str) -> bool:
@@ -92,24 +83,17 @@ def ann_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain an embedding stream into the maintained IVF index
     (availableNow); search it any time with
     ``ann_ivf_search(read_ann_index(...), queries, centroids)``.
     ``compact_every``: fold the log at N segments, in-slot
-    (single-writer), as in the dedup and CDC sinks."""
-    from transporter_spark.streaming.windows import run_foreach_batch_available_now
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = ann_index_batch(batch, epoch_id, state_dir, centroids, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("cells")) >= compact_every
-        ):
-            compact_ann_index(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
+    (state.drain_sink). Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: ann_index_batch(b, e, state_dir, centroids, **kw),
+        state_dir, "cells", compact_ann_index, compact_every, checkpoint_dir,
+    )
 
 
 def read_ann_index(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -172,31 +156,18 @@ def pq_index_batch(
     8 B/vector id guard, never rewritten. ``codebooks`` must live in
     residual space (see `operators.similarity.ivfpq_residual_index`)."""
     from transporter_spark.operators.similarity import ivfpq_residual_index
-    from transporter_spark.streaming.ingest import redelivery_guard
 
-    store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    spark = batch.sparkSession
-    if store.manifest() is not None:
-        batch = redelivery_guard(batch, store.read(spark, "pq_ids"), id_col)
-        if batch.isEmpty():
-            return False
-    rows = ivfpq_residual_index(
-        batch, centroids, codebooks, m, id_col, vec_col, round_dp
+    return SegmentStore(state_dir).append_epoch(
+        batch,
+        epoch_id,
+        lambda b: {
+            "codes": ivfpq_residual_index(
+                b, centroids, codebooks, m, id_col, vec_col, round_dp
+            ),
+            "pq_ids": b.select(F.col(id_col).alias("id")),
+        },
+        guard=("pq_ids", id_col),
     )
-    segs = {}
-    for table, df in (
-        ("codes", rows),
-        ("pq_ids", batch.select(F.col(id_col).alias("id"))),
-    ):
-        name = store.fresh_name(f"{table}-e{epoch_id}")
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = store.table_segments(table) + [name]
-    store.commit(epoch_id, tables=segs)
-    return True
 
 
 def read_pq_index(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -219,33 +190,22 @@ def pq_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain an embedding stream into the maintained residual-code
-    index (availableNow)."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    index (availableNow). Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: pq_index_batch(
+            b, e, state_dir, centroids, codebooks, **kw
+        ),
+        state_dir, "codes", compact_pq_index, compact_every, checkpoint_dir,
     )
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = pq_index_batch(
-            batch, epoch_id, state_dir, centroids, codebooks, **kw
-        )
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("codes"))
-            >= compact_every
-        ):
-            store = SegmentStore(state_dir)
-            segs = {}
-            for table in _PQ_TABLES:
-                name = store.compact_table(batch.sparkSession, table)
-                if name is not None:
-                    segs[table] = [name]
-            if segs:
-                store.commit(store.last_epoch(), tables=segs)
 
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
+def compact_pq_index(spark: SparkSession, state_dir: str) -> bool:
+    """Fold the code index's epoch segments (the shared list-table
+    fold). Returns False when already compact."""
+    return SegmentStore(state_dir).compact_tables_commit(spark, _PQ_TABLES)
 
 
 def drain_embeddings_pq_index(
@@ -315,45 +275,28 @@ def semdedup_merge_batch(
     A(standing)~B(batch)~C(batch, far from A) keeps C even though a
     single-batch run might have collapsed B and C. threshold/round_dp
     live in manifest meta — a mismatched epoch raises."""
-    from transporter_spark.operators.dedup import cosine_expr
+    from transporter_spark.operators.dedup import _materialize, cosine_expr
     from transporter_spark.operators.similarity import (
         _semdedup_assign,
         _semdedup_label,
     )
 
     store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    meta = store.meta()
-    for name, val in (
-        ("sem_threshold", threshold),
-        ("sem_round_dp", round_dp),
-    ):
-        # strict presence check (review r7): round_dp=None is a LEGAL
-        # stored value (no rounding), so `not in (None, val)` would
-        # conflate it with absent meta and let a later epoch silently
-        # change the rounding — test membership, then exact equality
-        if name in meta and meta[name] != val:
-            raise ValueError(
-                f"semdedup state at {state_dir!r} has {name}={meta[name]}; "
-                f"refusing an epoch at {val} — dedup semantics would "
-                "silently change mid-stream"
-            )
-    spark = batch.sparkSession
     sem_meta = {"sem_threshold": threshold, "sem_round_dp": round_dp}
-    standing = store.read(spark, _SEM_TABLE)
-    # ONE assignment pass per epoch (review r7): the standing-set
-    # rejection and the batch-internal clustering share it (persisted
-    # — the label step references it from three join branches)
-    from transporter_spark.operators.dedup import _materialize
 
-    with_sim = _materialize(
-        _semdedup_assign(batch, centroids, id_col, vec_col, round_dp)
-    )
-    surv = with_sim
-    try:
+    def build(b: DataFrame) -> dict:
+        # presence-checked: round_dp=None is a LEGAL stored value
+        store.check_meta(
+            sem_meta, "dedup semantics would silently change mid-stream"
+        )
+        standing = store.read(b.sparkSession, _SEM_TABLE)
+        # ONE assignment pass per epoch (review r7): the standing-set
+        # rejection and the batch-internal clustering share it (persisted
+        # — the label step references it from three join branches)
+        with_sim = _materialize(
+            _semdedup_assign(b, centroids, id_col, vec_col, round_dp)
+        )
+        surv = with_sim
         if standing is not None:
             s = standing.select("cell", F.col("vec").alias("_svec"))
             pcos = cosine_expr("vec", "_svec")
@@ -365,27 +308,16 @@ def semdedup_merge_batch(
                 .select(id_col)
                 .distinct()
             )
-            surv = _materialize(
-                with_sim.join(dup_ids, id_col, "left_anti")
-            )
+            surv = _materialize(with_sim.join(dup_ids, id_col, "left_anti"))
         pruned = _semdedup_label(
             surv, threshold, id_col, round_dp, max_iter, False
         )
         kept = surv.join(
             pruned.where(F.col("is_canonical")).select(id_col), id_col
         ).select(id_col, "vec", "cell", "centroid_sim")
-        seg = store.fresh_name(f"{_SEM_TABLE}-e{epoch_id}")
-        kept.write.mode("overwrite").parquet(store.seg_path(seg))
-        store.commit(
-            epoch_id,
-            tables={_SEM_TABLE: store.table_segments(_SEM_TABLE) + [seg]},
-            meta=sem_meta,
-        )
-    finally:
-        # materialized frames hold no cache entries; unpersist is a
-        # no-op kept out intentionally (r15)
-        pass
-    return True
+        return {_SEM_TABLE: kept}
+
+    return store.append_epoch(batch, epoch_id, build, meta=sem_meta)
 
 
 def semdedup_sink(
@@ -396,26 +328,16 @@ def semdedup_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain an embedding stream through the continuous semantic-dedup
-    loop (availableNow)."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    loop (availableNow). Returns the number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: semdedup_merge_batch(
+            b, e, state_dir, centroids, threshold, **kw
+        ),
+        state_dir, _SEM_TABLE, compact_semdedup_state, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = semdedup_merge_batch(
-            batch, epoch_id, state_dir, centroids, threshold, **kw
-        )
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments(_SEM_TABLE))
-            >= compact_every
-        ):
-            compact_semdedup_state(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def compact_semdedup_state(spark: SparkSession, state_dir: str) -> bool:
@@ -424,14 +346,7 @@ def compact_semdedup_state(spark: SparkSession, state_dir: str) -> bool:
     meta guard params ride the manifest and survive the commit's
     meta-merge). False when there is no state or it is already
     compact."""
-    store = SegmentStore(state_dir)
-    if store.manifest() is None:
-        return False
-    name = store.compact_table(spark, _SEM_TABLE)
-    if name is None:
-        return False
-    store.commit(store.last_epoch(), tables={_SEM_TABLE: [name]})
-    return True
+    return SegmentStore(state_dir).compact_tables_commit(spark, (_SEM_TABLE,))
 
 
 def read_semdedup_kept(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -466,16 +381,13 @@ def drain_embeddings_semdedup(
     the standing set does not participate in its batch's own
     clustering (module doc — the A~B~C chain keeps C), so the batch
     CC oracle genuinely diverges; raise loudly instead of
-    hash-mismatching. Keyed on the APPLIED count (one kept segment
-    appended per applied epoch; the graded drain never compacts) so a
-    skipped-empty leading batch cannot read as multi-epoch (the r11
-    packing-sink lesson)."""
+    hash-mismatching. Keyed on the drain's APPLIED count, so a
+    skipped-empty leading batch cannot read as multi-epoch."""
     from transporter_spark.streaming.sources import stream_table
 
     state = state_dir or tempfile.mkdtemp(prefix="ts_semdd_") + "/state"
     emb = stream_table(spark, sf_dir, "embeddings")
-    semdedup_sink(emb, state, centroids, threshold, **kw)
-    applied = len(SegmentStore(state).table_segments(_SEM_TABLE))
+    applied = semdedup_sink(emb, state, centroids, threshold, **kw)
     if assert_single_epoch and applied > 1:
         raise RuntimeError(
             f"drain applied {applied} epochs; the single-epoch "

@@ -36,7 +36,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import SegmentStore
+from transporter_spark.streaming.state import (
+    SegmentStore,
+    drain_sink,
+)
 
 _TABLES = ("wc", "doc_ids")
 
@@ -54,31 +57,16 @@ def vocab_batch(
     append — the standing counts are read only for the 8 B/doc id
     guard, and never rewritten."""
     from transporter_spark.operators.text import bpe_word_counts
-    from transporter_spark.streaming.ingest import redelivery_guard
 
-    store = SegmentStore(state_dir)
-    if store.epoch_already_applied(epoch_id):
-        return False
-    if batch.isEmpty():
-        return False
-    spark = batch.sparkSession
-    if store.manifest() is not None:
-        batch = redelivery_guard(
-            batch, store.read(spark, "doc_ids"), id_col
-        )
-        if batch.isEmpty():
-            return False
-    partial = bpe_word_counts(batch, text_col)
-    segs = {}
-    for table, df in (
-        ("wc", partial),
-        ("doc_ids", batch.select(F.col(id_col).alias("id"))),
-    ):
-        name = store.fresh_name(f"{table}-e{epoch_id}")
-        df.write.mode("overwrite").parquet(store.seg_path(name))
-        segs[table] = store.table_segments(table) + [name]
-    store.commit(epoch_id, tables=segs)
-    return True
+    return SegmentStore(state_dir).append_epoch(
+        batch,
+        epoch_id,
+        lambda b: {
+            "wc": bpe_word_counts(b, text_col),
+            "doc_ids": b.select(F.col(id_col).alias("id")),
+        },
+        guard=("doc_ids", id_col),
+    )
 
 
 def compact_vocab_state(spark: SparkSession, state_dir: str) -> bool:
@@ -104,25 +92,16 @@ def vocab_ingest_sink(
     checkpoint_dir: Optional[str] = None,
     compact_every: Optional[int] = None,
     **kw,
-) -> None:
+) -> int:
     """Drain a document stream into the maintained word-frequency
     state (availableNow); learn merges any time with
-    ``bpe_learn_from_counts(read_vocab_counts(...))``."""
-    from transporter_spark.streaming.windows import (
-        run_foreach_batch_available_now,
+    ``bpe_learn_from_counts(read_vocab_counts(...))``. Returns the
+    number of applied epochs."""
+    return drain_sink(
+        stream_df,
+        lambda b, e: vocab_batch(b, e, state_dir, **kw),
+        state_dir, "wc", compact_vocab_state, compact_every, checkpoint_dir,
     )
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        applied = vocab_batch(batch, epoch_id, state_dir, **kw)
-        if (
-            applied
-            and compact_every
-            and len(SegmentStore(state_dir).table_segments("wc"))
-            >= compact_every
-        ):
-            compact_vocab_state(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, apply, checkpoint_dir)
 
 
 def read_vocab_counts(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -156,27 +135,13 @@ def drain_documents_vocab(
     applied. Word counting has no feedback loop and doc-disjoint
     epochs SUM exactly, so the maintained counts over ANY epoch
     structure equal the one-pass batch `bpe_word_counts` bit-for-bit —
-    the multi-epoch drain shares the batch oracles verbatim.
-
-    The applied-epoch count is the ``wc`` segment count (one appended
-    per applied epoch); that equality holds only while the drain never
-    compacts, so ``compact_every`` cannot be combined with a
-    min_epochs requirement."""
+    the multi-epoch drain shares the batch oracles verbatim."""
     from transporter_spark.streaming.sources import (
         assert_epochs_applied,
         chunked_or_single_stream,
     )
 
-    if min_epochs > 1 and kw.get("compact_every"):
-        raise ValueError(
-            "compact_every collapses wc segments, so the applied-epoch "
-            "count (segment count) would undercount; drop min_epochs "
-            "or the compaction"
-        )
     state = state_dir or tempfile.mkdtemp(prefix="ts_vocab_") + "/state"
     docs = chunked_or_single_stream(spark, sf_dir, "documents", num_chunks)
-    vocab_ingest_sink(docs, state, **kw)
-    assert_epochs_applied(
-        len(SegmentStore(state).table_segments("wc")), min_epochs
-    )
+    assert_epochs_applied(vocab_ingest_sink(docs, state, **kw), min_epochs)
     return read_vocab_counts(spark, state)

@@ -8,10 +8,17 @@ from __future__ import annotations
 
 import tempfile
 import uuid
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from transporter_spark.streaming.state import (  # noqa: F401  (the drain's old import path)
+    SEG_KEY,
+    SegmentStore,
+    drain_sink,
+    run_foreach_batch_available_now,
+)
 
 
 def windowed_counts(
@@ -83,22 +90,6 @@ def run_available_now(
     return spark.table(name)
 
 
-def run_foreach_batch_available_now(
-    stream_df: DataFrame,
-    batch_fn: Callable[[DataFrame, int], None],
-    checkpoint_dir: Optional[str] = None,
-) -> None:
-    """Drain a stream through a foreachBatch sink (CDC apply path)."""
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ts_ckpt_")
-    q = (
-        stream_df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def incremental_rollup_sink(
     stream_df: DataFrame,
     state_dir: str,
@@ -107,7 +98,7 @@ def incremental_rollup_sink(
     keys: tuple = (),
     value: str = "value",
     compact_every: Optional[int] = None,
-) -> None:
+) -> int:
     """Continuous-aggregate maintenance (the hypertable refresh loop,
     batch twin: operators/temporal.rollup_lattice): each micro-batch's
     rows aggregate to HOURLY decimal partials, merged into a persistent
@@ -124,7 +115,8 @@ def incremental_rollup_sink(
     streaming/state.SegmentStore) — the classic delta-merge, with
     per-epoch IO ∝ #touched hours, never O(state). ``compact_every=N``
     folds the log in-slot when it reaches N segments (or call
-    ``compact_rollup_state`` offline between runs).
+    ``compact_rollup_state`` offline between runs). Returns the number
+    of applied epochs.
 
     Replay safety: foreachBatch is at-least-once — a crash after the
     state commit but before the checkpoint commit re-delivers the same
@@ -141,19 +133,11 @@ def incremental_rollup_sink(
     are replay-proof on their own because their merges are idempotent
     per key.
     """
-
-    def merge(batch: DataFrame, epoch_id: int) -> None:
-        applied = rollup_merge_batch(batch, epoch_id, state_dir, ts_col, keys, value)
-        if applied and compact_every:
-            from transporter_spark.streaming.state import SegmentStore
-
-            segs = set(SegmentStore(state_dir).keyed_mapping("hourly").values())
-            # in-slot fold at the segment bound (single-writer by
-            # construction — same schedule as the dedup and CDC sinks)
-            if len(segs) >= compact_every:
-                compact_rollup_state(batch.sparkSession, state_dir)
-
-    run_foreach_batch_available_now(stream_df, merge, checkpoint_dir)
+    return drain_sink(
+        stream_df,
+        lambda b, e: rollup_merge_batch(b, e, state_dir, ts_col, keys, value),
+        state_dir, "hourly", compact_rollup_state, compact_every, checkpoint_dir,
+    )
 
 
 # hour keys are the hour's epoch seconds (instant-based, timezone-
@@ -182,8 +166,6 @@ def rollup_merge_batch(
     manifest remaps the touched keys atomically. The touched-hour
     key list is a driver-side collect — bounded by the batch's time
     span (#hours), metadata-sized, never row data."""
-    from transporter_spark.streaming.state import SEG_KEY, SegmentStore
-
     keys_l = list(keys)
     b = batch
     if dict(b.dtypes).get(ts_col) == "timestamp_ntz":
@@ -227,8 +209,6 @@ def read_rollup_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained hourly partials (current rows only — stale rows
     left behind in partially-remapped segments are filtered out by the
     keyed read)."""
-    from transporter_spark.streaming.state import SEG_KEY, SegmentStore
-
     hourly = SegmentStore(state_dir).read_keyed(spark, "hourly")
     if hourly is None:
         raise FileNotFoundError(
@@ -242,8 +222,6 @@ def compact_rollup_state(spark: SparkSession, state_dir: str) -> bool:
     """Merge the hourly state's segments into one, dropping stale rows
     for good (same discipline as ingest.compact_ingest_state). Returns
     False when already compact."""
-    from transporter_spark.streaming.state import SegmentStore
-
     return SegmentStore(state_dir).compact_keyed_commit(spark, "hourly")
 
 
