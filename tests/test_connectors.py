@@ -4,6 +4,7 @@ jsonl_tail streaming DataSource (live), namespace catalog expansion."""
 from __future__ import annotations
 
 import json
+import os
 import time
 
 import pytest
@@ -57,6 +58,31 @@ def test_expand_namespaces_skips_system_and_filters():
 def test_list_dir_namespaces(sf_dir):
     names = list_dir_namespaces(sf_dir)
     assert "lineitem" in names and "events" in names
+
+
+def test_dir_source_lists_only_parquet_namespaces(spark, sf_dir, tmp_path):
+    """``read_table`` reads only ``{ns}.parquet``: a stray csv/json file
+    next to the tables is not a namespace, and a ``dir`` copy over the
+    directory runs instead of failing on a missing path."""
+    from transporter_spark.plans import Pipeline
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for t in ("nation", "region"):
+        os.symlink(os.path.join(sf_dir, f"{t}.parquet"), src / f"{t}.parquet")
+    (src / "notes.csv").write_text("a,b\n1,2\n")
+    (src / "extra.jsonl").write_text('{"a": 1}\n')
+    assert list_dir_namespaces(str(src)) == ["nation", "region"]
+    event = (
+        Pipeline("dir-copy")
+        .source("dir", path=str(src))
+        .save("jsonl", path=str(tmp_path / "out") + "/{ns}")
+        .run(spark)
+    )
+    assert set(event["rows"]) == {"nation -> jsonl[0]", "region -> jsonl[0]"}
+    assert event["rows"]["nation -> jsonl[0]"] == spark.read.parquet(
+        os.path.join(sf_dir, "nation.parquet")
+    ).count()
 
 
 def test_jsonl_tail_datasource_streams_appends(spark, tmp_path):

@@ -248,3 +248,108 @@ def test_epoch_slot_contract(spark, tmp_path, family):
     assert drain() == 0
     assert open(SegmentStore(drained).manifest_path, "rb").read() == manifest
     assert SegmentStore(drained).log_size(log_table) == 3
+
+
+# -- one source evaluation per epoch ---------------------------------------
+
+
+def test_append_epoch_evaluates_its_source_once(spark, tmp_path):
+    """A drain through ``cdc_upsert_sink``: a Python UDF in the stream's
+    plan records each row it evaluates, and the epoch's actions (empty
+    skip, segment write) must evaluate each source row exactly once —
+    the batch is persisted for the step. The count is one byte per
+    evaluation appended to a file, not an accumulator: an action that
+    stops early (``isEmpty``'s limit) drops its Python worker's
+    accumulator updates, so an accumulator misses exactly the extra
+    evaluation this test is about."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from transporter_spark.envelope import to_envelope
+    from transporter_spark.streaming.cdc import cdc_upsert_sink, read_cdc_table
+    from transporter_spark.streaming.state import run_foreach_batch_available_now
+
+    rows = [r for i in range(3) for r in _epoch_rows(i)]
+    src = tmp_path / "src"
+    src.mkdir()
+    schema = pa.schema(
+        [("id", pa.int64()), ("ts", pa.timestamp("us", tz="UTC")),
+         ("value", pa.float64()), ("text", pa.string())]
+    )
+    pq.write_table(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    ), str(src / "f0.parquet"), row_group_size=3)
+
+    log = str(tmp_path / "evaluations")
+
+    def record(v):
+        with open(log, "ab") as fh:
+            fh.write(b".")
+        return v is not None
+
+    # a filter, so no action's column pruning can drop the UDF
+    counted = F.udf(record, "boolean").asNondeterministic()
+    stream = (
+        spark.readStream.schema(_ROW_SCHEMA).parquet(str(src))
+        .filter(counted("id"))
+    )
+    state = str(tmp_path / "state")
+    applied = run_foreach_batch_available_now(
+        to_envelope(stream, ns="t", ts_col="ts", payload_cols=["id", "value"]),
+        cdc_upsert_sink(spark, state, keys=["id"]),
+        str(tmp_path / "ckpt"),
+    )
+    assert applied == 1
+    assert read_cdc_table(spark, state).count() == len(rows)
+    assert os.path.getsize(log) == len(rows)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_append_epoch_failure_commits_nothing_and_releases_the_batch(
+    spark, tmp_path
+):
+    """A build that fails mid-epoch (its second segment write raises)
+    propagates the error, leaves MANIFEST.json byte-identical and no
+    persisted frame behind; the replay of that epoch then applies."""
+    from pyspark.sql import functions as F
+
+    spark.catalog.clearCache()  # the session is shared by the suite
+    store = SegmentStore(str(tmp_path / "st"))
+    frame = lambda i: spark.createDataFrame(_epoch_rows(i), _ROW_SCHEMA)
+    ok = lambda b: {"a": b, "b": b.select("id")}
+    assert store.append_epoch(frame(0), 0, ok) is True
+    manifest = open(store.manifest_path, "rb").read()
+
+    def failing(b):
+        bad = b.select(
+            F.when(F.col("id") >= 0, F.raise_error(F.lit("boom in build")))
+            .otherwise(F.col("id")).alias("id")
+        )
+        return {"a": b, "b": bad}
+
+    with pytest.raises(Exception, match="boom in build"):
+        store.append_epoch(frame(1), 1, failing)
+    assert open(store.manifest_path, "rb").read() == manifest
+    assert _cache_is_empty(spark)
+    assert store.append_epoch(frame(1), 1, ok) is True
+    assert store.table_segments("b") == ["b-e0", "b-e1"]
+    assert sorted(r.id for r in store.read(spark, "b").collect()) == [
+        0, 1, 2, 10, 11, 12
+    ]
+    assert _cache_is_empty(spark)
+
+
+def test_append_epoch_empty_epoch_commits_nothing(spark, tmp_path):
+    """An empty epoch skips before ``build`` runs, commits nothing and
+    releases its persisted batch."""
+    spark.catalog.clearCache()  # the session is shared by the suite
+    store = SegmentStore(str(tmp_path / "st"))
+    built = []
+    empty = spark.createDataFrame([], _ROW_SCHEMA)
+    assert store.append_epoch(empty, 0, lambda b: built.append(b)) is False
+    assert built == [] and store.manifest() is None
+    assert _cache_is_empty(spark)

@@ -391,6 +391,80 @@ def test_cdc_sink_in_slot_compaction_bounds_segments(spark, tmp_path):
     }
 
 
+def test_cdc_read_with_recorded_schema_equals_inferred_read(spark, tmp_path):
+    """The sink records the delta's schema in the manifest meta and the
+    readers pass it to Spark (no schema-inference job). Differential:
+    over 3 epochs, a compaction and one more epoch, the given-schema
+    read equals the inferred read of the same segments (a copy of the
+    state whose manifest lacks ``schema``) in schema, column order and
+    rows. A later epoch with another schema records ``schema: None``
+    for good, and reads fall back to inference."""
+    import json
+    import shutil
+    from datetime import datetime
+
+    from transporter_spark.streaming.cdc import (
+        cdc_upsert_sink,
+        compact_cdc_table,
+        read_cdc_state,
+        read_cdc_table,
+    )
+    from transporter_spark.streaming.state import SegmentStore
+
+    t = lambda d: datetime(2024, 1, d)
+    epochs = [
+        [("insert", t(1), 1, "a"), ("insert", t(1), 2, "b")],
+        [("update", t(2), 1, "a2"), ("insert", t(2), 3, "c")],
+        [("delete", t(3), 2, None), ("update", t(3), 3, "c2")],
+        [("insert", t(4), 4, "d"), ("update", t(4), 1, "a4")],
+    ]
+    target = str(tmp_path / "cdc")
+    sink = cdc_upsert_sink(spark, target, keys=["user_id"])
+    store = SegmentStore(target)
+    for e in (0, 1, 2):
+        assert sink(_env(spark, epochs[e]), e)
+    assert compact_cdc_table(spark, target)
+    assert sink(_env(spark, epochs[3]), 3)
+    recorded = store.meta()["schema"]
+    assert recorded is not None
+
+    inferred = str(tmp_path / "inferred")
+    shutil.copytree(target, inferred)
+    m = json.load(open(SegmentStore(inferred).manifest_path))
+    del m["meta"]["schema"]  # a manifest written before the key existed
+    json.dump(m, open(SegmentStore(inferred).manifest_path, "w"))
+
+    for read in (read_cdc_state, read_cdc_table):
+        given, plain = read(spark, target), read(spark, inferred)
+        assert given.schema == plain.schema
+        assert given.columns == plain.columns
+        assert sorted(given.collect()) == sorted(plain.collect())
+    assert sorted(
+        (r.user_id, r.v) for r in read_cdc_table(spark, target).collect()
+    ) == [(1, "a4"), (3, "c2"), (4, "d")]
+
+    # an epoch on the schema-less state stays schema-less
+    assert cdc_upsert_sink(spark, inferred, keys=["user_id"])(
+        _env(spark, [("insert", t(5), 5, "e")]), 4
+    )
+    assert SegmentStore(inferred).meta()["schema"] is None
+    assert read_cdc_table(spark, inferred).count() == 4
+
+    # a payload with another schema: recorded None for good
+    wide = spark.createDataFrame(
+        [("insert", t(5), 5, "e", 1.5)],
+        "op string, ts timestamp, user_id long, v string, w double",
+    ).select("op", "ts", F.lit("t").alias("ns"),
+             F.struct("user_id", "v", "ts", "w").alias("data"))
+    assert sink(wide, 4)
+    assert store.meta()["schema"] is None
+    assert sink(_env(spark, [("insert", t(6), 6, "f")]), 5)
+    assert store.meta()["schema"] is None
+    assert {r.user_id for r in read_cdc_table(spark, target).collect()} == {
+        1, 3, 4, 5, 6
+    }
+
+
 def _centroids(spark, sf_dir):
     from transporter_spark.sources.files import read_table
 

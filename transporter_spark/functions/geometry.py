@@ -128,9 +128,3 @@ def wkb_to_wkt(col: str, srid_prefix: bool = True) -> Column:
         return s.map(lambda v: local_parser(v, srid_prefix))
 
     return _decode(F.col(col))
-
-
-def geom_select_expr(column: str, quote: Callable[[str], str]) -> str:
-    """Writer-side parity: wrap a WKT column in ST_GeomFromText for the
-    INSERT..SELECT upsert statement (mysql/writer.go:66-96)."""
-    return f"ST_GeomFromText({quote(column)})"

@@ -97,9 +97,18 @@ def _session_uuid(spark: SparkSession) -> str:
 @contextmanager
 def scoped_confs(spark: SparkSession, confs: dict):
     """Set several session confs for a synchronous block and restore
-    them on exit — the generalized form of `scoped_shuffle_partitions`
-    (same holder discipline: one thread per session, LIFO nesting
-    allowed, concurrent cross-thread scopes raise)."""
+    them on exit.
+
+    `spark.conf` is SESSION-scoped but shared across THREADS, so two
+    concurrent scopes on one session could restore each other's values
+    and permanently change the session's settings. This manager makes
+    that loud instead of silent: a second thread scoping the SAME
+    session raises RuntimeError (run concurrent drains on
+    `spark.newSession()` — shares the context, scopes the conf);
+    same-thread nesting (e.g. the connected-components loop inside an
+    ingest epoch) is well-formed LIFO set/restore and stays allowed.
+    A conf get/set failure (stopped session) releases the holder slot
+    instead of leaking it for this session UUID."""
     key = _session_uuid(spark)
     me = threading.get_ident()
     with _SCOPE_LOCK:
@@ -143,57 +152,10 @@ def scoped_confs(spark: SparkSession, confs: dict):
             _release()
 
 
-@contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Set ``spark.sql.shuffle.partitions`` for a synchronous block and
-    restore it on exit — the scoping every drain/loop in the engine
-    uses (foreachBatch plans and streaming state stores get no AQE
-    coalescing, so a vanilla session's 200 partitions pay ~200 task
-    launches per stage regardless of data volume).
-
-    `spark.conf` is SESSION-scoped but shared across THREADS, so two
-    concurrent scopes on one session could restore each other's value
-    and permanently change the session's parallelism. This manager
-    makes that loud instead of silent: a second thread scoping the
-    SAME session raises RuntimeError (run concurrent drains on
-    `spark.newSession()` — shares the context, scopes the conf);
-    same-thread nesting (e.g. the connected-components loop inside an
-    ingest epoch) is well-formed LIFO set/restore and stays allowed.
-    """
-    key = _session_uuid(spark)
-    me = threading.get_ident()
-    with _SCOPE_LOCK:
-        holder, depth = _SCOPE_HOLDERS.get(key, (None, 0))
-        if holder is not None and holder != me:
-            raise RuntimeError(
-                "concurrent shuffle-partition scopes on one SparkSession: "
-                "another thread is mid-drain on this session; run "
-                "concurrent drains on spark.newSession() (same "
-                "SparkContext, independent conf) instead"
-            )
-        _SCOPE_HOLDERS[key] = (me, depth + 1)
-
-    def _release() -> None:
-        with _SCOPE_LOCK:
-            holder, depth = _SCOPE_HOLDERS[key]
-            if depth <= 1:
-                del _SCOPE_HOLDERS[key]
-            else:
-                _SCOPE_HOLDERS[key] = (holder, depth - 1)
-
-    # conf get/set can throw (stopped session): keep the holder entry
-    # and the conf mutation in one try so a failure releases the slot
-    # instead of leaking it forever for this session UUID (ADVICE r7)
-    try:
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    except BaseException:
-        _release()
-        raise
-    try:
-        yield
-    finally:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-        finally:
-            _release()
+    """``scoped_confs`` for ``spark.sql.shuffle.partitions`` alone — the
+    scoping every drain/loop in the engine uses (foreachBatch plans and
+    streaming state stores get no AQE coalescing, so a vanilla
+    session's 200 partitions pay ~200 task launches per stage
+    regardless of data volume)."""
+    return scoped_confs(spark, {"spark.sql.shuffle.partitions": n})

@@ -33,11 +33,12 @@ def expand_namespaces(candidates: Sequence[str], pattern: str) -> List[str]:
 
 
 def list_dir_namespaces(sf_dir: str) -> List[str]:
-    """Candidate namespaces of a file directory: one per parquet/json file."""
+    """Candidate namespaces of a file directory: one per ``.parquet``
+    entry, the only format ``files.read_table`` reads."""
     out = []
     for entry in sorted(os.listdir(sf_dir)):
         base, ext = os.path.splitext(entry)
-        if ext in (".parquet", ".json", ".jsonl", ".csv"):
+        if ext == ".parquet":
             out.append(base)
     return out
 

@@ -163,16 +163,18 @@ def cdc_upsert_sink(
     from transporter_spark.streaming.state import SegmentStore, epoch_sink
 
     def apply(batch: DataFrame, epoch_id: int) -> bool:
-        return SegmentStore(table_path).append_epoch(
-            batch,
-            epoch_id,
-            lambda b: {
-                "delta": apply_cdc_batch(None, b, keys, order_cols).withColumn(
-                    "_epoch", F.lit(int(epoch_id))
-                )
-            },
-            meta={"keys": list(keys), "order_cols": list(order_cols or [])},
-        )
+        store = SegmentStore(table_path)
+        meta = {"keys": list(keys), "order_cols": list(order_cols or [])}
+
+        def build(b: DataFrame) -> dict:
+            delta = apply_cdc_batch(None, b, keys, order_cols).withColumn(
+                "_epoch", F.lit(int(epoch_id))
+            )
+            # committed with keys/order_cols in the epoch's one commit
+            meta["schema"] = _recorded_schema(store, delta)
+            return {"delta": delta}
+
+        return store.append_epoch(batch, epoch_id, build, meta=meta)
 
     # folds run on the caller's session, not the batch's streaming
     # clone (which has AQE off); the compactor is looked up per call,
@@ -186,6 +188,19 @@ def cdc_upsert_sink(
     )
 
 
+def _recorded_schema(store, delta: DataFrame) -> Optional[str]:
+    """The ``schema`` meta an epoch commits: the delta's schema (from
+    the lazy plan, no Spark job) while every epoch of the state has
+    written that same schema, else None for good — readers then infer
+    it from the footers. A state whose first epochs predate the key
+    never gets one."""
+    schema = delta.schema.json()
+    prev = store.meta()
+    if "schema" in prev:
+        return schema if prev["schema"] == schema else None
+    return None if store.table_segments("delta") else schema
+
+
 def read_cdc_state(spark: SparkSession, table_path: str) -> DataFrame:
     """Merge-on-read of the CDC segment log: newest row per key across
     all epoch segments, INCLUDING tombstones (the maintained-state
@@ -194,7 +209,7 @@ def read_cdc_state(spark: SparkSession, table_path: str) -> DataFrame:
 
     store = SegmentStore(table_path)
     meta = store.meta()
-    segs = store.read(spark, "delta")
+    segs = store.read(spark, "delta", schema_key="schema")
     if segs is None or "keys" not in meta:
         raise FileNotFoundError(
             f"no committed CDC state at {table_path!r}: the sink has "

@@ -41,7 +41,10 @@ Two table shapes:
 The epoch slot, in one place: ``append_epoch`` (list tables) and
 ``keyed_delta_merge`` (keyed tables) run replay guard -> empty-batch
 skip -> the family's transform -> one ``"{table}-e{epoch}"`` segment
-per table -> one atomic commit, and return whether the epoch applied;
+per table -> one atomic commit, and return whether the epoch applied.
+``append_epoch`` persists the batch for the step and unpersists it at
+the end, so every action of the epoch reads the source once
+(``keyed_delta_merge`` checkpoints its partial once for the same end);
 ``epoch_sink`` adds the one ``compact_every`` rule; and
 ``run_foreach_batch_available_now`` drains a stream through it and
 returns the applied-epoch count. A family module keeps only its
@@ -63,6 +66,7 @@ from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "MANIFEST.json"
 SEGMENTS = "segments"
@@ -136,12 +140,25 @@ class SegmentStore:
     def table_paths(self, table: str) -> List[str]:
         return [self.seg_path(s) for s in self.table_segments(table)]
 
-    def read(self, spark: SparkSession, table: str) -> Optional[DataFrame]:
-        """Union of a list table's live segments (None when absent)."""
-        paths = self.table_paths(table)
-        if not paths:
+    def read(
+        self, spark: SparkSession, table: str, schema_key: Optional[str] = None
+    ) -> Optional[DataFrame]:
+        """Union of a list table's live segments (None when absent).
+        ``schema_key`` names a meta entry holding the table's
+        ``StructType.json()``; when the entry is set, the segments are
+        read with it, which skips the job Spark otherwise runs to infer
+        the schema from a footer. Segments and schema come from one
+        manifest snapshot, so a concurrent commit cannot pair them
+        wrongly."""
+        m = self.manifest() or {}
+        segs = m.get("tables", {}).get(table, [])
+        if not segs:
             return None
-        return spark.read.parquet(*paths)
+        reader = spark.read
+        schema = m.get("meta", {}).get(schema_key) if schema_key else None
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(*[self.seg_path(s) for s in segs])
 
     # -- keyed tables ---------------------------------------------------
     def keyed_mapping(self, table: str) -> Dict[str, str]:
@@ -343,35 +360,47 @@ class SegmentStore:
         segment (carried state: tails, open bins, counters); the rest
         append to their segment log.
 
+        One source evaluation per epoch: after the replay guard the
+        batch is persisted, so the empty skips, the guard's anti-join,
+        any action ``build`` runs on it and every segment write read
+        the source once; it is unpersisted when the step ends, applied,
+        skipped or raised. Without it each action re-runs the stream's
+        reader and parse (a foreachBatch frame is not cached).
+
         Deterministic names are safe: a crashed attempt's orphan for
         the same epoch is overwritten on replay, and ``commit`` never
         purges a name its new manifest references."""
         if self.epoch_already_applied(epoch_id):
             return False
-        if batch.isEmpty():
-            return False
-        if guard is not None:
-            id_table, id_col = guard
-            seen = self.read(batch.sparkSession, id_table)
-            if seen is not None:
-                batch = redelivery_guard(batch, seen, id_col)
-                if batch.isEmpty():
-                    return False
-        frames = build(batch)
-        if frames is None:
-            return False
-        tables = {}
-        for table, df in frames.items():
-            if df is None:
-                continue
-            name = f"{table}-e{epoch_id}"
-            df.write.mode("overwrite").parquet(self.seg_path(name))
-            tables[table] = (
-                [name] if table in replace
-                else self.table_segments(table) + [name]
-            )
-        self.commit(epoch_id, tables=tables, meta=meta)
-        return True
+        batch.persist()
+        try:
+            if batch.isEmpty():
+                return False
+            rows = batch
+            if guard is not None:
+                id_table, id_col = guard
+                seen = self.read(rows.sparkSession, id_table)
+                if seen is not None:
+                    rows = redelivery_guard(rows, seen, id_col)
+                    if rows.isEmpty():
+                        return False
+            frames = build(rows)
+            if frames is None:
+                return False
+            tables = {}
+            for table, df in frames.items():
+                if df is None:
+                    continue
+                name = f"{table}-e{epoch_id}"
+                df.write.mode("overwrite").parquet(self.seg_path(name))
+                tables[table] = (
+                    [name] if table in replace
+                    else self.table_segments(table) + [name]
+                )
+            self.commit(epoch_id, tables=tables, meta=meta)
+            return True
+        finally:
+            batch.unpersist()
 
     # -- compaction -----------------------------------------------------
     def log_size(self, table: str) -> int:
