@@ -123,8 +123,15 @@ def test_describe_resolves_without_spark():
 
 
 def test_about_lists_registered_surface():
+    from transporter_spark.plans.pipeline import SINKS, SOURCES
+
     info = about()
     assert "jsonl" in info["sources"] and "jsonl" in info["sinks"]
+    # the runner's two kind tables, stream-only kinds included
+    assert info["sources"] == list(SOURCES) and info["sinks"] == list(SINKS)
+    assert "jsonl_tail" in info["sources"] and "cdc" in info["sinks"]
+    assert about("jsonl")["roles"] == ["source", "sink"]
+    assert about("cdc")["roles"] == ["sink"]
     for op in ("pick", "omit", "rename", "skip", "opfilter", "remap", "goja", "js"):
         assert op in info["operators"], op
     doc = about("pick")
@@ -289,3 +296,27 @@ def test_cli_state_compact_dispatches_span_family(
     assert sorted(map(tuple, read_pruned_corpus(spark, state).collect())) == pruned_before
     assert main(["state", "compact", state]) == 0
     assert "already compact" in capsys.readouterr().out
+
+
+def test_cli_run_streaming_tail_sync(tmp_path, spark, monkeypatch, capsys):
+    """`run` on a config with a `streaming` block covers tail sync: a
+    jsonl_tail source saved to a cdc sink equals a plain-Python
+    last-writer-wins, and the exit event counts the feed's changes."""
+    from tests.test_pipeline import _TAIL_SCHEMA, _append, _cdc_rows, _lww, _tail_lines
+
+    feed = str(tmp_path / "feed.jsonl")
+    lines = _tail_lines(0, 20)
+    _append(feed, lines)
+    cfg = {
+        "name": "tail",
+        "source": {"kind": "jsonl_tail", "path": feed, "ns": "cdc", "schema": _TAIL_SCHEMA},
+        "steps": [{"save": {"kind": "cdc", "path": str(tmp_path / "state"), "keys": ["id"]}}],
+        "streaming": {"checkpoint": str(tmp_path / "ckpt")},
+    }
+    path = tmp_path / "pipeline.json"
+    path.write_text(json.dumps(cfg))
+    monkeypatch.setattr("transporter_spark.cli._get_spark", lambda: spark)
+    assert main(["run", str(path)]) == 0
+    event = json.loads(capsys.readouterr().out)
+    assert event["rows"] == {"cdc -> cdc[0]": 20}
+    assert _cdc_rows(spark, str(tmp_path / "state")) == _lww(lines)

@@ -216,3 +216,192 @@ def test_run_stream_fanout_separate_offsets(spark, tmp_path):
     import os
 
     assert len(os.listdir(tmp_path / "ckpt")) == 2  # one offset dir per edge
+
+
+def _read_out(spark, kind, path):
+    return getattr(spark.read, "json" if kind == "jsonl" else "parquet")(path)
+
+
+@pytest.mark.parametrize("kind", ["jsonl", "parquet"])
+def test_stream_file_edge_replayed_epoch_adds_no_rows(spark, tmp_path, kind):
+    """A streaming file edge publishes each epoch under epoch-named
+    files: calling the edge's foreachBatch function twice with one epoch
+    id (a replay after a crash) leaves that epoch's rows once, and a
+    real Spark replay (last commit deleted from the checkpoint) adds
+    nothing either."""
+    import json as _json
+
+    from transporter_spark.envelope import to_envelope
+    from transporter_spark.plans.pipeline import write_edge
+
+    out = str(tmp_path / "out")
+    edge = Pipeline("replay").save(kind, path=out)._sinks[0]
+
+    def batch(lo, hi):
+        return to_envelope(spark.range(lo, hi).withColumnRenamed("id", "k"), ns="t")
+
+    write_edge(spark, batch(0, 5), "t", edge, 0)
+    write_edge(spark, batch(0, 5), "t", edge, 0)  # replay: new part-file names
+    assert sorted(r.k for r in _read_out(spark, kind, out).collect()) == list(range(5))
+    write_edge(spark, batch(5, 8), "t", edge, 1)
+    assert sorted(r.k for r in _read_out(spark, kind, out).collect()) == list(range(8))
+    data = [n for n in os.listdir(out) if not n.startswith((".", "_"))]
+    assert data and all(n.startswith(("e0-", "e1-")) for n in data)
+    assert not [n for n in os.listdir(out) if n.startswith("_stage")]
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.jsonl").write_text(
+        "\n".join(_json.dumps({"k": i}) for i in range(6)) + "\n"
+    )
+    p = Pipeline("spark-replay").source("jsonl", path=str(src), ns="rows")
+    p.save(kind, path=str(tmp_path / "s"))
+    ckpt = tmp_path / "ckpt"
+    assert p.run_stream(spark, str(ckpt))["rows"] == {f"rows -> {kind}[0]": 6}
+    commits = ckpt / f"rows_{kind}_0" / "commits"
+    for name in ("0", ".0.crc"):
+        (commits / name).unlink(missing_ok=True)
+    assert p.run_stream(spark, str(ckpt))["rows"] == {f"rows -> {kind}[0]": 6}
+    back = _read_out(spark, kind, str(tmp_path / "s"))
+    assert sorted(r.k for r in back.collect()) == list(range(6))
+
+
+_TAIL_SCHEMA = "id BIGINT, v BIGINT"
+
+
+def _tail_lines(start, n):
+    """n changes over 5 keys, emitted in swapped pairs (out of event-time
+    order); every 4th change is a delete."""
+    from datetime import datetime, timedelta
+
+    import json as _json
+
+    lines = []
+    for s in range(start, start + n):
+        ts = (datetime(2024, 1, 1) + timedelta(seconds=s)).isoformat(sep=" ")
+        op = "delete" if s % 4 == 3 else ("insert" if s < 5 else "update")
+        lines.append(_json.dumps({"op": op, "ts": ts, "data": {"id": s * 3 % 5, "v": s}}))
+    for i in range(0, len(lines) - 1, 2):
+        lines[i], lines[i + 1] = lines[i + 1], lines[i]
+    return lines
+
+
+def _lww(lines):
+    """Plain-Python last-writer-wins over the change lines."""
+    import json as _json
+
+    newest = {}
+    for line in lines:
+        c = _json.loads(line)
+        k = c["data"]["id"]
+        if k not in newest or c["ts"] > newest[k]["ts"]:
+            newest[k] = c
+    return sorted((k, c["data"]["v"]) for k, c in newest.items() if c["op"] != "delete")
+
+
+def _append(feed, lines):
+    with open(feed, "a") as fh:
+        fh.write("\n".join(lines) + "\n")
+
+
+def _cdc_rows(spark, path):
+    from transporter_spark.streaming.cdc import read_cdc_table
+
+    return sorted((r.id, r.v) for r in read_cdc_table(spark, path).collect())
+
+
+def test_run_stream_tail_sync_spec_equals_hand_wired_and_lww(spark, tmp_path):
+    """``source("jsonl_tail").save("cdc")`` through ``run_stream`` gives
+    the same table as the hand-wired jsonl_tail -> to_envelope ->
+    cdc_upsert_sink query and as a plain-Python LWW; a poison line is
+    skipped; a second run on the same checkpoint after more lines are
+    appended moves only those lines."""
+    from transporter_spark.envelope import to_envelope
+    from transporter_spark.sources.datasource import JsonlTailDataSource
+    from transporter_spark.streaming.cdc import cdc_upsert_sink
+    from transporter_spark.streaming.state import run_foreach_batch_available_now
+
+    feed = str(tmp_path / "feed.jsonl")
+    first = _tail_lines(0, 30)
+    _append(feed, first[:10] + ["NOT JSON AT ALL"] + first[10:])
+
+    def spec():
+        return (Pipeline("tail")
+                .source("jsonl_tail", path=feed, ns="cdc", schema=_TAIL_SCHEMA)
+                .save("cdc", path=str(tmp_path / "state" / "{ns}"), keys=["id"]))
+
+    ev = spec().run_stream(spark, str(tmp_path / "ckpt"))
+    assert ev["rows"] == {"cdc -> cdc[0]": 30}  # the poison line is not a row
+    state = str(tmp_path / "state" / "cdc")
+    assert _cdc_rows(spark, state) == _lww(first)
+
+    spark.dataSource.register(JsonlTailDataSource)
+    raw = spark.readStream.format("jsonl_tail").option("path", feed).option("ns", "cdc").load()
+    parsed = raw.select(
+        "op", "ts", F.from_json("json", _TAIL_SCHEMA).alias("d")
+    ).select("op", "ts", "d.*")
+    env = to_envelope(parsed, ns="cdc", ts_col="ts", op_col="op")
+    by_hand = str(tmp_path / "by_hand")
+    run_foreach_batch_available_now(
+        env, cdc_upsert_sink(spark, by_hand, keys=["id"]), str(tmp_path / "ckpt_hand")
+    )
+    assert _cdc_rows(spark, by_hand) == _cdc_rows(spark, state)
+
+    more = _tail_lines(30, 12)
+    _append(feed, more)
+    ev = spec().run_stream(spark, str(tmp_path / "ckpt"))
+    assert ev["rows"] == {"cdc -> cdc[0]": 12}  # NOT 42: resume, not re-copy
+    assert _cdc_rows(spark, state) == _lww(first + more)
+
+
+def test_kind_in_wrong_mode_raises_before_any_query(spark, sf_dir, tmp_path):
+    """Stream-only kinds (jsonl_tail, cdc) in ``run`` and batch-only
+    kinds (dataframe, jdbc, memory) in ``run_stream`` raise before any
+    edge is written or any query starts; so does an unknown kind."""
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    dir_src = ("dir", {"path": sf_dir, "namespaces": "^nation$"})
+
+    def spec(source, *sinks):
+        p = Pipeline("modes").source(source[0], **source[1])
+        for kind, cfg in sinks:
+            p.save(kind, **cfg)
+        return p
+
+    cases = [
+        ("run", spec(dir_src, ("jsonl", {"path": out}), ("cdc", {"path": out, "keys": ["id"]})),
+         "no batch sink kind 'cdc'"),
+        ("run", spec(("jsonl_tail", {"path": out, "schema": "id BIGINT"}),
+                     ("jsonl", {"path": out})), "no batch source kind 'jsonl_tail'"),
+        ("run", spec(dir_src, ("bogus", {})), "no batch sink kind 'bogus'"),
+        ("run_stream", spec(dir_src, ("jsonl", {"path": out}), ("memory", {})),
+         "no stream sink kind 'memory'"),
+        ("run_stream", spec(dir_src, ("jdbc", {"url": "jdbc:x"})), "no stream sink kind 'jdbc'"),
+        ("run_stream", spec(("dataframe", {"df": spark.range(3)}), ("jsonl", {"path": out})),
+         "no stream source kind 'dataframe'"),
+        ("run_stream", spec(("jdbc", {"url": "jdbc:x", "table": "t"}), ("jsonl", {"path": out})),
+         "no stream source kind 'jdbc'"),
+    ]
+    active = len(spark.streams.active)
+    for method, p, msg in cases:
+        args = (spark, ckpt) if method == "run_stream" else (spark,)
+        with pytest.raises(ValueError, match=msg):
+            getattr(p, method)(*args)
+        assert not os.path.exists(out) and not os.path.exists(ckpt)
+        assert len(spark.streams.active) == active
+
+
+def test_dir_source_pattern_matching_nothing_raises(spark, sf_dir, tmp_path):
+    """A ``dir`` namespaces pattern that selects no table raises in both
+    modes, naming the pattern and the namespaces it was matched against,
+    instead of running zero edges."""
+    from transporter_spark.sources.catalog import list_dir_namespaces
+
+    p = (Pipeline("nothing")
+         .source("dir", path=sf_dir, namespaces="^no_such_table$")
+         .save("jsonl", path=str(tmp_path / "out") + "/{ns}"))
+    for run in (lambda: p.run(spark), lambda: p.run_stream(spark, str(tmp_path / "ckpt"))):
+        with pytest.raises(ValueError, match=r"\^no_such_table\$") as err:
+            run()
+        assert list_dir_namespaces(sf_dir)[0] in str(err.value)
+    assert not os.path.exists(tmp_path / "out")

@@ -465,6 +465,76 @@ def test_cdc_read_with_recorded_schema_equals_inferred_read(spark, tmp_path):
     }
 
 
+def test_cdc_widened_epoch_keeps_its_columns(spark, tmp_path):
+    """Epochs that wrote different payload schemas are read with a
+    merged schema: a column added by a later epoch survives, null for
+    the keys never updated after the widening, in the live read, the
+    fold and the read after the fold. A type conflict between epochs
+    raises instead of dropping a column."""
+    from datetime import datetime
+
+    from transporter_spark.streaming.cdc import (
+        cdc_upsert_sink,
+        compact_cdc_table,
+        read_cdc_table,
+    )
+
+    def wide(rows, w_type="double"):
+        return spark.createDataFrame(
+            rows, f"op string, ts timestamp, user_id long, v string, w {w_type}"
+        ).select("op", "ts", F.lit("t").alias("ns"),
+                 F.struct("user_id", "v", "ts", "w").alias("data"))
+
+    t = lambda d: datetime(2024, 1, d)
+    target = str(tmp_path / "cdc")
+    sink = cdc_upsert_sink(spark, target, keys=["user_id"])
+    assert sink(_env(spark, [("insert", t(1), 1, "a"), ("insert", t(1), 2, "b")]), 0)
+    assert sink(wide([("update", t(2), 2, "b2", 1.5), ("insert", t(2), 3, "c", 2.5)]), 1)
+    want = [(1, "a", None), (2, "b2", 1.5), (3, "c", 2.5)]
+
+    def rows():
+        table = read_cdc_table(spark, target)
+        assert "w" in table.columns
+        return sorted((r.user_id, r.v, r.w) for r in table.collect())
+
+    assert rows() == want
+    assert compact_cdc_table(spark, target)
+    assert rows() == want
+
+    clash = str(tmp_path / "clash")
+    sink = cdc_upsert_sink(spark, clash, keys=["user_id"])
+    assert sink(wide([("insert", t(1), 1, "a", 1.5)]), 0)
+    assert sink(wide([("insert", t(2), 2, "b", "x")], w_type="string"), 1)
+    with pytest.raises(Exception, match="(?i)merg|incompatible|conflict"):
+        read_cdc_table(spark, clash).collect()
+
+
+def test_cdc_sink_refuses_other_keys_on_existing_state(spark, tmp_path):
+    """A sink pointed at a CDC state built under other keys or order
+    columns raises before it writes, instead of merging the old segments
+    under the new keys; the state is left as it was."""
+    from datetime import datetime
+
+    from transporter_spark.streaming.cdc import cdc_upsert_sink, read_cdc_table
+    from transporter_spark.streaming.state import SegmentStore
+
+    t = datetime(2024, 1, 1)
+    target = str(tmp_path / "cdc")
+    assert cdc_upsert_sink(spark, target, keys=["user_id"])(
+        _env(spark, [("insert", t, 1, "a"), ("insert", t, 2, "a")]), 0
+    )
+    manifest = open(SegmentStore(target).manifest_path).read()
+    for kw in ({"keys": ["v"]}, {"keys": ["user_id"], "order_cols": ["v"]}):
+        with pytest.raises(ValueError, match="refusing an epoch"):
+            cdc_upsert_sink(spark, target, **kw)(_env(spark, [("insert", t, 3, "b")]), 1)
+    assert open(SegmentStore(target).manifest_path).read() == manifest
+    assert read_cdc_table(spark, target).count() == 2
+    # the same keys keep applying
+    assert cdc_upsert_sink(spark, target, keys=["user_id"])(
+        _env(spark, [("insert", t, 3, "b")]), 1
+    )
+
+
 def _centroids(spark, sf_dir):
     from transporter_spark.sources.files import read_table
 

@@ -19,6 +19,13 @@ here the pipeline spec is plain JSON handed to the same builder the
 Python API uses, so there is exactly one pipeline semantics. What IS
 kept verbatim is the textual `${FOO}` environment-variable substitution
 applied to the raw config before parsing (goja_builder.go:60-74).
+
+`run` executes the config with `Pipeline.run`, or with
+`Pipeline.run_stream` when it has a `"streaming": {"checkpoint": dir,
+"available_now": true}` block — so one config format covers copy, UDF
+and CDC tail sync (`jsonl_tail` source, `cdc` sink). The source and
+sink kinds, and the mode each runs in, come from the runner's two
+tables (`plans.pipeline.SOURCES` / `SINKS`), which `about` lists.
 """
 
 from __future__ import annotations
@@ -29,12 +36,9 @@ import re
 import sys
 from typing import List, Optional
 
-from transporter_spark.plans.pipeline import Pipeline
+from transporter_spark.plans.pipeline import SINKS, SOURCES, Pipeline
 
 _ENV_RE = re.compile(r"\$\{(\w+)\}")
-
-SOURCE_KINDS = ("dir", "parquet", "jsonl", "dataframe", "jdbc")
-SINK_KINDS = ("parquet", "jsonl", "console", "memory", "jdbc")
 
 SAMPLE_CONFIG = {
     "name": "sample",
@@ -128,17 +132,13 @@ def about(name: Optional[str] = None) -> dict:
         if name in OPERATORS:
             fac = OPERATORS[name]
             return {"operator": name, "doc": (fac.__doc__ or "").strip()}
-        if name in SOURCE_KINDS or name in SINK_KINDS:
-            roles = [
-                r
-                for r, kinds in (("source", SOURCE_KINDS), ("sink", SINK_KINDS))
-                if name in kinds
-            ]
+        roles = [r for r, kinds in (("source", SOURCES), ("sink", SINKS)) if name in kinds]
+        if roles:
             return {"adaptor": name, "roles": roles}
         return {"error": f"unknown adaptor/operator {name!r}"}
     return {
-        "sources": list(SOURCE_KINDS),
-        "sinks": list(SINK_KINDS),
+        "sources": list(SOURCES),
+        "sinks": list(SINKS),
         "operators": sorted(OPERATORS),
     }
 

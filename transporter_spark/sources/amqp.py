@@ -24,9 +24,11 @@ Queue discovery skips the broker's internal ``amq.*`` queues, the
 analog of the reference's ``system.*`` collection skip
 (adaptor/mongodb/reader.go:49-55).
 
-No AMQP client library ships in this container, so the broker channel
-is injectable: production wiring builds a pika channel (import-gated);
-tests drive the identical reader logic with an in-memory fake. The
+No AMQP client library is a dependency, so the broker channel is
+injectable and no ``readStream`` format is registered: a deployment
+constructs the reader with a channel implementing ``basic_get`` /
+``basic_ack`` (e.g. over pika); tests drive the identical reader logic
+with an in-memory fake. The
 offset/ack state machine — the part that can silently lose or
 double-ack messages — is what the tests pin.
 """
@@ -34,16 +36,12 @@ double-ack messages — is what the tests pin.
 from __future__ import annotations
 
 import json
-from typing import Callable, Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, Iterator, List, Sequence, Tuple
 
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StructType
-
-_SCHEMA = "op string, ts string, ns string, json string"
 
 
 class AmqpMessage:
@@ -147,51 +145,3 @@ class AmqpTailStreamReader(DataSourceStreamReader):
         for s in sorted(done):
             msg = self._buffer.pop(s)
             self.channel.basic_ack(msg.delivery_tag)
-
-
-class AmqpDataSource(DataSource):
-    """readStream.format("amqp_tail") — production wiring via pika.
-
-    Options: ``url`` (amqp://...), ``queues`` (comma-separated;
-    ``amq.*`` filtered out), ``ns_prefix``, ``max_per_batch``.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "amqp_tail"
-
-    def schema(self) -> str:
-        return _SCHEMA
-
-    def streamReader(self, schema: StructType) -> AmqpTailStreamReader:
-        try:
-            import pika  # type: ignore
-        except ImportError as e:  # pragma: no cover - no lib in container
-            raise RuntimeError(
-                "amqp_tail requires the 'pika' client library"
-            ) from e
-        params = pika.URLParameters(self.options["url"])
-        channel = _PikaChannel(pika.BlockingConnection(params).channel())
-        queues = [q.strip() for q in self.options.get("queues", "").split(",") if q.strip()]
-        return AmqpTailStreamReader(
-            queues,
-            channel,
-            ns_prefix=self.options.get("ns_prefix", ""),
-            max_per_batch=int(self.options.get("max_per_batch", 10000)),
-        )
-
-
-class _PikaChannel:  # pragma: no cover - requires live broker
-    """Adapter: the reader's minimal channel contract over pika."""
-
-    def __init__(self, ch):
-        self._ch = ch
-
-    def basic_get(self, queue: str) -> Optional[Tuple[int, bytes]]:
-        method, _props, body = self._ch.basic_get(queue, auto_ack=False)
-        if method is None:
-            return None
-        return (method.delivery_tag, body)
-
-    def basic_ack(self, delivery_tag: int) -> None:
-        self._ch.basic_ack(delivery_tag)

@@ -159,7 +159,6 @@ def _offset_key(offset: dict) -> Tuple[str, int, int]:
 
 
 from pyspark.sql.datasource import (  # noqa: E402 - narrative header first
-    DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -255,37 +254,3 @@ class BinlogTailStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         pass  # the binlog is the log; nothing buffered to forget
-
-
-class BinlogDataSource(DataSource):
-    """readStream.format("mysql_binlog") — format registration for the
-    binlog tail.
-
-    There is deliberately NO live wiring behind this format: the
-    recommended Spark production path for MySQL CDC is Debezium ->
-    Kafka -> ``readStream.format("kafka")`` (module header), and no
-    replication client ships in this container. Deployments that want
-    a direct tail implement the three-method client contract
-    documented on ``BinlogTailStreamReader`` (master_status /
-    events_between / columns — e.g. over the public
-    pymysqlreplication package) and construct the reader directly;
-    ``streamReader`` here raises with that guidance rather than
-    pretending options it does not read. The offset, resume, rotation,
-    and event-mapping semantics are fully exercised by the
-    recording-fake lifecycle tests (tests/test_connectors.py).
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "mysql_binlog"
-
-    def schema(self) -> str:
-        return "op string, ts string, ns string, json string"
-
-    def streamReader(self, schema) -> BinlogTailStreamReader:
-        raise RuntimeError(
-            "mysql_binlog has no built-in live wiring: tail via "
-            "Debezium->Kafka (readStream.format('kafka')), or build "
-            "BinlogTailStreamReader with a client implementing "
-            "master_status/events_between/columns"
-        )

@@ -16,10 +16,12 @@ Reference parity (adaptor/rethinkdb/reader.go):
       old_val only       -> Delete(old_val)
       error field        -> stream error
 
-No RethinkDB driver ships in this container, so the client is
-injectable exactly like the AMQP channel (sources/amqp.py): production
-wiring builds a ``rethinkdb`` driver session (import-gated); tests
-drive the identical scan/classify/buffer logic with an in-memory fake.
+No RethinkDB driver is a dependency, so the client is injectable
+exactly like the AMQP channel (sources/amqp.py) and no ``readStream``
+format is registered: a deployment constructs the reader with a client
+implementing ``table_list`` / ``table_docs`` / ``open_changefeeds`` /
+``next_change``; tests drive the identical scan/classify/buffer logic
+with an in-memory fake.
 The op-classification and scan→tail handoff are what the tests pin.
 
 The writer side (insert-replace buffering, ``_id``→``id`` rename) lives
@@ -33,13 +35,9 @@ import re
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StructType
-
-_SCHEMA = "op string, ts string, ns string, json string"
 
 
 class RethinkChangeError(RuntimeError):
@@ -93,16 +91,6 @@ def scan_rows(
                 table,
                 json.dumps(doc, sort_keys=True, default=str),
             )
-
-
-class RethinkChange:
-    """One buffered changefeed notification awaiting commit."""
-
-    __slots__ = ("table", "change")
-
-    def __init__(self, table: str, change: dict):
-        self.table = table
-        self.change = change
 
 
 class _Batch(InputPartition):
@@ -190,68 +178,3 @@ class RethinkChangefeedStreamReader(DataSourceStreamReader):
     def commit(self, end: dict) -> None:
         for s in [s for s in self._buffer if s < end["seq"]]:
             del self._buffer[s]
-
-
-class RethinkDataSource(DataSource):
-    """readStream.format("rethinkdb_tail") — production wiring via the
-    ``rethinkdb`` driver (import-gated; not present in this container).
-
-    Options: ``host``, ``port``, ``db``, ``ns`` (table regex),
-    ``initial_scan`` ("true"/"false"), ``max_per_batch``.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "rethinkdb_tail"
-
-    def schema(self) -> str:
-        return _SCHEMA
-
-    def streamReader(self, schema: StructType) -> RethinkChangefeedStreamReader:
-        try:
-            from rethinkdb import r  # type: ignore
-        except ImportError as e:  # pragma: no cover - no driver here
-            raise RuntimeError(
-                "rethinkdb_tail requires the 'rethinkdb' client library"
-            ) from e
-        client = _RethinkDriverClient(  # pragma: no cover - live DB only
-            r,
-            host=self.options.get("host", "localhost"),
-            port=int(self.options.get("port", 28015)),
-            db=self.options.get("db", "test"),
-        )
-        return RethinkChangefeedStreamReader(
-            client,
-            ns_pattern=self.options.get("ns", ".*"),
-            initial_scan=self.options.get("initial_scan", "true") == "true",
-            max_per_batch=int(self.options.get("max_per_batch", 10000)),
-        )
-
-
-class _RethinkDriverClient:  # pragma: no cover - requires live database
-    """The reader's minimal client contract over the real driver."""
-
-    def __init__(self, r, host: str, port: int, db: str):
-        self._r = r
-        self._db = db
-        self._conn = r.connect(host=host, port=port, db=db)
-        self._feeds = {}
-
-    def table_list(self) -> List[str]:
-        return list(self._r.db(self._db).table_list().run(self._conn))
-
-    def table_docs(self, name: str) -> Iterator[dict]:
-        return iter(self._r.db(self._db).table(name).run(self._conn))
-
-    def open_changefeeds(self, tables: Sequence[str]) -> None:
-        for t in tables:
-            self._feeds[t] = self._r.db(self._db).table(t).changes().run(self._conn)
-
-    def next_change(self) -> Optional[Tuple[str, dict]]:
-        for t, feed in self._feeds.items():
-            try:
-                change = next(feed)  # driver cursors support non-blocking iteration
-            except StopIteration:
-                continue
-            return (t, change)
-        return None

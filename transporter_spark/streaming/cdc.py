@@ -156,7 +156,9 @@ def cdc_upsert_sink(
     segment is the exact merge source.
 
     ``compact_every=N`` folds the log in the epoch slot whenever it
-    reaches N segments (state.drain_sink). The returned fn is a plain
+    reaches N segments (state.drain_sink). An epoch whose ``keys`` or
+    ``order_cols`` differ from the ones the state was built with raises
+    (``SegmentStore.check_meta``) before anything is written. The returned fn is a plain
     ``(batch, epoch_id)`` foreachBatch function; it returns whether the
     epoch applied.
     """
@@ -165,6 +167,11 @@ def cdc_upsert_sink(
     def apply(batch: DataFrame, epoch_id: int) -> bool:
         store = SegmentStore(table_path)
         meta = {"keys": list(keys), "order_cols": list(order_cols or [])}
+        store.check_meta(
+            meta,
+            "merging segments under other keys or order columns would "
+            "silently mix two tables; write to a new path",
+        )
 
         def build(b: DataFrame) -> dict:
             delta = apply_cdc_batch(None, b, keys, order_cols).withColumn(

@@ -147,7 +147,10 @@ class SegmentStore:
         ``schema_key`` names a meta entry holding the table's
         ``StructType.json()``; when the entry is set, the segments are
         read with it, which skips the job Spark otherwise runs to infer
-        the schema from a footer. Segments and schema come from one
+        the schema from a footer. A recorded None means the segments'
+        schemas diverged: they are read with ``mergeSchema``, so a
+        widened column survives (null where a segment lacks it) and a
+        type conflict raises. Segments and schema come from one
         manifest snapshot, so a concurrent commit cannot pair them
         wrongly."""
         m = self.manifest() or {}
@@ -155,9 +158,11 @@ class SegmentStore:
         if not segs:
             return None
         reader = spark.read
-        schema = m.get("meta", {}).get(schema_key) if schema_key else None
-        if schema is not None:
-            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        meta = m.get("meta", {})
+        if schema_key in meta and meta[schema_key] is None:
+            reader = reader.option("mergeSchema", "true")
+        elif schema_key in meta:
+            reader = reader.schema(StructType.fromJson(json.loads(meta[schema_key])))
         return reader.parquet(*[self.seg_path(s) for s in segs])
 
     # -- keyed tables ---------------------------------------------------
