@@ -20,85 +20,8 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001")
 
 
-# Deliberate grading order: the driver grades exactly the first 50
-# entries. Rotation rule (adopted round 4, VERDICT r3 item 3): new
-# queries and any query whose implementation or oracle changed since
-# its last green CORRECTNESS row take slots first; remaining slots go
-# to the STALEST greens. MOVES are exempt per the judge's explicit
-# r11 relaxation (VERDICT r11 item 5): a function relocated verbatim
-# (body hash unchanged, emitted oracle strings byte-identical) does
-# NOT count as changed.
-#
-# Round 14 window = 11 new + 3 changed-and-stale + 36 other stalest
-# (the two r8 spills, the 33 non-changed r9 queries, and the first
-# 1 of the r10 cohort) = 50. Max staleness after this round: r10
-# (the remaining 36-query r10 cohort,
-# skip_gt/skip_numeric_string/skip_eq at its head, heads r15, then
-# r11). VERDICT r13 items closed here:
-# - item 2: rethink_bulk_ops + amqp_publish_ops — the last two §2.2
-#   sink wire paths, graded byte-exact (the es_bulk_ops pattern);
-#   every sink row now has a driver-graded wire query or is the
-#   file sink.
-# - item 5: stream_ingest_dedup_2epoch_chain — the corpus augmented
-#   with a seeded A~B, B~C, A!~C triple (testdata is read-only, so
-#   the chain splices at the query layer on both sides); its 2-epoch
-#   kept SET differs from the batch closure by exactly {10^10}
-#   (pinned), making the cross-epoch kept-only index path
-#   set-discriminating. The original stream_ingest_dedup_2epoch/_3epoch
-#   are UNCHANGED (r13-green; their oracle builder gained
-#   chunk_source/head_ctes params with byte-identical defaults —
-#   pinned — so the r9 refactor exemption applies).
-# - item 6: stream_kmeans_refresh_2epoch — mini-batch k-means with
-#   per-epoch centroid refresh (recursive feedback), seeded-fold
-#   oracle, ZERO of 256 rows shared with the fixed-centroid oracle
-#   (pinned); and stream_symspell_index now drains 2 REAL
-#   c_custkey-ordered chunks (additive state, oracle unchanged) —
-#   the CHANGED slot (it was r9-stale anyway).
-# - item 7: stream_js_transform — the .js-file user transform under
-#   a real 2-chunk drain (a node round trip per Arrow batch per epoch).
-# - "missing" item 4 (otto underscore): the otto/transformer aliases
-#   now preload a minimal underscore-compatible shim (the reference
-#   auto-preloads underscore, function/ottojs/otto.go:48-212), graded
-#   end-to-end by otto_underscore_transform whose script calls
-#   _.has/_.pick/_.values/_.reduce/_.omit undeclared. The goja/js
-#   aliases keep the no-`_` reference behavior; py/goja/js
-#   registrations and executed bodies are untouched (py_transform's
-#   decorator list shrank by the two otto aliases, now registered to
-#   the new otto_transform factory — build_operator("py"/"js")
-#   resolves to the identical factory as before).
-# - NEW (late r14): pgdecode_parse_ops + binlog_map_ops +
-#   oplog_classify_ops — the SOURCE-side wire grades (VERDICT r13
-#   "missing" item 1's closable half): the REAL test_decoding
-#   parser, binlog rows-event mapper, and oplog entry classifier
-#   graded byte-exact over fixture streams derived from the events
-#   table (quoted idents, ''-escapes, nulls, coercions, the
-#   after-image rule, _colN backfill, the update RE-FETCH contract
-#   with the filter-merged find query embedded in the hash, ts
-#   seconds-half extraction, and every skip rule as row absence).
-#   They displace skip_eq/skip_regex/window_topn to the r15 queue.
-# - NEW (late r14, after the context reset): rethink_changes_ops +
-#   amqp_consume_ops — the LAST two §2.1 parse/classify contracts
-#   (rethinkdb copy-scan + changefeed old_val/new_val matrix with
-#   whole-table ns pruning and the barrier/error paths; rabbitmq
-#   decode matrix + the two-epoch ack-after-commit ledger with the
-#   amq.* skip and the bounded multi-micro-batch backlog drain).
-#   With these, EVERY §2.1 source row has a driver-graded wire
-#   query (the file source reads every oracle row already). They
-#   displace skip_gt/skip_numeric_string to the r15 queue head.
-#
-# "Changed" read strictly, per FUNCTION executed:
-# - stream_symspell_index, stream_bloom, stream_kmeans_update: their
-#   drains gained num_chunks/min_epochs and the queries now drain 2
-#   REAL chunks (the additive class — pure/idempotent/associative
-#   state, so the batch oracles grade the multi-epoch drains
-#   unchanged). All three were r9-stale and in the window anyway, so
-#   the upgrades cost no extra slots.
-# - stream_ingest_dedup / _2epoch / _3epoch / the curation
-#   compositions: emitted oracle strings verified byte-identical
-#   against a pre-edit snapshot of all 214 registered oracles
-#   (drifted: []), query fns untouched -> exempt (r9 rule).
+# The grading driver grades only the first 50 entries, in this order.
 _PRIORITY = [
-    # --- NEW round 14: must take a slot ---
     "rethink_bulk_ops",
     "amqp_publish_ops",
     "stream_ingest_dedup_2epoch_chain",
@@ -110,12 +33,8 @@ _PRIORITY = [
     "oplog_classify_ops",
     "rethink_changes_ops",
     "amqp_consume_ops",
-    # --- the 2 r8 spills (named as heading this queue since r13) ---
     "unpivot_long",
     "value_histogram",
-    # --- the FULL 36-query r9 cohort (stream_symspell_index,
-    # --- stream_kmeans_update, and stream_bloom are also the round's
-    # --- 3 changed queries — see the per-function block above) ---
     "pick",
     "omit",
     "opfilter",
@@ -152,13 +71,7 @@ _PRIORITY = [
     "bm25_select",
     "bm25_select_log2",
     "stream_bloom",
-    # --- the first 1 of the 37-query r10 cohort ---
     "rename",
-    # --- past the graded window: the remaining 36-query r10 cohort
-    # --- (skip_gt/skip_numeric_string/skip_eq at its head) heads
-    # --- r15, then r11,
-    # --- via the registry fallback.
-    # --- (scripts/stale_report.py --queue prints it.)
 ]
 
 

@@ -5,6 +5,9 @@ config parsing with the reference's textual ${FOO} env substitution
 from __future__ import annotations
 
 import json
+import os
+import threading
+import time
 
 import pytest
 
@@ -320,3 +323,125 @@ def test_cli_run_streaming_tail_sync(tmp_path, spark, monkeypatch, capsys):
     event = json.loads(capsys.readouterr().out)
     assert event["rows"] == {"cdc -> cdc[0]": 20}
     assert _cdc_rows(spark, str(tmp_path / "state")) == _lww(lines)
+
+
+def test_cli_state_compact_keeps_the_old_manifests_segments(
+    tmp_path, spark, monkeypatch, capsys
+):
+    """`state compact` on a state of two list tables folds both under
+    ONE commit: every segment the pre-compaction manifest names is
+    still on disk afterwards, for readers that still hold that
+    manifest (the one-commit retention of streaming/state.py), and the
+    read is unchanged."""
+    from transporter_spark.streaming.state import SegmentStore
+
+    target = str(tmp_path / "two")
+    store = SegmentStore(target)
+    for epoch in range(2):
+        batch = spark.createDataFrame([(epoch, f"v{epoch}")], "id long, v string")
+        assert store.append_epoch(
+            batch, epoch, lambda b: {"a": b, "b": b.select("id")}
+        )
+    named = [s for segs in store.manifest()["tables"].values() for s in segs]
+    assert len(named) == 4
+
+    def reads():
+        return {
+            t: sorted(map(tuple, store.read(spark, t).collect())) for t in ("a", "b")
+        }
+
+    before = reads()
+    monkeypatch.setattr("transporter_spark.cli._get_spark", lambda: spark)
+    assert main(["state", "compact", target]) == 0
+    assert "compacted" in capsys.readouterr().out
+    assert [s for s in named if not os.path.isdir(store.seg_path(s))] == []
+    assert [len(store.table_segments(t)) for t in ("a", "b")] == [1, 1]
+    assert reads() == before
+
+
+def _sync_config(tmp_path, sink_path):
+    """A one-file jsonl -> jsonl config in sync mode."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.jsonl").write_text(
+        "\n".join(json.dumps({"k": i}) for i in range(5)) + "\n"
+    )
+    cfg = {
+        "name": "sync",
+        "source": {"kind": "jsonl", "path": str(src), "ns": "rows"},
+        "steps": [{"save": {"kind": "jsonl", "path": str(sink_path)}}],
+        "streaming": {"checkpoint": str(tmp_path / "ckpt"), "available_now": False},
+    }
+    path = tmp_path / "pipeline.json"
+    path.write_text(json.dumps(cfg))
+    return str(path)
+
+
+def _main_in_thread(argv):
+    result = {}
+    thread = threading.Thread(
+        target=lambda: result.setdefault("rc", main(argv)), daemon=True
+    )
+    thread.start()
+    return thread, result
+
+
+def _stop_new_queries(spark, before):
+    for query in spark.streams.active:
+        if query.id not in before:
+            query.stop()
+
+
+def test_cli_run_sync_mode_stays_up_until_stopped(
+    tmp_path, spark, monkeypatch, capsys
+):
+    """`run` with `"available_now": false` prints the boot event and
+    keeps running while its queries run (they would die with the
+    process); once they are stopped it returns 0."""
+    out = tmp_path / "out"
+    path = _sync_config(tmp_path, out)
+    monkeypatch.setattr("transporter_spark.cli._get_spark", lambda: spark)
+    before = {q.id for q in spark.streams.active}
+    thread, result = _main_in_thread(["run", path])
+    try:
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            if out.is_dir() and any(n.startswith("e") for n in os.listdir(out)):
+                if spark.read.json(str(out)).count() == 5:
+                    break
+            time.sleep(0.5)
+        else:
+            pytest.fail("the sync-mode query wrote no rows")
+        time.sleep(1)
+        assert thread.is_alive()
+        lines = capsys.readouterr().out.splitlines()
+        assert [json.loads(line) for line in lines] == [
+            {"event": "boot", "pipeline": "sync", "queries": ["rows -> jsonl[0]"]}
+        ]
+    finally:
+        _stop_new_queries(spark, before)
+        thread.join(60)
+    assert not thread.is_alive()
+    assert result["rc"] == 0
+
+
+def test_cli_run_sync_mode_failed_query_exits_1(
+    tmp_path, spark, monkeypatch, capsys
+):
+    """A sync-mode query that fails ends `run` with 1 and its error on
+    stderr: here the sink path is a regular file, so the first epoch's
+    write fails."""
+    out = tmp_path / "out"
+    out.write_text("not a directory\n")
+    path = _sync_config(tmp_path, out)
+    monkeypatch.setattr("transporter_spark.cli._get_spark", lambda: spark)
+    before = {q.id for q in spark.streams.active}
+    thread, result = _main_in_thread(["run", path])
+    try:
+        thread.join(120)
+        assert not thread.is_alive()
+    finally:
+        _stop_new_queries(spark, before)
+        thread.join(60)
+    assert result["rc"] == 1
+    assert "rows -> jsonl[0]" in capsys.readouterr().err

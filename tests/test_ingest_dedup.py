@@ -14,7 +14,6 @@ from transporter_spark.streaming.ingest import (
     compact_ingest_state,
     drain_documents_dedup,
     ingest_dedup_batch,
-    ingest_last_epoch,
     read_ingest_corpus,
     read_ingest_fingerprints,
     read_ingest_index,
@@ -194,7 +193,7 @@ def test_state_commit_is_atomic_manifest(spark, sf_dir, tmp_path):
     ingest_dedup_batch(docs.limit(10), 0, state, threshold=0.5)
     store = SegmentStore(state)
     m = store.manifest()
-    assert m["epoch"] == 0 and ingest_last_epoch(state) == 0
+    assert m["epoch"] == 0 and SegmentStore(state).last_epoch() == 0
     assert set(m["tables"]) == {"docs", "index", "fps"}
     for t, segs in m["tables"].items():
         assert segs == [f"{t}-e0"]
@@ -307,7 +306,7 @@ def test_sink_scheduled_compaction_through_stream(spark, sf_dir, tmp_path):
     compacted = drain(str(tmp_path / "compacted"), compact_every=2)
     assert compacted == plain
     store = SegmentStore(str(tmp_path / "compacted"))
-    n_epochs = ingest_last_epoch(str(tmp_path / "compacted")) + 1
+    n_epochs = SegmentStore(str(tmp_path / "compacted")).last_epoch() + 1
     assert n_epochs >= 3
     # log folded at the schedule: far fewer than one segment per epoch
     assert len(store.table_segments("docs")) < n_epochs
@@ -342,7 +341,7 @@ def test_two_drains_same_checkpoint_continue_epochs(spark, sf_dir, tmp_path):
         dedup_ingest_sink(stream, state, checkpoint_dir=ckpt, threshold=0.2)
 
     drain()
-    e1 = ingest_last_epoch(state)
+    e1 = SegmentStore(state).last_epoch()
     n1 = read_ingest_corpus(spark, state).count()
     # new data lands; same checkpoint resumes and processes ONLY it
     novel = spark.createDataFrame(
@@ -352,7 +351,7 @@ def test_two_drains_same_checkpoint_continue_epochs(spark, sf_dir, tmp_path):
     )
     novel.coalesce(1).write.mode("append").parquet(src)
     drain()
-    assert ingest_last_epoch(state) > e1  # epochs continued forward
+    assert SegmentStore(state).last_epoch() > e1  # epochs continued forward
     corpus = read_ingest_corpus(spark, state)
     assert corpus.count() == n1 + 5
     assert corpus.groupBy("doc_id").count().filter("count > 1").count() == 0
@@ -392,7 +391,6 @@ def test_pre_filter_gates_docs_out_of_all_state(spark, tmp_path):
 
     from transporter_spark.streaming.ingest import (
         ingest_dedup_batch,
-        ingest_last_epoch,
         read_ingest_corpus,
         read_ingest_fingerprints,
         read_ingest_index,
@@ -423,7 +421,7 @@ def test_pre_filter_gates_docs_out_of_all_state(spark, tmp_path):
     # an all-gated epoch applies nothing and does not advance the marker
     e2 = spark.createDataFrame([(4, "tiny")], "doc_id long, text string")
     assert not ingest_dedup_batch(e2, 1, state, threshold=0.1, pre_filter=gate)
-    assert ingest_last_epoch(state) == 0
+    assert SegmentStore(state).last_epoch() == 0
 
     # later epochs still gate before dedup
     e3 = spark.createDataFrame(

@@ -57,19 +57,19 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     """Co-located join: orders and lineitem bucketed by orderkey join
     with ZERO Exchange operators — the layout replaces the shuffle.
     (The technique a recurring 100TB fact-to-fact join pays for once.)"""
-    from transporter_spark.operators.relational import write_bucketed
     from transporter_spark.sources.files import read_table as rt
+    from transporter_spark.sources.files import write_bucketed
 
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     orders = rt(spark, sf_dir, "orders")
     li = rt(spark, sf_dir, "lineitem")
     write_bucketed(
         orders.select("o_orderkey", "o_totalprice"), "b_orders",
-        ["o_orderkey"], num_buckets=8,
+        "o_orderkey", buckets=8,
     )
     write_bucketed(
         li.select("l_orderkey", "l_quantity"), "b_lineitem",
-        ["l_orderkey"], num_buckets=8,
+        "l_orderkey", buckets=8,
     )
     try:
         bo, bl = spark.table("b_orders"), spark.table("b_lineitem")

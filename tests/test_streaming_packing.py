@@ -12,7 +12,6 @@ import pytest
 from transporter_spark.streaming.packing import (
     compact_packing_state,
     pack_bins_batch,
-    packing_last_epoch,
     read_packed_bins,
 )
 from transporter_spark.streaming.state import SegmentStore
@@ -151,7 +150,7 @@ def test_replay_noop_and_meta_guard(spark, tmp_path):
     assert _rows(read_packed_bins(spark, state)) == before
     with pytest.raises(ValueError, match="seq_len"):
         pack_bins_batch(_frame(spark, _E1), 1, state, seq_len=32)
-    assert packing_last_epoch(state) == 0
+    assert SegmentStore(state).last_epoch() == 0
 
 
 def test_closed_history_is_append_only(spark, tmp_path):
@@ -213,7 +212,7 @@ def test_zero_token_docs_drop_and_negative_ids_raise(spark, tmp_path):
     assert not pack_bins_batch(
         _frame(spark, [("a", 1, 0)]), 0, state, seq_len=64
     )
-    assert packing_last_epoch(state) is None
+    assert SegmentStore(state).last_epoch() is None
     with pytest.raises(Exception, match="negative"):
         pack_bins_batch(
             _frame(spark, [("a", -5, 10)]), 0, state, seq_len=64

@@ -21,7 +21,6 @@ from transporter_spark.operators.text import (
 from transporter_spark.streaming.pretrain import (
     compact_pretrain_state,
     pretrain_batch,
-    pretrain_last_epoch,
     read_pretrain_packed,
 )
 from transporter_spark.streaming.state import SegmentStore
@@ -168,7 +167,7 @@ def test_epoch_replay_is_noop(spark, tmp_path):
     snap = _all_files(state)
     assert not pretrain_batch(_frame(spark, _DOCS[:4]), 0, state, **kw)
     assert _all_files(state) == snap
-    assert pretrain_last_epoch(state) == 0
+    assert SegmentStore(state).last_epoch() == 0
 
 
 def test_commit_io_is_append_only_for_packed_and_curated(spark, tmp_path):
@@ -257,7 +256,6 @@ def test_chunked_drain_with_compaction_equals_batch(spark, sf_dir, tmp_path):
     from transporter_spark.streaming.pretrain import (
         chunked_table_stream,
         pretrain_ingest_sink,
-        pretrain_last_epoch,
         read_pretrain_packed,
     )
 
@@ -278,7 +276,7 @@ def test_chunked_drain_with_compaction_equals_batch(spark, sf_dir, tmp_path):
         stream, state, merges=merges, vocab=vocab, seq_len=64,
         compact_every=2,
     )
-    assert pretrain_last_epoch(state) == 3
+    assert SegmentStore(state).last_epoch() == 3
     store = SegmentStore(state)
     # the fold actually ran: fewer live packed segments than epochs
     assert len(store.table_segments("packed")) < 4

@@ -23,7 +23,10 @@ applied to the raw config before parsing (goja_builder.go:60-74).
 `run` executes the config with `Pipeline.run`, or with
 `Pipeline.run_stream` when it has a `"streaming": {"checkpoint": dir,
 "available_now": true}` block — so one config format covers copy, UDF
-and CDC tail sync (`jsonl_tail` source, `cdc` sink). The source and
+and CDC tail sync (`jsonl_tail` source, `cdc` sink). With
+`"available_now": false` (sync mode) it prints the boot event and
+waits on the queries until they stop (exit 0) or one fails (exit 1,
+the error on stderr). The source and
 sink kinds, and the mode each runs in, come from the runner's two
 tables (`plans.pipeline.SOURCES` / `SINKS`), which `about` lists.
 """
@@ -168,8 +171,21 @@ def main(argv: Optional[List[str]] = None) -> int:
             )
         else:
             event = p.run(_get_spark())
-        if event.get("event") == "exit":
+        if event["event"] == "exit":
             print(json.dumps(event))
+            return 0
+        # sync mode: the queries run until stopped or failed, and die
+        # with this process, so wait on them here
+        handles = event["queries"]
+        print(json.dumps({**event, "queries": list(handles)}), flush=True)
+        from pyspark.errors import StreamingQueryException
+
+        for name, handle in handles.items():
+            try:
+                handle.awaitTermination()
+            except StreamingQueryException as e:
+                print(f"{name}: {e}", file=sys.stderr)
+                return 1
         return 0
 
     if cmd == "test":
@@ -324,11 +340,9 @@ def main(argv: Optional[List[str]] = None) -> int:
 
             folded = compact_span_index(spark, rest[1])
         else:
-            for t in manifest.get("tables", {}):
-                name = store.compact_table(spark, t)
-                if name is not None:
-                    store.commit(manifest["epoch"], tables={t: [name]})
-                    folded = True
+            # every list table folds under ONE commit: a commit per table
+            # would purge the previous table's replaced segments at once
+            folded = store.compact_tables_commit(spark, list(manifest.get("tables", {})))
             for t in manifest.get("keyed", {}):
                 folded = store.compact_keyed_commit(spark, t) or folded
         print("compacted" if folded else "already compact")

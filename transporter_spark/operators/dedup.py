@@ -1581,14 +1581,13 @@ _CC_DRIVER_MAX_EDGE_ROWS = 100_000
 # Relabel-expression bound for the driver path: mappings at or below it
 # ship as a literal map projection (no join, no broadcast exchange);
 # bigger ones take the broadcast join. Measured map-minus-join wall at
-# sf0.1 graph sizes (scripts/ab_r16.py cc_relabel_*, same-session
-# alternating full-query rebuilds, the single-parse expr form): 244
-# entries -0.53s, 1933 entries -0.12s per run — the map wins at every
-# measured size once the expression arrives as ONE parsed string (the
-# F.lit() form's 2n py4j round-trips, not the optimizer, were the
-# earlier "superlinear map cost": +1.58s at 1933). Bounded so the
-# parsed expression stays metadata-sized; above it the flat-cost
-# broadcast join is the safe form.
+# sf0.1 graph sizes (same-session alternating full-query rebuilds, the
+# single-parse expr form): 244 entries -0.53s, 1933 entries -0.12s per
+# run — the map wins at every measured size once the expression arrives
+# as ONE parsed string (the F.lit() form's 2n py4j round-trips, not the
+# optimizer, were the earlier "superlinear map cost": +1.58s at 1933).
+# Bounded so the parsed expression stays metadata-sized; above it the
+# flat-cost broadcast join is the safe form.
 _CC_LITERAL_MAP_MAX = 4096
 
 

@@ -9,7 +9,7 @@ aggregation pattern.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -58,37 +58,6 @@ def broadcast_dim_join(
     for dim, cond in dims:
         out = out.join(F.broadcast(dim), cond, how)
     return out
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 64,
-    sort_cols: Optional[Sequence[str]] = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by its join/agg
-    key — the standing fix for repeated shuffles at warehouse scale.
-
-    Two tables bucketed the same way (same columns, same bucket count)
-    equi-join WITHOUT either side shuffling — the hash partitioning is
-    baked into the file layout and Spark's planner proves the
-    distribution requirement is already met. Same for groupBy on the
-    bucket key. At 100TB this turns the recurring multi-TB exchange of
-    a daily fact-to-fact join into zero network bytes; the one-time
-    cost is the bucketed write's own shuffle.
-
-    Pair with `spark.sql.sources.bucketing.enabled=true` (default) and
-    read back via `spark.table(table)` — bucketing metadata lives in
-    the catalog, so `spark.read.parquet(path)` would NOT see it.
-    """
-    writer = df.write.format("parquet").mode(mode).bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
 
 
 def salted_join(

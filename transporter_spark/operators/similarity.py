@@ -167,7 +167,7 @@ def dot_expr(
       hot paths: the HOF fallback is a CodegenFallback child inside
       every CaseWhen, so the whole conditional is planned interpreted
       and the tree bloats — measured net LOSS on every query it
-      touched (see OPTIMIZATION_r15.md "dims unroll retraction").
+      touched.
     - strict=True: raise_error per row — the geometry-guard posture of
       `_pq_slices`/the sketch family. No HOF child anywhere in the
       tree, so whole-stage codegen compiles the unrolled sum. Callers
@@ -670,13 +670,13 @@ def pq_encode_rows(
     is identical — and every d2 is the same `_l2_fix_from` fixed-point
     over the same hoisted self-dots (_aa per slice, _bb per codebook
     entry) with the same HOF ab fold: bit-identical selections
-    (verified: scripts/ab_r15.py ivfpq_argmin_hof — identical result
-    sets at sf0.1, old vs new, plus DuckDB oracle sim green on all 8
-    PQ-family queries). Local timings read at parity (min 2.16s old
-    vs 1.98s new on ivfpq_refine_topk; the occasional 15s outlier was
-    observed on BOTH shapes — host scheduling, not the plan); the win
-    is structural and scales: one Exchange + one per-partition Sort
-    of the n*m*ksub candidate rows gone from every encode."""
+    (verified: identical result sets at sf0.1, old vs new, plus DuckDB
+    oracle sim green on all 8 PQ-family queries). Local timings read
+    at parity (min 2.16s old vs 1.98s new on ivfpq_refine_topk; the
+    occasional 15s outlier was observed on BOTH shapes — host
+    scheduling, not the plan); the win is structural and scales: one
+    Exchange + one per-partition Sort of the n*m*ksub candidate rows
+    gone from every encode."""
     carry = list(carry)
     # per-side self-dots hoisted out of the ksub-wide candidate loop
     # (r15): _aa once per (id, j) slice, _bb once per codebook entry;
@@ -915,14 +915,13 @@ def ivfpq_residual_index(
     res = res.repartition(spark.sparkContext.defaultParallelism)
     # encode_dims (r15 batch 6): strict-unrolled dots for the encode's
     # n x m x ksub candidate scoring — MEASURED NET LOSS, no caller
-    # passes it (scripts/ab_r15.py ivfpq_encode_unroll, same-session
-    # alternating pairs: HOF 2.40s vs strict unroll 3.05s on the full
-    # refine query). Even WITHOUT the retracted form's HOF fallback
-    # branch (here the ELSE is a raise_error, so whole-stage codegen
-    # does compile the 8-term sums), the codegen'd unroll is slower
-    # than the interpreted HOF aggregate at slice width — the r15
-    # retraction's conclusion holds unconditionally. Kept as
-    # documented plumbing so the A/B stays reproducible.
+    # passes it (same-session alternating pairs: HOF 2.40s vs strict
+    # unroll 3.05s on the full refine query). Even WITHOUT the retracted
+    # form's HOF fallback branch (here the ELSE is a raise_error, so
+    # whole-stage codegen does compile the 8-term sums), the codegen'd
+    # unroll is slower than the interpreted HOF aggregate at slice width
+    # — the r15 retraction's conclusion holds unconditionally. Kept as
+    # documented plumbing so the A/B can be repeated.
     return pq_encode_rows(
         res, codebooks, m, id_col=id_col, vec_col="rvec", carry=["cell"],
         dims=encode_dims if encode_dims is not None else dims,

@@ -307,7 +307,7 @@ class Pipeline:
                 writer = writer.trigger(availableNow=True)
             queries.append((name, writer.start()))
         if not available_now:
-            return {"event": "boot", "queries": dict(queries)}
+            return {"event": "boot", "pipeline": self.name, "queries": dict(queries)}
         metrics: Dict[str, int] = {}
         for name, q_handle in queries:
             q_handle.awaitTermination()

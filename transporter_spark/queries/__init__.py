@@ -9,10 +9,7 @@ registry diff); importing them here in the original section order
 preserves QUERIES registration order exactly. Every top-level name of
 every family module is re-exported below, so
 `from transporter_spark.queries import <anything>` keeps working for
-tests, bench.py, and __spark_entry__.py. Under the rotation rule,
-these moves do NOT count as "changed" (the judge's explicit r11
-relaxation: function body hashes and emitted oracle strings are
-unchanged)."""
+tests and __spark_entry__.py."""
 
 from __future__ import annotations
 

@@ -33,15 +33,14 @@ from transporter_spark.sources.files import read_table
 class Query(NamedTuple):
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]
-    headline: bool = False  # included in bench.py
 
 
 QUERIES: Dict[str, Query] = {}
 
 
-def q(name: str, oracle: Optional[str] = None, headline: bool = False):
+def q(name: str, oracle: Optional[str] = None):
     def deco(fn):
-        QUERIES[name] = Query(fn, oracle, headline)
+        QUERIES[name] = Query(fn, oracle)
         return fn
 
     return deco

@@ -279,7 +279,7 @@ def q_dedup_normalized(spark, sf_dir):
     return kept.select("doc_id", F.md5("ntext").alias("norm_hash"))
 
 
-@q("dedup_clusters", headline=True)
+@q("dedup_clusters")
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERING: LSH candidate pairs -> connected components
     -> canonical doc per cluster (xxhash64 fast path). Oracle = the

@@ -61,7 +61,6 @@ SELECT doc_id, md5(text) AS text_hash FROM (
   FROM corpus
 ) WHERE rn = 1
 """,
-    headline=True,
 )
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup by content hash, keep-smallest-id. The corpus is the
@@ -102,7 +101,6 @@ JOIN sizes sa ON id_a = sa.doc_id
 JOIN sizes sb ON id_b = sb.doc_id
 WHERE i * 1.0 / (sa.sz + sb.sz - i) >= 0.1
 """,
-    headline=True,
 )
 def q_ngram_jaccard(spark, sf_dir):
     """Exact word-3-gram Jaccard near-dup pairs (threshold 0.1) — the
@@ -114,7 +112,7 @@ def q_ngram_jaccard(spark, sf_dir):
     return jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.1)
 
 
-@q("minhash_lsh_pairs", headline=True)
+@q("minhash_lsh_pairs")
 def q_minhash_lsh(spark, sf_dir):
     """MinHash(64)+LSH(16 bands) candidate pairs verified by exact
     Jaccard >= 0.1 (xxhash64 fast path). The oracle (attached below) is
@@ -391,7 +389,6 @@ _INC_INDEX_CACHE: dict = {}
 @q(
     "incremental_dedup",
     oracle=None,  # generated below: full-corpus pipeline restricted to new-side pairs
-    headline=True,
 )
 def q_incremental_dedup(spark, sf_dir):
     """Ingest-batch dedup against a PERSISTED corpus band index — the
@@ -457,7 +454,6 @@ QUERIES["incremental_dedup"] = QUERIES["incremental_dedup"]._replace(
 
 @q(
     "incremental_dedup_exact",
-    headline=True,
     oracle="""
 WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
 new_batch AS (
@@ -1231,7 +1227,6 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
   FROM scored
 ) WHERE rank <= 5
 """,
-    headline=True,
 )
 def q_ann_topk(spark, sf_dir):
     """Brute-force cosine top-5 ANN baseline: broadcast the query set,
@@ -1888,7 +1883,6 @@ WHERE rank <= {k} ORDER BY query_id, rank
 @q(
     "ivfpq_refine_topk",
     oracle=_ivfpq_refine_oracle(),
-    headline=True,  # tracked from round 10 (tuned ANN operating point)
 )
 def q_ivfpq_refine_topk(spark, sf_dir):
     """The TUNED production ANN operating point (VERDICT r9 item 1) —
@@ -2047,7 +2041,7 @@ FROM lab WHERE rn = 1 ORDER BY vec_id
 """
 
 
-@q("semdedup_prune", oracle=_SEMDEDUP_ORACLE, headline=True)  # tracked from round 7
+@q("semdedup_prune", oracle=_SEMDEDUP_ORACLE)
 def q_semdedup_prune(spark, sf_dir):
     """SemDeDup-style embedding-cluster near-dedup (operators/
     similarity.py semdedup_prune; Abbas et al. 2023): assign every
@@ -2072,7 +2066,7 @@ def q_semdedup_prune(spark, sf_dir):
     )
     # NOT dims=64 (r15 re-measure): isolated A/B at 5 runs each reads
     # min 2.82s without the unrolled dot vs 3.70s with it — the HOF
-    # aggregate wins once measured alone; see OPTIMIZATION_r15.md
+    # aggregate wins once measured alone
     return semdedup_prune(
         emb, centroids, threshold=0.3, round_dp=8
     ).orderBy("vec_id")
@@ -2269,7 +2263,6 @@ SELECT doc_id,
                    (acc, x) -> (acc * 131 + x) % 2147483647) AS fingerprint
 FROM documents
 """,
-    headline=True,
 )
 def q_text_stats(spark, sf_dir):
     """Text analysis sweep: token/char counts, punctuation ratio, mean
@@ -2409,7 +2402,6 @@ FROM pcomp c JOIN ph ON ph.doc_id = c.id JOIN psized s ON s.doc_id = c.id
 @q(
     "image_phash_dedup",
     oracle=_image_phash_dedup_oracle(),
-    headline=True,  # tracked from round 9 (new-capability baseline)
 )
 def q_image_phash_dedup(spark, sf_dir):
     """Perceptual-hash image near-dedup, the full decision
@@ -2793,7 +2785,6 @@ ORDER BY doc_id
 @q(
     "video_phash_dedup_hd",
     oracle=_video_phash_dedup_hd_oracle(),
-    headline=True,  # r11: the realistic-entropy video benchmark point
 )
 def q_video_phash_dedup_hd(spark, sf_dir):
     """Frame-level video near-dedup on a REALISTIC-ENTROPY corpus

@@ -98,7 +98,6 @@ SELECT doc_id, n_tok, rank,
                  ELSE 7 - ((rank - 1) % 8) END AS BIGINT) AS shard
 FROM r ORDER BY rank
 """,
-    headline=True,
 )
 def q_balanced_shards(spark, sf_dir):
     """Token-balanced output sharding: snake-deal docs (by descending
@@ -174,7 +173,6 @@ SELECT doc_id, dsir_score, sel_rank FROM (
   FROM wts
 ) WHERE sel_rank <= 100 ORDER BY sel_rank
 """,
-    headline=True,
 )
 def q_dsir_select(spark, sf_dir):
     """DSIR-style data selection (hashed-n-gram importance resampling,
@@ -605,7 +603,7 @@ ORDER BY query_id, rk
 """
 
 
-@q("bm25_select", oracle=_bm25_oracle(), headline=False)
+@q("bm25_select", oracle=_bm25_oracle())
 def q_bm25_select(spark, sf_dir):
     """BM25 scored retrieval selection (operators/selection.py
     bm25_select; Robertson et al. Okapi, k1=1.2 b=0.75): top-10
@@ -639,7 +637,7 @@ def q_bm25_select(spark, sf_dir):
     ).orderBy("query_id", "rk")
 
 
-@q("bm25_select_log2", oracle=_bm25_oracle(idf="log2"), headline=False)
+@q("bm25_select_log2", oracle=_bm25_oracle(idf="log2"))
 def q_bm25_select_log2(spark, sf_dir):
     """BM25 with the OKAPI-FAITHFUL idf weighting (ADVICE r6):
     idf = piecewise-linear integer log2 of the RSJ ratio in millibits
@@ -702,7 +700,7 @@ ORDER BY d.doc_id
 """
 
 
-@q("classifier_quality_gate", oracle=_CLF_ORACLE, headline=False)
+@q("classifier_quality_gate", oracle=_CLF_ORACLE)
 def q_classifier_quality_gate(spark, sf_dir):
     """Model-based quality gate (operators/selection.py
     classifier_quality_gate) — the fasttext-classifier step a CCNet/
@@ -722,7 +720,7 @@ def q_classifier_quality_gate(spark, sf_dir):
     return classifier_quality_gate(docs).orderBy("doc_id")
 
 
-@q("lm_perplexity_gate", oracle=_LM_PPL_ORACLE, headline=True)
+@q("lm_perplexity_gate", oracle=_LM_PPL_ORACLE)
 def q_lm_perplexity_gate(spark, sf_dir):
     """CCNet-style perplexity filter (Wenzek et al. 2020): fit a bigram
     LM on the corpus, score every document, split each language into

@@ -616,7 +616,7 @@ FROM m ORDER BY doc_id
 )
 
 
-@q("gopher_quality_gate", oracle=_GOPHER_ORACLE, headline=True)
+@q("gopher_quality_gate", oracle=_GOPHER_ORACLE)
 def q_gopher_quality_gate(spark, sf_dir):
     """Rule-based quality gate (the Gopher filter set, Rae et al. 2021
     A1.1): word-count bounds, mean-word-length band, symbol ratio,
@@ -802,7 +802,6 @@ def q_domain_upsample(spark, sf_dir):
 
 @q(
     "semantic_decontaminate",
-    headline=True,
     oracle="""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 b AS (SELECT vec_id, e FROM v WHERE vec_id % 10 = 0),
@@ -871,7 +870,7 @@ ORDER BY dd.doc_id
 )
 
 
-@q("curation_pipeline", oracle=_CURATION_ORACLE, headline=True)
+@q("curation_pipeline", oracle=_CURATION_ORACLE)
 def q_curation_pipeline(spark, sf_dir):
     """The round-5 operators composed end-to-end, the way a pretraining
     corpus is actually curated: Gopher rule gate (pure scan filter) ->

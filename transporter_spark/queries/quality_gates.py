@@ -41,7 +41,6 @@ def _pii_input_sql() -> str:
 
 @q(
     "repeated_chunk_prune",
-    headline=True,  # tracked from round 4 (new-capability baseline)
     oracle="""
 WITH toks AS (
   SELECT doc_id, pos, ls[pos] AS tok,
@@ -118,7 +117,6 @@ FROM documents d LEFT JOIN rebuilt r USING (doc_id)
 
 @q(
     "repeated_span_prune",
-    headline=True,  # tracked from round 6 (new-capability baseline)
     oracle=_span_prune_oracle(10, 2),
 )
 def q_repeated_span_prune(spark, sf_dir):
@@ -203,7 +201,6 @@ def _curated_docs(docs):
 @q(
     "training_pipeline",
     oracle=None,  # composed below from the shared pattern table
-    headline=True,
 )
 def q_training_pipeline(spark, sf_dir):
     """The END-TO-END training-data pipeline as ONE declarative plan:
@@ -468,8 +465,7 @@ FROM documents d LEFT JOIN hits ON d.doc_id = hits.doc_id
     )
 
 
-@q("decontaminate_bloom", oracle=_decontaminate_bloom_oracle(),
-   headline=True)  # tracked from round 7 (new-capability baseline)
+@q("decontaminate_bloom", oracle=_decontaminate_bloom_oracle())
 def q_decontaminate_bloom(spark, sf_dir):
     """Decontamination through the Bloom PRE-FILTER scale path
     (operators/dedup.py decontaminate(bloom_prefilter=True) +

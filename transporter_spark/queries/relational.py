@@ -81,7 +81,6 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2000-09-02'
 GROUP BY l_returnflag, l_linestatus
 """,
-    headline=True,
 )
 def q_q1(spark, sf_dir):
     """TPC-H Q1-shaped pricing summary (flagship). Scale shape: single
@@ -120,7 +119,6 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
 ORDER BY revenue DESC, o_orderdate, l_orderkey
 LIMIT 10
 """,
-    headline=True,
 )
 def q_q3(spark, sf_dir):
     """TPC-H Q3-shaped join+agg+topN. Scale shape: customer filter first
@@ -162,7 +160,6 @@ JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY ROLLUP (r_name, n_name)
 """,
-    headline=True,
 )
 def q_join_rollup(spark, sf_dir):
     """Multi-way broadcast join + ROLLUP (grouping-set aggregation).
@@ -352,7 +349,6 @@ SELECT time_bucket(INTERVAL '1 hour', ts) AS win_start, event_type,
        COUNT(*) AS n, {_DSUM('value', 6)} AS sum_value
 FROM events GROUP BY 1, 2
 """,
-    headline=True,
 )
 def q_windowed_agg(spark, sf_dir):
     """Tumbling event-time window aggregation — capability the reference
@@ -429,7 +425,6 @@ WHERE c_custkey = o_custkey
   AND o_orderdate >= TIMESTAMP '1997-01-01'
 GROUP BY n_name
 """,
-    headline=True,
 )
 def q_q5_local_supplier(spark, sf_dir):
     """TPC-H Q5 shape: 6-way join, revenue by nation where customer and

@@ -50,7 +50,6 @@ FROM hest ORDER BY {by_name}"""
 @q(
     "hll_distinct",
     oracle=_hll_oracle("user_id", "event_type", "event_type", "events"),
-    headline=True,
 )
 def q_hll_distinct(spark, sf_dir):
     """Distinct users per event type via a HyperLogLog register sketch
@@ -77,7 +76,6 @@ def q_hll_distinct(spark, sf_dir):
 @q(
     "hll_merge_shards",
     oracle=_hll_oracle("event_id", "event_type", "event_type", "events"),
-    headline=False,
 )
 def q_hll_merge_shards(spark, sf_dir):
     """Shard-parallel sketch merge: build INDEPENDENT register tables
@@ -106,7 +104,7 @@ def q_hll_merge_shards(spark, sf_dir):
     return hll_estimate(merged, by=["event_type"]).orderBy("event_type")
 
 
-@q("stream_hll_distinct", oracle=None, headline=False)
+@q("stream_hll_distinct", oracle=None)
 def q_stream_hll_distinct(spark, sf_dir):
     """CONTINUOUS distinct-count maintenance (streaming/sketches.py):
     the events stream drains through a foreachBatch sink that sketches
@@ -140,7 +138,7 @@ ORDER BY est DESC, user_id LIMIT 20"""
     )
 
 
-@q("cms_topk_users", oracle=_cms_oracle(), headline=False)
+@q("cms_topk_users", oracle=_cms_oracle())
 def q_cms_topk_users(spark, sf_dir):
     """Heavy hitters from a Count-Min sketch (operators/sketches.py;
     Cormode & Muthukrishnan 2005): estimate every user's event count
@@ -173,7 +171,7 @@ ORDER BY event_type, q"""
     )
 
 
-@q("ddsketch_quantiles", oracle=_dd_oracle(), headline=True)
+@q("ddsketch_quantiles", oracle=_dd_oracle())
 def q_ddsketch_quantiles(spark, sf_dir):
     """Value quantiles (p25..p99) per event type from a mergeable
     log-binned sketch (operators/sketches.py; DDSketch-shaped, Masson
@@ -205,7 +203,7 @@ ORDER BY d.doc_id"""
     )
 
 
-@q("dd_quantile_gate", oracle=_dd_gate_oracle(), headline=False)
+@q("dd_quantile_gate", oracle=_dd_gate_oracle())
 def q_dd_quantile_gate(spark, sf_dir):
     """Per-language length gate thresholded by the QUANTILE SKETCH —
     the 100 TB path for `length_quantile_gate`: the exact gate's
@@ -263,7 +261,7 @@ def _sketch_profile_oracle() -> str:
     )
 
 
-@q("sketch_profile", oracle=_sketch_profile_oracle(), headline=False)
+@q("sketch_profile", oracle=_sketch_profile_oracle())
 def q_sketch_profile(spark, sf_dir):
     """Table profiling from the sketch family: distinct counts per
     column (HLL) and value quantiles (log-bin sketch) in a single
@@ -309,7 +307,7 @@ def q_sketch_profile(spark, sf_dir):
     )
 
 
-@q("stream_dd_quantiles", oracle=None, headline=False)
+@q("stream_dd_quantiles", oracle=None)
 def q_stream_dd_quantiles(spark, sf_dir):
     """CONTINUOUS quantile maintenance (streaming/sketches.py): the
     events stream drains through a foreachBatch sink that log-bins each
@@ -352,7 +350,7 @@ ORDER BY d.doc_id"""
     )
 
 
-@q("bloom_member", oracle=_bloom_oracle(), headline=False)
+@q("bloom_member", oracle=_bloom_oracle())
 def q_bloom_member(spark, sf_dir):
     """Bloom-filter membership probe (operators/sketches.py; Bloom
     1970) — the sketch family's membership member and the scale path
@@ -421,7 +419,7 @@ ORDER BY d.doc_id
 """
 
 
-@q("bloom_member_grouped", oracle=_bloom_grouped_oracle(), headline=False)
+@q("bloom_member_grouped", oracle=_bloom_grouped_oracle())
 def q_bloom_member_grouped(spark, sf_dir):
     """GROUPED Bloom membership — per-SOURCE blocklists in one word
     table, probed through the NON-BROADCAST regime (operators/
@@ -450,7 +448,7 @@ def q_bloom_member_grouped(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-@q("stream_bloom", oracle=None, headline=False)
+@q("stream_bloom", oracle=None)
 def q_stream_bloom(spark, sf_dir):
     """CONTINUOUS blocklist maintenance (streaming/sketches.py): the
     eval shard streams through a foreachBatch sink that Bloom-sketches
@@ -499,7 +497,7 @@ FROM dfs GROUP BY n_docs ORDER BY n_docs
 """
 
 
-@q("span_df_histogram", oracle=_SPAN_HIST_ORACLE, headline=False)
+@q("span_df_histogram", oracle=_SPAN_HIST_ORACLE)
 def q_span_df_histogram(spark, sf_dir):
     """The span family's STANDING INDEX, summarized: document
     frequency of every per-offset 10-token window hash
@@ -520,7 +518,7 @@ def q_span_df_histogram(spark, sf_dir):
     )
 
 
-@q("stream_span_index", oracle=None, headline=False)
+@q("stream_span_index", oracle=None)
 def q_stream_span_index(spark, sf_dir):
     """CONTINUOUS span-index maintenance (streaming/spans.py): the
     documents stream drains through a foreachBatch sink that windows
@@ -552,7 +550,6 @@ QUERIES["stream_span_index"] = QUERIES["stream_span_index"]._replace(
     "incremental_span_prune",
     oracle=QUERIES["repeated_span_prune"].oracle.rstrip()
     + "\nWHERE d.doc_id % 5 = 0\n",
-    headline=False,
 )
 def q_incremental_span_prune(spark, sf_dir):
     """INCREMENTAL unaligned substring dedup (operators/text.py
@@ -652,7 +649,6 @@ FROM documents d LEFT JOIN rebuilt r USING (doc_id)
 @q(
     "stream_span_prune",
     oracle=_stream_span_prune_oracle(10, 2, 4),
-    headline=False,
 )
 def q_stream_span_prune(spark, sf_dir):
     """CONTINUOUS unaligned substring dedup, the full loop

@@ -33,7 +33,6 @@ WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase
 SELECT l.event_id, l.user_id, l.ts, r.signup_value
 FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
 """,
-    headline=True,
 )
 def q_asof_join(spark, sf_dir):
     """As-of join (custom operator Spark lacks): each purchase gets the

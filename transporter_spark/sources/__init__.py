@@ -6,7 +6,7 @@ per-value casify, row at a time. Spark-side, batch scans are
 and tail/CDC scans are Structured Streaming sources (``streaming``).
 """
 
-from transporter_spark.sources.files import read_table, load_tables, TABLES
+from transporter_spark.sources.files import read_table, TABLES
 from transporter_spark.sources.catalog import expand_namespaces
 
-__all__ = ["read_table", "load_tables", "TABLES", "expand_namespaces"]
+__all__ = ["read_table", "TABLES", "expand_namespaces"]

@@ -9,7 +9,7 @@ reference — filters/projections push down into the scan.
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,24 +80,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in nanos_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
-
-
-def load_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    names: Optional[Iterable[str]] = None,
-    register_views: bool = False,
-) -> Dict[str, DataFrame]:
-    out = {}
-    for name in names or TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def write_bucketed(

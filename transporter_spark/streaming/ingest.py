@@ -275,11 +275,6 @@ def dedup_ingest_sink(
     )
 
 
-def ingest_last_epoch(state_dir: str) -> Optional[int]:
-    """Last applied epoch id (None before the first commit)."""
-    return SegmentStore(state_dir).last_epoch()
-
-
 def _read_required(spark: SparkSession, state_dir: str, table: str) -> DataFrame:
     df = SegmentStore(state_dir).read(spark, table)
     if df is None:

@@ -380,10 +380,6 @@ def pack_bins_ingest_sink(
     )
 
 
-def packing_last_epoch(state_dir: str) -> Optional[int]:
-    return SegmentStore(state_dir).last_epoch()
-
-
 def read_packed_bins(spark: SparkSession, state_dir: str) -> DataFrame:
     """The bin table as of the last commit: closed history plus the
     open bins rendered in the same shape — a single-epoch drain from

@@ -419,10 +419,6 @@ def pretrain_ingest_sink(
     )
 
 
-def pretrain_last_epoch(state_dir: str) -> Optional[int]:
-    return SegmentStore(state_dir).last_epoch()
-
-
 def read_pretrain_packed(spark: SparkSession, state_dir: str) -> DataFrame:
     """The training stream as of the last commit: every emitted FULL
     sequence plus each shard's current partial tail rendered as its
