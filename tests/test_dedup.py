@@ -207,10 +207,22 @@ def test_connected_components_driver_equals_loop(spark, monkeypatch):
     from transporter_spark.operators import dedup
 
     edges, vertices = _cc_graph(spark)
+    # a 10-vertex chain under a 2-round budget: both paths raise, with
+    # one message
+    chain = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
+    chain_ids = spark.createDataFrame([(i,) for i in range(10)], "id long")
+
+    def not_converged():
+        with pytest.raises(RuntimeError, match="did not converge") as err:
+            dedup.connected_components(chain, chain_ids, max_iter=2)
+        return str(err.value)
+
     driver = sorted(map(tuple, dedup.connected_components(edges, vertices).collect()))
+    driver_err = not_converged()
     monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGE_ROWS", -1)
     loop = sorted(map(tuple, dedup.connected_components(edges, vertices).collect()))
     assert driver == loop
+    assert not_converged() == driver_err
     comp = dict(driver)
     assert comp[25] == comp[20] == comp[0] == 0 and comp[32] == 30
     assert comp[41] == 40 and comp[52] == 50 and comp[61] == 61

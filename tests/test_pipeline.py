@@ -405,3 +405,105 @@ def test_dir_source_pattern_matching_nothing_raises(spark, sf_dir, tmp_path):
             run()
         assert list_dir_namespaces(sf_dir)[0] in str(err.value)
     assert not os.path.exists(tmp_path / "out")
+
+
+_ROWS = [(i, f"v{i}", i / 4) for i in range(12)]
+
+
+def _file_source(spark, root, fmt, shape):
+    """One file (beside a sibling of the same format that must not be
+    read) or a directory of part files; returns the source path."""
+    import json as _json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(path, rows):
+        if fmt == "parquet":
+            cols = dict(zip(("k", "v", "x"), map(list, zip(*rows))))
+            pq.write_table(pa.table(cols), path)
+        else:
+            with open(path, "w") as fh:
+                fh.writelines(_json.dumps(dict(zip(("k", "v", "x"), r))) + "\n" for r in rows)
+
+    ext = "parquet" if fmt == "parquet" else "jsonl"
+    root.mkdir()
+    if shape == "file":
+        write(root / f"sibling.{ext}", [(99, "no", 0.5)])
+        write(root / f"rows.{ext}", _ROWS)
+        return str(root / f"rows.{ext}")
+    if fmt == "parquet":
+        spark.createDataFrame(_ROWS, "k long, v string, x double").repartition(3).write.parquet(
+            str(root / "parts"))
+    else:
+        (root / "parts").mkdir()
+        write(root / "parts" / "a.jsonl", _ROWS[:5])
+        write(root / "parts" / "b.jsonl", _ROWS[5:])
+    return str(root / "parts")
+
+
+@pytest.mark.parametrize("mode", ["run", "run_stream"])
+@pytest.mark.parametrize("shape", ["file", "dir"])
+@pytest.mark.parametrize("kind", ["parquet", "jsonl"])
+def test_file_source_kinds_read_a_file_or_a_directory_in_both_modes(
+    spark, tmp_path, kind, shape, mode
+):
+    """A ``parquet`` / ``jsonl`` source path may be one file or a
+    directory, in ``run`` and ``run_stream`` alike: the sink holds the
+    rows and schema of a plain batch read of that path."""
+    fmt = "json" if kind == "jsonl" else "parquet"
+    src = _file_source(spark, tmp_path / "src", fmt, shape)
+    out = str(tmp_path / "out")
+    p = Pipeline("files").source(kind, path=src, ns="rows").save("parquet", path=out)
+    event = p.run(spark) if mode == "run" else p.run_stream(spark, str(tmp_path / "ckpt"))
+    assert event["rows"] == {"rows -> parquet[0]": len(_ROWS)}
+    want = spark.read.format(fmt).load(src)
+    got = spark.read.parquet(out)
+    assert got.dtypes == want.dtypes
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+@pytest.mark.parametrize("first", ["dir", "parquet"])
+def test_nanos_timestamps_read_alike_through_every_parquet_kind(spark, tmp_path, first):
+    """A parquet TIMESTAMP(NANOS) column reads as the same microsecond
+    timestamp through ``dir`` and ``parquet``, in ``run`` and
+    ``run_stream``, whichever kind reads first in a session where
+    ``spark.sql.legacy.parquet.nanosAsLong`` starts out false."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from transporter_spark.sources.files import _nanos_ts_columns
+
+    nanos = [1_704_067_200_000_000_000 + i * 1_000_001_001 for i in range(5)]
+    src = tmp_path / "src"
+    src.mkdir()
+    path = str(src / "ev.parquet")
+    pq.write_table(pa.table({"k": list(range(5)), "t": pa.array(nanos, pa.timestamp("ns"))}), path)
+    assert _nanos_ts_columns(path) == ["t"]
+    specs = {
+        "dir": {"path": str(src), "namespaces": "^ev$"},
+        "parquet": {"path": path, "ns": "ev"},
+    }
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(flag, None)
+    spark.conf.set(flag, "false")
+    got = {}
+    try:
+        for kind in sorted(specs, key=lambda k: k != first):
+            for mode in ("run", "run_stream"):
+                out = str(tmp_path / f"{kind}_{mode}")
+                p = Pipeline("nanos").source(kind, **specs[kind]).save("parquet", path=out)
+                if mode == "run":
+                    p.run(spark)
+                else:
+                    p.run_stream(spark, str(tmp_path / f"ckpt_{kind}"))
+                back = spark.read.parquet(out)
+                micros = back.select("k", F.unix_micros("t")).collect()
+                got[kind, mode] = (back.dtypes, sorted(map(tuple, micros)))
+    finally:
+        if before is None:
+            spark.conf.unset(flag)
+        else:
+            spark.conf.set(flag, before)
+    want = ([("k", "bigint"), ("t", "timestamp")], [(i, n // 1000) for i, n in enumerate(nanos)])
+    assert got == {(k, m): want for k in specs for m in ("run", "run_stream")}

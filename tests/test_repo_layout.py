@@ -77,3 +77,25 @@ def test_patterns_catch_what_they_guard():
         "driver_sim.py",
         "probe_scale.py",
     ]
+
+
+def test_library_code_prints_nothing_to_stdout():
+    """Every ``print(`` in ``transporter_spark/`` outside the CLI names
+    its stream (``file=``): library code writes nothing to stdout."""
+    import ast
+
+    bare = []
+    for rel in SCANNED:
+        if not rel.startswith("transporter_spark") or rel.endswith("cli.py"):
+            continue
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        bare += [
+            f"{rel}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "print"
+            and not any(kw.arg == "file" for kw in node.keywords)
+        ]
+    assert bare == []

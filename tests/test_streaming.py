@@ -6,8 +6,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from transporter_spark.envelope import to_envelope
 from transporter_spark.streaming.cdc import apply_cdc_batch, latest_per_key, live_rows
-from transporter_spark.streaming.sources import stream_envelope, stream_table
+from transporter_spark.streaming.sources import stream_table
 from transporter_spark.streaming.windows import run_available_now, windowed_counts
 
 
@@ -76,7 +77,7 @@ def test_stream_drain_equals_batch(spark, sf_dir):
 
 
 def test_stream_envelope_shape(spark, sf_dir):
-    env = stream_envelope(spark, sf_dir, "events", ts_col="ts")
+    env = to_envelope(stream_table(spark, sf_dir, "events"), ns="events", ts_col="ts")
     assert env.isStreaming
     assert env.columns == ["op", "ts", "ns", "data"]
     out = run_available_now(env.filter(F.col("data.event_type") == "purchase"))

@@ -1417,8 +1417,11 @@ def connected_components(
 ) -> DataFrame:
     """Connected components by min-label propagation.
 
-    edges: (id_a, id_b) undirected; vertices: (id). Returns
-    (id, component) where component = min id reachable. Iterative —
+    edges: (id_a, id_b) undirected; vertices: (id). Every edge endpoint
+    must be a vertex id — under that precondition the driver-local path
+    (small edge sets) and the distributed loop give the same labels and
+    raise the same error. Returns (id, component) where component = min
+    id reachable. Iterative —
     each round every vertex adopts the min label among itself and its
     neighbors (one join + one aggregation); converges in O(graph
     diameter) rounds. The loop runs TWO rounds per Spark job (r15):
@@ -1591,6 +1594,16 @@ _CC_DRIVER_MAX_EDGE_ROWS = 100_000
 _CC_LITERAL_MAP_MAX = 4096
 
 
+def _cc_not_converged(max_iter: int) -> RuntimeError:
+    """The one non-convergence error of both CC paths (no label count:
+    the driver path never runs the rounds that would count them)."""
+    return RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds: "
+        f"the duplicate graph has a chain longer than max_iter hops — "
+        f"raise max_iter"
+    )
+
+
 def _cc_driver_components(
     sym: DataFrame, vertices: DataFrame, max_iter: int
 ) -> DataFrame:
@@ -1645,12 +1658,7 @@ def _cc_driver_components(
                     rounds_needed = dist[w]
                 dq.append(w)
     if max_iter <= rounds_needed:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({sum(1 for v in comp if comp[v] != v)} labels still "
-            f"changing): the duplicate graph has a chain longer than "
-            f"max_iter hops — raise max_iter"
-        )
+        raise _cc_not_converged(max_iter)
     spark = vertices.sparkSession
     id_type = vertices.schema["id"].dataType.simpleString()
     nontrivial = [(v, m) for v, m in comp.items() if v != m]
@@ -1752,11 +1760,7 @@ def _cc_loop(
         if changed == 0:
             break
     if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): the duplicate graph has a "
-            f"chain longer than max_iter hops — raise max_iter"
-        )
+        raise _cc_not_converged(max_iter)
     return labels
 
 

@@ -17,24 +17,17 @@ from __future__ import annotations
 import json
 import sys
 import time
-from typing import Callable, List, Optional
+from typing import List
 
 from pyspark.sql import SparkSession
 
 
 class MetricsEmitter:
     """Collects pipeline metric events and emits them as JSON lines
-    (the log-emitter analog, events/emitter.go:36-77). An `http_post`
-    callable can be supplied for the HTTP emitter analog
-    (events/emitter.go:79-150) — not wired to any network by default."""
+    (the log-emitter analog, events/emitter.go:36-77)."""
 
-    def __init__(
-        self,
-        sink=sys.stderr,
-        http_post: Optional[Callable[[dict], None]] = None,
-    ):
+    def __init__(self, sink=sys.stderr):
         self.sink = sink
-        self.http_post = http_post
         self.events: List[dict] = []
 
     def emit(self, kind: str, **payload) -> dict:
@@ -43,8 +36,6 @@ class MetricsEmitter:
         line = json.dumps(event, default=str)
         if self.sink is not None:
             print(line, file=self.sink)
-        if self.http_post is not None:
-            self.http_post(event)
         return event
 
     # reference event vocabulary (events/events.go:44-138)

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from transporter_spark.envelope import from_envelope, to_envelope
 from transporter_spark.registry import build_operator
 from transporter_spark.sources.catalog import expand_namespaces, list_dir_namespaces
-from transporter_spark.sources.files import read_table
+from transporter_spark.sources.files import read_files, read_table
 
 Reader = Callable[[SparkSession, dict], Dict[str, DataFrame]]
 
@@ -87,20 +87,15 @@ def _dir(stream: bool) -> Reader:
     return read
 
 
-def _files(fmt: str) -> Tuple[Reader, Reader]:
-    """(batch, stream) readers of one parquet/json path. A stream needs
-    its schema up front: the spec's ``schema``, else a batch peek."""
+def _file(fmt: str, stream: bool) -> Reader:
+    """The reader of a ``parquet`` / ``jsonl`` spec: one file or a
+    directory of files, with the spec's ``schema`` if it has one."""
 
-    def batch(spark: SparkSession, cfg: dict) -> Dict[str, DataFrame]:
-        reader = spark.read.schema(cfg["schema"]) if "schema" in cfg else spark.read
-        return _env(cfg.get("ns", cfg["path"]), reader.format(fmt).load(cfg["path"]))
-
-    def stream(spark: SparkSession, cfg: dict) -> Dict[str, DataFrame]:
-        schema = cfg.get("schema") or spark.read.format(fmt).load(cfg["path"]).schema
-        df = spark.readStream.schema(schema).format(fmt).load(cfg["path"])
+    def read(spark: SparkSession, cfg: dict) -> Dict[str, DataFrame]:
+        df = read_files(spark, fmt, cfg["path"], cfg.get("schema"), stream)
         return _env(cfg.get("ns", cfg["path"]), df)
 
-    return batch, stream
+    return read
 
 
 def _read_jdbc(spark: SparkSession, cfg: dict) -> Dict[str, DataFrame]:
@@ -136,8 +131,8 @@ def _stream_jsonl_tail(spark: SparkSession, cfg: dict) -> Dict[str, DataFrame]:
 # kind -> (batch reader, stream reader); None = the kind lacks that mode
 SOURCES: Dict[str, Tuple[Optional[Reader], Optional[Reader]]] = {
     "dir": (_dir(False), _dir(True)),
-    "parquet": _files("parquet"),
-    "jsonl": _files("json"),
+    "parquet": (_file("parquet", False), _file("parquet", True)),
+    "jsonl": (_file("json", False), _file("json", True)),
     "dataframe": (lambda spark, cfg: _env(cfg.get("ns", "df"), cfg["df"]), None),
     "jdbc": (_read_jdbc, None),
     "jsonl_tail": (None, _stream_jsonl_tail),
@@ -189,7 +184,7 @@ def write_edge(
     """Write one edge's envelope frame to its sink: the whole frame in a
     batch run (``epoch_id`` None), one micro-batch under foreachBatch in
     a stream run. ``cdc`` consumes the envelope itself; every other kind
-    writes the unwrapped payload unless ``unwrap=False``."""
+    writes the unwrapped payload."""
     kind, cfg = edge.kind, edge.config
     if kind == "cdc":
         from transporter_spark.streaming.cdc import cdc_upsert_sink
@@ -198,7 +193,7 @@ def write_edge(
                                cfg.get("order_cols"), cfg.get("compact_every"))
         sink(df, epoch_id)
         return
-    out = from_envelope(df) if cfg.get("unwrap", True) and "data" in df.columns else df
+    out = from_envelope(df) if "data" in df.columns else df
     if kind in ("parquet", "jsonl"):
         writer = out.write.format("json" if kind == "jsonl" else "parquet")
         path = cfg["path"].format(ns=ns)

@@ -85,7 +85,6 @@ class JsonlTailStreamReader(DataSourceStreamReader):
         if not self.path:
             raise ValueError("jsonl_tail requires option 'path'")
         self.ns = options.get("ns", self.path)
-        self.default_op = options.get("op", "insert")
 
     def initialOffset(self) -> dict:
         return {"pos": 0}
@@ -113,7 +112,7 @@ class JsonlTailStreamReader(DataSourceStreamReader):
             except json.JSONDecodeError:
                 continue  # poison line: skip-and-advance (DESIGN.md:221-236)
             yield (
-                str(doc.get("op", self.default_op)),
+                str(doc.get("op", "insert")),
                 str(doc.get("ts", "")),
                 str(doc.get("ns", self.ns)),
                 json.dumps(doc.get("data", doc), sort_keys=True),

@@ -12,6 +12,8 @@ import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: the driver's synthetic star schema (TESTDATA.md)
 TABLES = (
@@ -32,7 +34,8 @@ def _nanos_ts_columns(path: str):
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark has no nanos
     timestamp type, so these are read as long (nanosAsLong) and converted
     to microsecond timestamps. Metadata-only peek, no data read; handles
-    both single-file and directory-style parquet."""
+    both single-file and directory-style parquet. A missing path has
+    none: the Spark read that follows raises its own error."""
     import pyarrow.parquet as pq
 
     probe = path
@@ -44,6 +47,8 @@ def _nanos_ts_columns(path: str):
         if not parts:
             return []
         probe = os.path.join(path, parts[0])
+    elif not os.path.isfile(path):
+        return []
     # Check the PARQUET (not arrow) schema: Spark-written INT96
     # timestamps also surface as timestamp[ns] in arrow, but Spark
     # reads INT96 natively — nanosAsLong only applies to INT64
@@ -62,24 +67,48 @@ def _nanos_ts_columns(path: str):
     return out
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table. Plain parquet scan — Catalyst handles
-    predicate pushdown / column pruning / partition sizing
-    (spark.sql.files.maxPartitionBytes) from here."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    nanos_cols = _nanos_ts_columns(path)
-    if not nanos_cols:
-        return spark.read.parquet(path)
-    # ns-precision parquet timestamps: read raw nanos, truncate to micros
-    # (matches DuckDB's ns->us truncation). Integer `div`, not `/` —
-    # epoch-nanos exceed 2^53 and would lose precision as double.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    from pyspark.sql import functions as F
+def read_files(
+    spark: SparkSession,
+    fmt: str,
+    path: str,
+    schema: Optional[str | StructType] = None,
+    stream: bool = False,
+) -> DataFrame:
+    """THE file reader: a batch read, or with ``stream`` a readStream,
+    of one file or a directory of files in ``fmt`` (``parquet``,
+    ``json``, any Spark file format).
 
+    A stream takes ``schema``, else the schema of a batch read of
+    ``path``. File-stream sources watch directories, so a file path
+    streams from its parent directory filtered to its name. Parquet
+    TIMESTAMP(NANOS) columns (found from the footer on the driver, no
+    Spark job) are read as long under
+    ``spark.sql.legacy.parquet.nanosAsLong`` — set for the session —
+    and truncated to microsecond timestamps (matches DuckDB's ns->us
+    truncation) in both modes. Integer ``div``, not ``/``: epoch-nanos
+    exceed 2^53 and would lose precision as double."""
+    nanos_cols = _nanos_ts_columns(path) if fmt == "parquet" else []
+    if nanos_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if stream and schema is None:
+        schema = spark.read.format(fmt).load(path).schema
+    reader = (spark.readStream if stream else spark.read).format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
+    if stream and os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    df = reader.load(path)
     for c in nanos_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one synthetic table (``<sf_dir>/<name>.parquet``). Plain
+    parquet scan — Catalyst handles predicate pushdown / column pruning
+    / partition sizing (spark.sql.files.maxPartitionBytes) from here."""
+    return read_files(spark, "parquet", os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def write_bucketed(

@@ -11,7 +11,7 @@ wins upsert), and (c) expose the event-time surface the reference
 never had (watermarks, tumbling/session windows).
 """
 
-from transporter_spark.streaming.sources import stream_table, stream_envelope
+from transporter_spark.streaming.sources import stream_table
 from transporter_spark.streaming.cdc import apply_cdc_batch, cdc_upsert_sink
 from transporter_spark.streaming.state import SegmentStore
 from transporter_spark.streaming.windows import (
@@ -21,7 +21,6 @@ from transporter_spark.streaming.windows import (
 
 __all__ = [
     "stream_table",
-    "stream_envelope",
     "apply_cdc_batch",
     "cdc_upsert_sink",
     "SegmentStore",

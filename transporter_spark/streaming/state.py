@@ -418,28 +418,15 @@ class SegmentStore:
             return len(set(keyed[table].values()))
         return len(m.get("tables", {}).get(table, []))
 
-    def compact_table(self, spark: SparkSession, table: str) -> Optional[str]:
-        """Merge a LIST table's segments into one (returns the new
-        segment name, or None when there is nothing to compact). The
-        caller commits; until then nothing changed. Content-preserving
-        by construction: the new segment is exactly the union read."""
-        segs = self.table_segments(table)
-        if len(segs) <= 1:
-            return None
-        df = self.read(spark, table)
-        name = self.fresh_name(f"{table}-compact{self.last_epoch()}")
-        df.write.mode("overwrite").parquet(self.seg_path(name))
-        return name
-
     def compact_tables_commit(
         self,
         spark: SparkSession,
         tables: Sequence[str],
         folds: Optional[dict] = None,
     ) -> bool:
-        """compact_table over each LIST table + ONE manifest commit —
-        the whole compaction for sinks whose state is a tuple of list
-        tables (ingest corpus/index/fps, ANN cells/ids, pHash
+        """Merge each LIST table's segments into one + ONE manifest
+        commit — the whole compaction for sinks whose state is a tuple
+        of list tables (ingest corpus/index/fps, ANN cells/ids, pHash
         fps/ph_ids, fuzzy vars/ids). The fold discipline
         (content-preserving union, atomic manifest swap, replaced
         segments retained until the NEXT commit for concurrent
@@ -452,54 +439,33 @@ class SegmentStore:
         same way, so SUM of the fold == SUM of the parts. Tables
         without a fold concatenate as-is. Returns False when there is
         no committed state or every table is already compact."""
-        manifest = self.manifest()
-        if manifest is None:
-            return False
         folds = folds or {}
         segs = {}
         for table in tables:
-            fold = folds.get(table)
-            if fold is None:
-                name = self.compact_table(spark, table)
-            elif len(self.table_segments(table)) <= 1:
-                name = None
-            else:
-                df = fold(self.read(spark, table))
-                name = self.fresh_name(
-                    f"{table}-compact{self.last_epoch()}"
-                )
-                df.write.mode("overwrite").parquet(self.seg_path(name))
-            if name is not None:
-                segs[table] = [name]
+            if len(self.table_segments(table)) <= 1:
+                continue
+            df = folds.get(table, lambda d: d)(self.read(spark, table))
+            name = self.fresh_name(f"{table}-compact{self.last_epoch()}")
+            df.write.mode("overwrite").parquet(self.seg_path(name))
+            segs[table] = [name]
         if not segs:
             return False
-        self.commit(int(manifest["epoch"]), tables=segs)
+        self.commit(self.last_epoch(), tables=segs)
         return True
 
-    def compact_keyed(self, spark: SparkSession, table: str) -> Optional[str]:
-        """Merge a KEYED table's current rows into one segment,
-        dropping stale rows for good. Returns the new segment name (all
-        keys remap to it), or None when already a single segment."""
-        if len(set(self.keyed_mapping(table).values())) <= 1:
-            return None
-        df = self.read_keyed(spark, table)
-        name = self.fresh_name(f"{table}-compact{self.last_epoch()}")
-        df.write.mode("overwrite").parquet(self.seg_path(name))
-        return name
-
     def compact_keyed_commit(self, spark: SparkSession, table: str) -> bool:
-        """compact_keyed + remap every key + manifest commit in one
-        step — the whole compaction for sinks whose state is a single
-        keyed table (rollup hours, kmeans cells, HLL groups). Returns
-        False when there is no committed state or it is already
-        compact."""
-        if self.manifest() is None:
+        """Merge a KEYED table's current rows into one segment (stale
+        rows dropped for good), remap every key to it and commit, in
+        one step — the whole compaction for sinks whose state is a
+        single keyed table (rollup hours, kmeans cells, HLL groups).
+        Returns False when there is no committed state or it is
+        already a single segment."""
+        mapping = self.keyed_mapping(table)
+        if len(set(mapping.values())) <= 1:
             return False
-        name = self.compact_keyed(spark, table)
-        if name is None:
-            return False
-        mapping = {k: name for k in self.keyed_mapping(table)}
-        self.commit(self.last_epoch(), keyed={table: mapping})
+        name = self.fresh_name(f"{table}-compact{self.last_epoch()}")
+        self.read_keyed(spark, table).write.mode("overwrite").parquet(self.seg_path(name))
+        self.commit(self.last_epoch(), keyed={table: {k: name for k in mapping}})
         return True
 
 

@@ -6,18 +6,16 @@ per-sink consumer offsets, `offset mark` to skip poison messages).
 Spark's equivalent internals are the streaming checkpoint directory;
 this module reads them for inspection, and `mark_offset` reproduces
 the poison-message escape hatch (DESIGN.md:221-236) by rewriting the
-latest offset file.
-
-Usage:
-    python -m transporter_spark.tools show /path/to/checkpoint
+latest offset file. The CLI verbs over it are `transporter xlog
+current|oldest|show` and `transporter offset list|show|mark|delete`
+(cli.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 
 def _read_hdfs_log(log_dir: str) -> Dict[int, dict]:
@@ -114,7 +112,7 @@ def delete_offset(
             f"{checkpoint_dir!r}"
         )
     offsets_dir = os.path.join(checkpoint_dir, "offsets")
-    has_offsets = os.path.exists(os.path.join(offsets_dir, str(batch)))
+    has_offsets = os.path.join(offsets_dir, str(batch)) in targets
     # the guard protects the OFFSETS log from holes, so it applies
     # only when this batch actually has an offsets entry (review r14:
     # existence is checked first so a missing batch gets the accurate
@@ -135,32 +133,7 @@ def delete_offset(
                 f"batch leaves a hole in the checkpoint log — pass "
                 f"--force to override"
             )
-    removed = []
-    for sub in ("offsets", "commits"):
-        path = os.path.join(checkpoint_dir, sub, str(batch))
-        if os.path.exists(path):
-            os.remove(path)
-            removed.append(path)
-    if not removed:
-        raise FileNotFoundError(
-            f"batch {batch} has no offsets or commit entry under "
-            f"{checkpoint_dir!r}"
-        )
-    return removed
+    for path in targets:
+        os.remove(path)  # raises if the file vanished since the check
+    return targets
 
-
-def main(argv: Optional[List[str]] = None) -> int:
-    argv = argv if argv is not None else sys.argv[1:]
-    if len(argv) < 2 or argv[0] not in ("show", "offsets"):
-        print("usage: python -m transporter_spark.tools show|offsets <checkpoint_dir>")
-        return 2
-    cmd, target = argv[0], argv[1]
-    if cmd == "show":
-        print(json.dumps(checkpoint_state(target), indent=2, default=str))
-    else:
-        print(json.dumps(list_offsets(target), indent=2, default=str))
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())
