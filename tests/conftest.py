@@ -60,3 +60,23 @@ def duck():
             )
     yield con
     con.close()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn`` and returns ``(its result, the number
+    of Spark jobs it started)``, counted by a job group of its own."""
+    import uuid
+
+    def run(fn):
+        sc = spark.sparkContext
+        gid = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, gid)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run

@@ -127,6 +127,39 @@ def test_jsonl_tail_datasource_streams_appends(spark, tmp_path):
     assert sorted(r.op for r in second) == ["delete", "insert", "insert"]
 
 
+def test_jsonl_tail_skips_json_lines_that_are_not_objects(spark, tmp_path):
+    """A line whose JSON is not an object (a number, an array, a string,
+    null) is a poison line like a non-JSON one: it is skipped, the good
+    lines around it arrive and the offset advances to the end of the
+    feed instead of the stream failing."""
+    import uuid
+
+    from transporter_spark.sources.datasource import JsonlTailDataSource
+
+    spark.dataSource.register(JsonlTailDataSource)
+    feed = tmp_path / "feed.jsonl"
+    good = lambda i: json.dumps({"op": "insert", "ns": "t", "data": {"id": i}})
+    feed.write_text(
+        "\n".join([good(1), "5", "[1,2]", good(2), '"x"', "null", good(3)]) + "\n"
+    )
+    name = "tail_" + uuid.uuid4().hex[:12]
+    q = (
+        spark.readStream.format("jsonl_tail")
+        .option("path", str(feed))
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = spark.table(name).collect()
+    assert sorted(json.loads(r.json)["id"] for r in rows) == [1, 2, 3]
+    offsets = (tmp_path / "ckpt" / "offsets" / "0").read_text().splitlines()
+    assert json.loads(offsets[-1])["pos"] == feed.stat().st_size
+
+
 def test_tail_offset_never_lands_mid_line(tmp_path):
     """latestOffset must end at the last complete newline: a producer
     caught mid-append would otherwise split a record across two

@@ -99,3 +99,19 @@ def test_library_code_prints_nothing_to_stdout():
             and not any(kw.arg == "file" for kw in node.keywords)
         ]
     assert bare == []
+
+
+def test_one_footer_opener_and_no_recorded_schema():
+    """Parquet footers are opened on the driver in one engine module,
+    ``sources/files.py`` (``parquet_footer``), and no engine code names
+    the retired ``schema_key`` store option: the segments' footers are
+    the one schema record."""
+    opener = re.compile(
+        r"^\s*(?:import|from) pyarrow\.parquet\b|^\s*from pyarrow import .*\bparquet\b",
+        re.M,
+    )
+    texts = dict(t for t in _texts() if t[0].startswith("transporter_spark"))
+    assert sorted(rel for rel, text in texts.items() if opener.search(text)) == [
+        os.path.join("transporter_spark", "sources", "files.py")
+    ]
+    assert [rel for rel, text in texts.items() if "schema_key" in text] == []

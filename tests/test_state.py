@@ -353,3 +353,191 @@ def test_append_epoch_empty_epoch_commits_nothing(spark, tmp_path):
     assert store.append_epoch(empty, 0, lambda b: built.append(b)) is False
     assert built == [] and store.manifest() is None
     assert _cache_is_empty(spark)
+
+
+# -- the footer schema rule -------------------------------------------------
+#
+# Every store read takes its schema from the segments' parquet footers
+# on the driver; segments that disagree, or lack Spark's footer key, are
+# read with mergeSchema.
+
+
+def _merged(spark, paths):
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
+
+
+def _same(got, want):
+    assert got.schema == want.schema
+    assert got.columns == want.columns
+    assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
+
+
+def _merged_keyed(spark, store, table):
+    """Spark's merged read of a keyed table's segments, each row kept
+    only from the segment its key is mapped to."""
+    from pyspark.sql import functions as F
+
+    from transporter_spark.streaming.state import SEG_KEY
+
+    mapping = store.keyed_mapping(table)
+    current = spark.createDataFrame(sorted(mapping.items()), "_k string, _s string")
+    paths = [store.seg_path(s) for s in sorted(set(mapping.values()))]
+    seg = F.regexp_extract(F.input_file_name(), r"/segments/([^/]+)/", 1)
+    on = (F.col(SEG_KEY) == F.col("_k")) & (F.col("_seg") == F.col("_s"))
+    return (
+        _merged(spark, paths)
+        .withColumn("_seg", seg)
+        .join(current, on, "left_semi")
+        .drop("_seg")
+    )
+
+
+def test_store_reads_equal_the_merged_read(spark, tmp_path):
+    """Differential: a list table (``append_epoch``, a folding
+    ``compact_tables_commit``, then a widened epoch), a keyed table
+    (``keyed_delta_merge`` remapping a key, ``compact_keyed_commit``)
+    and a CDC state (the sink, ``compact_cdc_table``) each read equal to
+    Spark's mergeSchema read of the same segments, in schema, column
+    order and rows, after every step."""
+    from pyspark.sql import functions as F
+
+    from transporter_spark.envelope import to_envelope
+    from transporter_spark.streaming.cdc import cdc_upsert_sink, compact_cdc_table
+    from transporter_spark.streaming.state import SEG_KEY
+
+    lst = SegmentStore(str(tmp_path / "list"))
+    check = lambda: _same(lst.read(spark, "t"), _merged(spark, lst.table_paths("t")))
+    frame = lambda rows, ddl="id long, n long": spark.createDataFrame(rows, ddl)
+    assert lst.append_epoch(frame([(1, 1), (2, 1)]), 0, lambda b: {"t": b})
+    assert lst.append_epoch(frame([(1, 2)]), 1, lambda b: {"t": b})
+    check()
+    fold = lambda d: d.groupBy("id").agg(F.sum("n").alias("n"))
+    assert lst.compact_tables_commit(spark, ["t"], folds={"t": fold})
+    check()
+    assert lst.append_epoch(frame([(3, 1)]), 2, lambda b: {"t": b})
+    check()
+    wide = frame([(4, 1, "w")], "id long, n long, extra string")
+    assert lst.append_epoch(wide, 3, lambda b: {"t": b})
+    check()
+    assert "extra" in lst.read(spark, "t").columns
+
+    keyed = SegmentStore(str(tmp_path / "keyed"))
+    check = lambda: _same(
+        keyed.read_keyed(spark, "k"), _merged_keyed(spark, keyed, "k")
+    )
+    partial = lambda rows: spark.createDataFrame(rows, "g long, n long").withColumn(
+        SEG_KEY, F.col("g").cast("string")
+    )
+    remerge = lambda prev, part: (
+        prev.unionByName(part).groupBy("g", SEG_KEY).agg(F.sum("n").alias("n"))
+        .select("g", "n", SEG_KEY)
+    )
+    for e, rows in enumerate([[(1, 1), (2, 1)], [(2, 5), (3, 1)]]):
+        assert keyed.keyed_delta_merge(spark, "k", partial(rows), remerge, e, "g")
+        check()
+    assert keyed.keyed_mapping("k") == {"1": "k-e0", "2": "k-e1", "3": "k-e1"}
+    assert keyed.compact_keyed_commit(spark, "k")
+    check()
+
+    cdc = str(tmp_path / "cdc")
+    store = SegmentStore(cdc)
+    check = lambda: _same(store.read(spark, "delta"), _merged(spark, store.table_paths("delta")))
+    sink = cdc_upsert_sink(spark, cdc, keys=["id"])
+    env = lambda i: to_envelope(
+        spark.createDataFrame(_epoch_rows(i), _ROW_SCHEMA),
+        ns="t", ts_col="ts", payload_cols=["id", "value"],
+    )
+    for e in (0, 1):
+        assert sink(env(e), e)
+        check()
+    assert compact_cdc_table(spark, cdc)
+    check()
+    assert sink(env(2), 2)
+    check()
+
+
+@pytest.mark.parametrize("wide_first", [False, True])
+def test_widened_list_epoch_keeps_its_column(spark, tmp_path, wide_first):
+    """An epoch that adds a column keeps it in the list table's read,
+    null for the other epoch's rows, whichever epoch came first."""
+    store = SegmentStore(str(tmp_path / "st"))
+    narrow = spark.createDataFrame([(1, "a")], "id long, s string")
+    wide = spark.createDataFrame([(2, "b", 7)], "id long, s string, extra long")
+    for e, f in enumerate([wide, narrow] if wide_first else [narrow, wide]):
+        assert store.append_epoch(f, e, lambda b: {"t": b})
+    got = store.read(spark, "t")
+    assert sorted(got.columns) == ["extra", "id", "s"]
+    assert sorted((r.id, r.s, r.extra) for r in got.collect()) == [
+        (1, "a", None), (2, "b", 7)
+    ]
+
+
+def test_type_conflict_between_segments_raises_at_read(spark, tmp_path):
+    """Two epochs that wrote one column with two types: the read
+    raises, before any action, instead of planning with one footer's
+    type."""
+    store = SegmentStore(str(tmp_path / "st"))
+    assert store.append_epoch(
+        spark.createDataFrame([(1, 5)], "id long, x int"), 0, lambda b: {"t": b}
+    )
+    assert store.append_epoch(
+        spark.createDataFrame([(2, "y")], "id long, x string"), 1, lambda b: {"t": b}
+    )
+    with pytest.raises(Exception, match="(?i)merg|incompatible|conflict"):
+        store.read(spark, "t")
+
+
+def test_store_reads_start_no_spark_job(spark, tmp_path, jobs_of):
+    """A list read of 4 segments and a ``read_keyed`` of 3 segments plan
+    without a Spark job: the schema comes from the footers, read on the
+    driver. Segments that differ only in nullability (a literal column
+    is non-nullable when written) agree."""
+    from pyspark.sql import functions as F
+
+    from transporter_spark.streaming.state import SEG_KEY
+
+    store = SegmentStore(str(tmp_path / "st"))
+    spark.range(1).select(
+        F.lit(0).cast("long").alias("id"), F.lit("x").alias("v")
+    ).write.parquet(store.seg_path("t-e0"))
+    for e in (1, 2, 3):
+        _write(spark, store, f"t-e{e}", [(e, "x")])
+    for e in range(3):
+        spark.createDataFrame([(e, str(e))], f"g long, {SEG_KEY} string").write.parquet(
+            store.seg_path(f"k-e{e}")
+        )
+    store.commit(
+        3,
+        tables={"t": [f"t-e{e}" for e in range(4)]},
+        keyed={"k": {str(e): f"k-e{e}" for e in range(3)}},
+    )
+    table, jobs = jobs_of(lambda: store.read(spark, "t"))
+    assert jobs == 0
+    assert sorted(r.id for r in table.collect()) == [0, 1, 2, 3]
+    table, jobs = jobs_of(lambda: store.read_keyed(spark, "k"))
+    assert jobs == 0
+    assert sorted(r.g for r in table.collect()) == [0, 1, 2]
+
+
+def test_segment_without_footer_key_falls_back_to_merge(spark, tmp_path):
+    """A segment not written by Spark (here by pyarrow) carries no
+    Spark schema in its footer: the read merges the segments' schemas,
+    so its extra column survives, and equals Spark's merged read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from transporter_spark.sources.files import spark_schema
+
+    store = SegmentStore(str(tmp_path / "st"))
+    _write(spark, store, "t-e0", [(1, "a")])
+    os.makedirs(store.seg_path("t-e1"))
+    pq.write_table(
+        pa.table({"id": [2], "v": ["b"], "extra": [1.5]}),
+        os.path.join(store.seg_path("t-e1"), "part-00000.parquet"),
+    )
+    store.commit(1, tables={"t": ["t-e0", "t-e1"]})
+    assert spark_schema(store.seg_path("t-e0")) is not None
+    assert spark_schema(store.seg_path("t-e1")) is None
+    got = store.read(spark, "t")
+    _same(got, _merged(spark, store.table_paths("t")))
+    assert sorted((r.id, r.extra) for r in got.collect()) == [(1, None), (2, 1.5)]

@@ -161,7 +161,7 @@ def test_cdc_multi_epoch_apply(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
     from transporter_spark.envelope import to_envelope
     from transporter_spark.streaming.cdc import cdc_upsert_sink
-    from transporter_spark.streaming.windows import run_foreach_batch_available_now
+    from transporter_spark.streaming.state import run_foreach_batch_available_now
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     # nanos ts: normalize like read_table does
@@ -392,14 +392,15 @@ def test_cdc_sink_in_slot_compaction_bounds_segments(spark, tmp_path):
     }
 
 
-def test_cdc_read_with_recorded_schema_equals_inferred_read(spark, tmp_path):
-    """The sink records the delta's schema in the manifest meta and the
-    readers pass it to Spark (no schema-inference job). Differential:
-    over 3 epochs, a compaction and one more epoch, the given-schema
-    read equals the inferred read of the same segments (a copy of the
-    state whose manifest lacks ``schema``) in schema, column order and
-    rows. A later epoch with another schema records ``schema: None``
-    for good, and reads fall back to inference."""
+def test_cdc_read_with_recorded_schema_equals_inferred_read(spark, tmp_path, jobs_of):
+    """Each segment's parquet footer is the CDC state's schema record:
+    the readers take the schema from the footers and start no Spark
+    job. Differential: over 3 epochs, a compaction and one more epoch,
+    the read equals the read of a copy whose manifest still carries the
+    ``schema`` meta an older sink recorded (now ignored) and the
+    inferred read of the same segments, in schema, column order and
+    rows. After a widened epoch and a compaction, reads start no job
+    again."""
     import json
     import shutil
     from datetime import datetime
@@ -426,44 +427,83 @@ def test_cdc_read_with_recorded_schema_equals_inferred_read(spark, tmp_path):
         assert sink(_env(spark, epochs[e]), e)
     assert compact_cdc_table(spark, target)
     assert sink(_env(spark, epochs[3]), 3)
-    recorded = store.meta()["schema"]
-    assert recorded is not None
+    assert "schema" not in store.meta()
 
-    inferred = str(tmp_path / "inferred")
-    shutil.copytree(target, inferred)
-    m = json.load(open(SegmentStore(inferred).manifest_path))
-    del m["meta"]["schema"]  # a manifest written before the key existed
-    json.dump(m, open(SegmentStore(inferred).manifest_path, "w"))
+    # the manifest an older sink wrote: the delta's schema as meta
+    older = str(tmp_path / "older")
+    shutil.copytree(target, older)
+    m = json.load(open(SegmentStore(older).manifest_path))
+    m["meta"]["schema"] = (
+        apply_cdc_batch(None, _env(spark, epochs[3]), ["user_id"])
+        .withColumn("_epoch", F.lit(3)).schema.json()
+    )
+    json.dump(m, open(SegmentStore(older).manifest_path, "w"))
+
+    inferred = latest_per_key(
+        spark.read.parquet(*store.table_paths("delta")),
+        ["user_id"], ["_ts", "_epoch"],
+    )
+
+    def same(got, want):
+        assert got.schema == want.schema
+        assert got.columns == want.columns
+        assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
 
     for read in (read_cdc_state, read_cdc_table):
-        given, plain = read(spark, target), read(spark, inferred)
-        assert given.schema == plain.schema
-        assert given.columns == plain.columns
-        assert sorted(given.collect()) == sorted(plain.collect())
+        given, jobs = jobs_of(lambda: read(spark, target))
+        assert jobs == 0
+        same(given, read(spark, older))
+    same(read_cdc_state(spark, target), inferred)
     assert sorted(
         (r.user_id, r.v) for r in read_cdc_table(spark, target).collect()
     ) == [(1, "a4"), (3, "c2"), (4, "d")]
 
-    # an epoch on the schema-less state stays schema-less
-    assert cdc_upsert_sink(spark, inferred, keys=["user_id"])(
+    # an epoch on the older state applies and reads alike
+    assert cdc_upsert_sink(spark, older, keys=["user_id"])(
         _env(spark, [("insert", t(5), 5, "e")]), 4
     )
-    assert SegmentStore(inferred).meta()["schema"] is None
-    assert read_cdc_table(spark, inferred).count() == 4
+    assert read_cdc_table(spark, older).count() == 4
 
-    # a payload with another schema: recorded None for good
+    # a payload with another schema, then a fold to one schema: the
+    # read after the fold starts no job and keeps the new column
     wide = spark.createDataFrame(
         [("insert", t(5), 5, "e", 1.5)],
         "op string, ts timestamp, user_id long, v string, w double",
     ).select("op", "ts", F.lit("t").alias("ns"),
              F.struct("user_id", "v", "ts", "w").alias("data"))
     assert sink(wide, 4)
-    assert store.meta()["schema"] is None
     assert sink(_env(spark, [("insert", t(6), 6, "f")]), 5)
-    assert store.meta()["schema"] is None
-    assert {r.user_id for r in read_cdc_table(spark, target).collect()} == {
-        1, 3, 4, 5, 6
-    }
+    assert compact_cdc_table(spark, target)
+    table, jobs = jobs_of(lambda: read_cdc_table(spark, target))
+    assert jobs == 0
+    assert sorted((r.user_id, r.w) for r in table.collect()) == [
+        (1, None), (3, None), (4, None), (5, 1.5), (6, None)
+    ]
+
+
+def test_drains_remove_their_temp_checkpoints(spark, tmp_path, monkeypatch):
+    """``run_foreach_batch_available_now`` and ``run_available_now``
+    remove the temp checkpoint they create once the query ends (the
+    memory-sink result still reads); a given checkpoint stays."""
+    import tempfile
+
+    from transporter_spark.streaming.state import run_foreach_batch_available_now
+
+    src = tmp_path / "src"
+    spark.range(5).write.parquet(str(src))
+    temp_root = tmp_path / "tmp"
+    temp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp_root))
+    stream = lambda: spark.readStream.schema("id long").parquet(str(src))
+    left = lambda: sorted(p.name for p in temp_root.glob("ts_ckpt_*"))
+
+    assert run_foreach_batch_available_now(stream(), lambda b, e: True) == 1
+    assert left() == []
+    assert run_available_now(stream()).count() == 5
+    assert left() == []
+    kept = tmp_path / "kept"
+    assert run_available_now(stream(), checkpoint_dir=str(kept)).count() == 5
+    assert (kept / "offsets").is_dir()
 
 
 def test_cdc_widened_epoch_keeps_its_columns(spark, tmp_path):

@@ -80,7 +80,7 @@ def q_stream_cdc_apply(spark, sf_dir):
 
     from transporter_spark.streaming.cdc import cdc_upsert_sink, read_cdc_table
     from transporter_spark.streaming.sources import stream_table
-    from transporter_spark.streaming.windows import run_foreach_batch_available_now
+    from transporter_spark.streaming.state import run_foreach_batch_available_now
 
     ev = stream_table(spark, sf_dir, "events")
     op = (

@@ -110,6 +110,8 @@ class JsonlTailStreamReader(DataSourceStreamReader):
             try:
                 doc = json.loads(line)
             except json.JSONDecodeError:
+                doc = None
+            if not isinstance(doc, dict):
                 continue  # poison line: skip-and-advance (DESIGN.md:221-236)
             yield (
                 str(doc.get("op", "insert")),

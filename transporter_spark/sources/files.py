@@ -8,12 +8,17 @@ reference — filters/projections push down into the scan.
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+#: the footer key under which Spark's parquet writer stores the
+#: written rows' StructType as JSON
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 #: the driver's synthetic star schema (TESTDATA.md)
 TABLES = (
@@ -30,30 +35,61 @@ TABLES = (
 )
 
 
-def _nanos_ts_columns(path: str):
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark has no nanos
-    timestamp type, so these are read as long (nanosAsLong) and converted
-    to microsecond timestamps. Metadata-only peek, no data read; handles
-    both single-file and directory-style parquet. A missing path has
-    none: the Spark read that follows raises its own error."""
+def parquet_footer(path: str):
+    """The footer (``pyarrow.parquet.FileMetaData``) of a parquet file,
+    or of a directory's first part file in name order, read on the
+    driver: no Spark job, no data read. None when there is no such
+    file (the Spark read that follows raises its own error)."""
     import pyarrow.parquet as pq
 
-    probe = path
     if os.path.isdir(path):
         parts = sorted(
             f for f in os.listdir(path)
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
-        if not parts:
-            return []
-        probe = os.path.join(path, parts[0])
-    elif not os.path.isfile(path):
+        path = os.path.join(path, parts[0]) if parts else ""
+    return pq.read_metadata(path) if os.path.isfile(path) else None
+
+
+def spark_schema(path: str) -> Optional[StructType]:
+    """The schema a Spark read of ``path`` yields, from the StructType
+    Spark writes into every parquet footer it writes
+    (``parquet_footer``), with every field nullable as file-source
+    reads make it. None when the footer lacks Spark's key (a file not
+    written by Spark) or there is no part file."""
+    footer = parquet_footer(path)
+    raw = (footer.metadata or {}).get(SPARK_ROW_METADATA) if footer else None
+    return None if raw is None else _nullable(StructType.fromJson(json.loads(raw)))
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable
+    (Spark's ``asNullable``)."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
+
+
+def _nanos_ts_columns(path: str):
+    """Columns stored as parquet TIMESTAMP(NANOS) — Spark has no nanos
+    timestamp type, so these are read as long (nanosAsLong) and converted
+    to microsecond timestamps. Reads only the footer
+    (``parquet_footer``); handles both single-file and directory-style
+    parquet."""
+    footer = parquet_footer(path)
+    if footer is None:
         return []
     # Check the PARQUET (not arrow) schema: Spark-written INT96
     # timestamps also surface as timestamp[ns] in arrow, but Spark
     # reads INT96 natively — nanosAsLong only applies to INT64
     # TIMESTAMP(NANOS) columns, so only those may be converted.
-    schema = pq.ParquetFile(probe).schema
+    schema = footer.schema
     out = []
     for i in range(len(schema)):
         col = schema.column(i)

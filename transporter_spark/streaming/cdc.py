@@ -158,7 +158,11 @@ def cdc_upsert_sink(
     ``compact_every=N`` folds the log in the epoch slot whenever it
     reaches N segments (state.drain_sink). An epoch whose ``keys`` or
     ``order_cols`` differ from the ones the state was built with raises
-    (``SegmentStore.check_meta``) before anything is written. The returned fn is a plain
+    (``SegmentStore.check_meta``) before anything is written. The
+    manifest records no schema: each segment's parquet footer is its
+    schema record, so the readers take the schema from the footers
+    without a Spark job, and an epoch that widens the payload keeps its
+    new columns (``state.read_segments``). The returned fn is a plain
     ``(batch, epoch_id)`` foreachBatch function; it returns whether the
     epoch applied.
     """
@@ -177,8 +181,6 @@ def cdc_upsert_sink(
             delta = apply_cdc_batch(None, b, keys, order_cols).withColumn(
                 "_epoch", F.lit(int(epoch_id))
             )
-            # committed with keys/order_cols in the epoch's one commit
-            meta["schema"] = _recorded_schema(store, delta)
             return {"delta": delta}
 
         return store.append_epoch(batch, epoch_id, build, meta=meta)
@@ -195,19 +197,6 @@ def cdc_upsert_sink(
     )
 
 
-def _recorded_schema(store, delta: DataFrame) -> Optional[str]:
-    """The ``schema`` meta an epoch commits: the delta's schema (from
-    the lazy plan, no Spark job) while every epoch of the state has
-    written that same schema, else None for good — readers then infer
-    it from the footers. A state whose first epochs predate the key
-    never gets one."""
-    schema = delta.schema.json()
-    prev = store.meta()
-    if "schema" in prev:
-        return schema if prev["schema"] == schema else None
-    return None if store.table_segments("delta") else schema
-
-
 def read_cdc_state(spark: SparkSession, table_path: str) -> DataFrame:
     """Merge-on-read of the CDC segment log: newest row per key across
     all epoch segments, INCLUDING tombstones (the maintained-state
@@ -216,7 +205,7 @@ def read_cdc_state(spark: SparkSession, table_path: str) -> DataFrame:
 
     store = SegmentStore(table_path)
     meta = store.meta()
-    segs = store.read(spark, "delta", schema_key="schema")
+    segs = store.read(spark, "delta")
     if segs is None or "keys" not in meta:
         raise FileNotFoundError(
             f"no committed CDC state at {table_path!r}: the sink has "

@@ -50,6 +50,15 @@ the end, so every action of the epoch reads the source once
 returns the applied-epoch count. A family module keeps only its
 transform, its compactor and its readers.
 
+Each segment is its own schema record: Spark writes the rows'
+StructType into every parquet footer, and ``read_segments`` (behind
+``read`` and ``read_keyed``) reads it from each segment's first part
+file on the driver, so no read runs a schema-inference job. Segments
+that agree are read with that schema; otherwise (a widened epoch, a
+segment not written by Spark) with ``mergeSchema``, so a column some
+segments lack survives and a type conflict raises at the read. The
+manifest holds no schema.
+
 Single-writer by contract (one streaming query owns a state dir —
 Spark's own checkpoint guarantees this); readers are lock-free.
 On object stores swap the whole layout for Delta/Iceberg — the sink
@@ -62,11 +71,14 @@ import json
 import os
 import shutil
 import tempfile
+from contextlib import nullcontext
+from functools import reduce
 from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from transporter_spark.sources.files import spark_schema
 
 MANIFEST = "MANIFEST.json"
 SEGMENTS = "segments"
@@ -140,30 +152,11 @@ class SegmentStore:
     def table_paths(self, table: str) -> List[str]:
         return [self.seg_path(s) for s in self.table_segments(table)]
 
-    def read(
-        self, spark: SparkSession, table: str, schema_key: Optional[str] = None
-    ) -> Optional[DataFrame]:
-        """Union of a list table's live segments (None when absent).
-        ``schema_key`` names a meta entry holding the table's
-        ``StructType.json()``; when the entry is set, the segments are
-        read with it, which skips the job Spark otherwise runs to infer
-        the schema from a footer. A recorded None means the segments'
-        schemas diverged: they are read with ``mergeSchema``, so a
-        widened column survives (null where a segment lacks it) and a
-        type conflict raises. Segments and schema come from one
-        manifest snapshot, so a concurrent commit cannot pair them
-        wrongly."""
-        m = self.manifest() or {}
-        segs = m.get("tables", {}).get(table, [])
-        if not segs:
-            return None
-        reader = spark.read
-        meta = m.get("meta", {})
-        if schema_key in meta and meta[schema_key] is None:
-            reader = reader.option("mergeSchema", "true")
-        elif schema_key in meta:
-            reader = reader.schema(StructType.fromJson(json.loads(meta[schema_key])))
-        return reader.parquet(*[self.seg_path(s) for s in segs])
+    def read(self, spark: SparkSession, table: str) -> Optional[DataFrame]:
+        """Union of a list table's live segments (None when absent),
+        read by ``read_segments``."""
+        paths = self.table_paths(table)
+        return read_segments(spark, paths) if paths else None
 
     # -- keyed tables ---------------------------------------------------
     def keyed_mapping(self, table: str) -> Dict[str, str]:
@@ -192,20 +185,16 @@ class SegmentStore:
         """CURRENT rows for the requested keys (all keys when None).
         Each segment is filtered to the keys still mapped to it, so
         stale rows (keys remapped by a later delta-merge) never
-        surface. Retains the ``_seg_key`` column."""
+        surface. Each segment is read with its own footer schema
+        (``read_segments``). Retains the ``_seg_key`` column."""
         by_seg = self.keyed_paths(table, keys)
         if not by_seg:
             return None
         parts = [
-            spark.read.parquet(self.seg_path(seg)).filter(
-                F.col(SEG_KEY).isin(ks)
-            )
+            read_segments(spark, [self.seg_path(seg)]).filter(F.col(SEG_KEY).isin(ks))
             for seg, ks in sorted(by_seg.items())
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     # -- commit ---------------------------------------------------------
     def meta(self) -> dict:
@@ -469,6 +458,20 @@ class SegmentStore:
         return True
 
 
+def read_segments(spark: SparkSession, paths: Sequence[str]) -> DataFrame:
+    """Read segment dirs with the schema their own parquet footers
+    record (``sources.files.spark_schema``, read on the driver), so no
+    Spark job runs to infer it. When a segment's footer lacks the key,
+    or two segments disagree (nullability aside, which a file read
+    drops), the segments are read with ``mergeSchema``: a column some
+    segments lack survives, null there, and a type conflict raises
+    here, whatever the segment order."""
+    schemas = {spark_schema(p) for p in paths}
+    if len(schemas) == 1 and None not in schemas:
+        return spark.read.schema(schemas.pop()).parquet(*paths)
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
+
+
 def redelivery_guard(batch: DataFrame, seen: DataFrame, id_col: str) -> DataFrame:
     """Drop batch rows whose id is already accepted. At-least-once
     SOURCES can re-deliver earlier data in a LATER epoch (the epoch
@@ -529,22 +532,33 @@ def run_foreach_batch_available_now(
     applied (``append_epoch`` / ``keyed_delta_merge`` /
     ``epoch_sink``); the drain returns how many epochs of THIS run
     applied — non-empty, non-replayed ones, so a skipped-empty leading
-    batch never reads as an extra epoch (graded drains assert on it)."""
+    batch never reads as an extra epoch (graded drains assert on it).
+    Without ``checkpoint_dir`` it checkpoints to a temp dir removed
+    when the query ends (``drain_checkpoint``)."""
     applied = []
 
     def counted(batch: DataFrame, epoch_id: int) -> None:
         if batch_fn(batch, epoch_id):
             applied.append(epoch_id)
 
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ts_ckpt_")
-    q = (
-        stream_df.writeStream.foreachBatch(counted)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with drain_checkpoint(checkpoint_dir) as checkpoint:
+        q = (
+            stream_df.writeStream.foreachBatch(counted)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return len(applied)
+
+
+def drain_checkpoint(checkpoint_dir: Optional[str]):
+    """The checkpoint of an availableNow drain, as a context manager:
+    ``checkpoint_dir`` as given (a resume needs it), else a temp
+    ``ts_ckpt_*`` dir removed when the block exits."""
+    if checkpoint_dir:
+        return nullcontext(checkpoint_dir)
+    return tempfile.TemporaryDirectory(prefix="ts_ckpt_", ignore_cleanup_errors=True)
 
 
 def drain_sink(

@@ -6,18 +6,17 @@ message/message.go:62-66; no windows, no state — SURVEY §2.5 last row).
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from transporter_spark.streaming.state import (  # noqa: F401  (the drain's old import path)
+from transporter_spark.streaming.state import (
     SEG_KEY,
     SegmentStore,
+    drain_checkpoint,
     drain_sink,
-    run_foreach_batch_available_now,
 )
 
 
@@ -70,14 +69,18 @@ def run_available_now(
     stage regardless of data volume. Default: the cluster's core count
     (one state task per core) — at real scale pass an explicit number
     sized to state volume instead. Safe to set/restore around the run
-    because availableNow + awaitTermination is synchronous."""
+    because availableNow + awaitTermination is synchronous. Without
+    ``checkpoint_dir`` it checkpoints to a temp dir removed when the
+    query ends (``drain_checkpoint``)."""
     from transporter_spark.session import scoped_shuffle_partitions
 
     spark = stream_df.sparkSession
     name = "avail_" + uuid.uuid4().hex[:12]
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ts_ckpt_")
     parts = state_partitions or spark.sparkContext.defaultParallelism
-    with scoped_shuffle_partitions(spark, parts):
+    with (
+        drain_checkpoint(checkpoint_dir) as checkpoint,
+        scoped_shuffle_partitions(spark, parts),
+    ):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
